@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Fact assembly: SKEY resolution via multi-way broadcast left join
@@ -42,21 +41,6 @@ object Fact {
       .select(Seq(substring(col("DATETIME"), 1, 8).as("day"),
               col("DATETIME_SKEY"), col("PLATFORM_SKEY"), col("SITE_SKEY"),
               col("TITLE_SKEY")) ++ extras.map(col): _*)
-
-  /** Append-ready fact rows with `factid` continuing from `existingMax`,
-    * fully ordered — the deterministic, oracle-reproducible variant. The
-    * global row_number Window serializes the batch through one partition:
-    * fine for small batches and tests, NOT for the at-scale path
-    * ([[withFactIdsScalable]]). The reference's factid is `identity(0,1)`
-    * (`lambda_function_redishift.py:94`); same non-contractual-values policy
-    * as dim SKEYs (SURVEY §7.4 item 1). */
-  def withFactIds(resolved: DataFrame, existingMax: Long = 0L): DataFrame =
-    resolved.select(
-      ((row_number().over(Window.orderBy(col("DATETIME_SKEY"), col("PLATFORM_SKEY"),
-          col("SITE_SKEY"), col("TITLE_SKEY"))) + lit(existingMax))
-        .cast("long").as("factid") +:
-        resolved.columns.map(col)): _*
-    )
 
   /** Scale path for factid assignment: `zipWithIndex` computes contiguous
     * ids with one lightweight count job and NO single-partition bottleneck

@@ -45,10 +45,7 @@ object Incremental {
       : StreamingQuery = {
     val raw = spark.readStream
       .schema(rawSchema)
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\\")
-      .option("ignoreLeadingWhiteSpace", "true")
+      .options(Sources.CsvReadOptions)
       .csv(stageDir)
 
     val store = StarStore(spark, storeRoot)

@@ -1,8 +1,9 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end batch star build with atomic, incremental publish
   * (SURVEY §2 rows 8-10, 38; §7.4 item 4).
@@ -15,34 +16,42 @@ import org.apache.spark.sql.functions._
   * format (what Delta/Iceberg do at full scale):
   *
   * {{{
-  * <root>/facts/batch_<id>/*.parquet   append-only, immutable fact deltas
-  * <root>/versions/v<N>/dim_*/…        full (tiny) dim snapshots
-  * <root>/versions/v<N>/manifest.txt   maxFactId + fact batch list
-  * <root>/CURRENT                      pointer to the live version
+  * <root>/facts/batch_<id>/day=…/*.parquet  append-only, immutable fact deltas
+  * <root>/facts/_tmp_<id>_<nonce>/          a delta staged by one attempt
+  * <root>/versions/v<N>/dim_*/…             full (tiny) dim snapshots
+  * <root>/versions/v<N>/manifest.txt        maxFactId=, batches= (live
+  *                                          deltas), applied= (replay
+  *                                          history), factSchema= (DDL)
+  * <root>/versions/v<N>.claim               a writer's claim on name v<N>
+  * <root>/versions/_tmp_<id>_<nonce>/       a version staged by one attempt
+  * <root>/CURRENT                           pointer to the live version
   * }}}
+  *
+  * A version dir is COMMITTED exactly when its `manifest.txt` exists; any
+  * other `v<N>` dir is crash debris no reader resolves.
   *
   * Why this shape at 100 TB: a batch writes ONLY its fact delta (O(batch))
   * and rewrites the dims (tiny by construction) — the earlier design
   * rewrote the whole fact per batch, O(total), which caps out fast. Data
   * files are immutable and shared across versions; publish is one version-
   * dir rename + one CURRENT pointer swap, COMMITTED by an atomic
-  * create-if-absent claim on the version name (versions/v<N>.claim) so two
-  * concurrent writers serialize — the loser recomputes on the winner's
-  * version instead of clobbering it (optimistic concurrency, the
-  * Delta/Iceberg commit shape). A crash mid-batch leaves the live version
-  * untouched (at worst an orphan `facts/batch_*` dir that the next run of
-  * the same batch id overwrites); a crash between rename and pointer swap
-  * leaves a complete version the next writer repairs forward to. Replaying
-  * a batch id already in the manifest is a no-op — exactly-once on top of
-  * the file-source's at-least-once redelivery (SURVEY §2 row 37).
+  * create-if-absent claim on the version name so two concurrent writers
+  * serialize — the loser recomputes on the winner's version instead of
+  * clobbering it (optimistic concurrency, the Delta/Iceberg commit shape).
+  * A crash mid-batch leaves the live version untouched (at worst `_tmp_`
+  * staging the retention sweep reclaims by age); a crash between rename
+  * and pointer swap leaves a complete version the next writer repairs
+  * forward to. Replaying a batch id already in the manifest is a no-op —
+  * exactly-once on top of the file-source's at-least-once redelivery
+  * (SURVEY §2 row 37).
   *
   * Delta/staging tables (`*_dlt`, `staging`,
   * `lambda_function_redishift.py:57-69,87-91` + the 5 TRUNCATEs at
   * `:164-168`) have no persistent equivalent — per-batch DataFrames are
   * ephemeral by construction, the Spark-native restatement of "truncate
   * after merge".
-  */
-/** @param autoCompactAfter compact automatically when a publish leaves more
+  *
+  * @param autoCompactAfter compact automatically when a publish leaves more
   *                         than this many live fact-delta dirs (the union
   *                         plan and file listing grow linearly with them);
   *                         `Int.MaxValue` disables. Compaction preserves the
@@ -64,45 +73,69 @@ class StarStore(spark: SparkSession, root: String,
   private val fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  // ── version bookkeeping ──────────────────────────────────────────────────
+  private val currentPath = new Path(s"$root/CURRENT")
 
-  /** Live version, from CURRENT; falls back to the highest versions/v* dir
-    * (covers a crash in the tiny delete→rename window of the pointer swap). */
-  private def currentVersion: Option[String] = {
-    val cur = new Path(s"$root/CURRENT")
-    val fromPointer =
-      if (fs.exists(cur)) {
-        val in = fs.open(cur)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim).filter(_.nonEmpty)
-        finally in.close()
-      } else None
-    fromPointer.orElse {
-      val vdir = new Path(s"$root/versions")
-      if (!fs.exists(vdir)) None
-      else fs.listStatus(vdir).map(_.getPath.getName)
-        .filter(_.matches("v\\d+"))
-        // complete (manifest-bearing) dirs only — crash debris never wins
-        .filter(v => fs.exists(new Path(s"${versionDir(v)}/manifest.txt")))
-        .sorted.lastOption
-    }
-  }
-
-  def exists: Boolean = currentVersion.isDefined
+  // ── snapshot resolver ────────────────────────────────────────────────────
 
   private def versionDir(v: String) = s"$root/versions/$v"
 
+  private def manifestPath(dir: String) = new Path(s"$dir/manifest.txt")
+
+  /** THE committed test: a version exists once its manifest does. On an
+    * object store every call is one HEAD request. */
+  private def isCommitted(v: String): Boolean =
+    fs.exists(manifestPath(versionDir(v)))
+
+  /** One listing of versions/: the committed names, ascending, and the
+    * manifest-less `v<N>` dirs beside them (a crashed claimer's leftovers —
+    * never a version, so never counted toward retention or resolved). */
+  private def listVersions(): (Seq[String], Seq[FileStatus]) = {
+    val vdir = new Path(s"$root/versions")
+    val entries =
+      if (!fs.exists(vdir)) Seq.empty
+      else fs.listStatus(vdir).toSeq.filter(_.getPath.getName.matches("v\\d+"))
+    val (committed, debris) =
+      entries.partition(st => isCommitted(st.getPath.getName))
+    (committed.map(_.getPath.getName).sortBy(_.drop(1).toLong), debris)
+  }
+
+  /** The CURRENT pointer file alone; None when absent, empty or unreadable
+    * (mid-swap, between its delete and rename). */
+  private def pointer(): Option[String] =
+    try {
+      val in = fs.open(currentPath)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim).filter(_.nonEmpty)
+      finally in.close()
+    } catch { case _: java.io.IOException => None }
+
+  /** The age gate every crash-debris reclaim and stale-claim break uses. */
+  private def stale(st: FileStatus): Boolean =
+    System.currentTimeMillis() - st.getModificationTime > StaleClaimMs
+
+  /** Live version, from CURRENT; falls back to the highest committed
+    * version (covers a crash in the tiny delete→rename window of the
+    * pointer swap). */
+  private def currentVersion: Option[String] =
+    pointer().orElse(listVersions()._1.lastOption)
+
+  private def live: String =
+    currentVersion.getOrElse(sys.error(s"empty star store at $root"))
+
+  def exists: Boolean = currentVersion.isDefined
+
   private def manifest(v: String): Manifest = {
-    val in = fs.open(new Path(s"${versionDir(v)}/manifest.txt"))
+    val in = fs.open(manifestPath(versionDir(v)))
     val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     val kv = text.linesIterator.map(_.split("=", 2)).collect {
       case Array(k, v1) => k -> v1
     }.toMap
-    val live = kv.getOrElse("batches", "").split(",").filter(_.nonEmpty).toSeq
-    Manifest(kv("maxFactId").toLong, live,
+    def ids(key: String) = kv.get(key).map(_.split(",").filter(_.nonEmpty).toSeq)
+    val batches = ids("batches").getOrElse(Seq.empty)
+    Manifest(kv("maxFactId").toLong, batches,
       // `applied` tracks every batch id ever published (for the replay
       // guard), surviving compaction that rewrites the live list; absent in
       // pre-compaction manifests, where live == applied.
-      kv.get("applied").map(_.split(",").filter(_.nonEmpty).toSeq).getOrElse(live),
+      ids("applied").getOrElse(batches),
       // `factSchema` is the version's fact column contract (DDL) — absent
       // in pre-evolution manifests, where every delta shares one schema
       kv.get("factSchema").filter(_.nonEmpty))
@@ -110,28 +143,26 @@ class StarStore(spark: SparkSession, root: String,
 
   // ── read side ────────────────────────────────────────────────────────────
 
-  private def readTable(name: String): DataFrame = {
-    val v = currentVersion.getOrElse(sys.error(s"empty star store at $root"))
-    spark.read.parquet(s"${versionDir(v)}/$name")
-  }
+  /** Table `name` (a dim's table name or `fact`) of version `v`. */
+  private def table(v: String, name: String): DataFrame =
+    if (name == FactTable) factOf(v)
+    else spark.read.parquet(s"${versionDir(v)}/$name")
 
-  def dimDate: DataFrame = readTable("dim_date")
-  def dimPlatform: DataFrame = readTable("dim_platform")
-  def dimSite: DataFrame = readTable("dim_site")
-  def dimTitle: DataFrame = readTable("dim_title")
+  def dimDate: DataFrame = table(live, DimDate.table)
+  def dimPlatform: DataFrame = table(live, DimPlatform.table)
+  def dimSite: DataFrame = table(live, DimSite.table)
+  def dimTitle: DataFrame = table(live, DimTitle.table)
 
   /** The fact = union of the immutable per-batch delta files listed in the
-    * live manifest (never a rewritten monolith). Each batch dir is its own
-    * day-partitioned parquet root, so they are read separately and unioned
-    * (a shared read would mis-parse `batch_*` as partition dirs); partition
-    * pruning on `day` still applies inside every branch. At high batch
-    * counts, compact old deltas into one dir — the manifest makes that a
+    * live manifest (never a rewritten monolith). At high batch counts,
+    * compact old deltas into one dir — the manifest makes that a
     * metadata-only swap. */
-  def fact: DataFrame = {
-    val v = currentVersion.getOrElse(sys.error(s"empty star store at $root"))
-    factOf(v)
-  }
+  def fact: DataFrame = table(live, FactTable)
 
+  /** Each batch dir is its own day-partitioned parquet root, so they are
+    * read separately and unioned (a shared read would mis-parse `batch_*`
+    * as partition dirs); partition pruning on `day` still applies inside
+    * every branch. */
   private def factOf(v: String): DataFrame = {
     val m = manifest(v)
     val deltas = m.batches.map(b => spark.read.parquet(s"$root/facts/batch_$b"))
@@ -144,7 +175,7 @@ class StarStore(spark: SparkSession, root: String,
         // recorded type. Present columns keep their read-back type (the
         // partition column's inferred type must stay whatever the scan
         // gives, exactly as the pre-evolution union behaved).
-        val target = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+        val target = StructType.fromDDL(ddl)
         deltas.map { df =>
           val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
           df.select(target.fields.toSeq.map { f =>
@@ -160,23 +191,30 @@ class StarStore(spark: SparkSession, root: String,
     }
   }
 
+  /** Register the live star as SQL views (`dim_date`, `dim_platform`,
+    * `dim_site`, `dim_title`, `fact_videostart`) so `spark.sql` works over
+    * the store — the engine's stand-in for the reference's warehouse DDL
+    * surface (SURVEY §2 row 8). All five resolve ONE version, so a
+    * concurrent publish can never pair one version's dims with another's
+    * fact. */
+  def registerViews(): Unit = {
+    val v = live
+    Dimensions.foreach(d => table(v, d.table).createOrReplaceTempView(d.table))
+    table(v, FactTable).createOrReplaceTempView("fact_videostart")
+    viewsRegistered = true
+  }
+
+  // Views capture concrete version-dir paths; a publish retires that dir, so
+  // any registered views must be re-pointed after every publish or the next
+  // `spark.sql` over them fails on deleted files.
+  private var viewsRegistered = false
+  private def refreshViews(): Unit = if (viewsRegistered) registerViews()
+
   // ── time travel ──────────────────────────────────────────────────────────
 
   /** Versions still on disk, ascending — the readable time-travel range
     * (bounded by `retainVersions`; [[sweepVersions]] prunes older ones). */
-  def versions: Seq[Long] = {
-    val vdir = new Path(s"$root/versions")
-    if (!fs.exists(vdir)) Seq.empty
-    else fs.listStatus(vdir).map(_.getPath.getName)
-      .filter(_.matches("v\\d+"))
-      // COMPLETE (manifest-bearing) dirs only — the same debris filter
-      // currentVersion/repairPointer apply. A manifest-less v-dir is a
-      // crashed claimer's leftovers, not a version: counting it toward
-      // the retention window would let sweepVersions delete the LIVE
-      // version and then fail reading the debris manifest.
-      .filter(v => fs.exists(new Path(s"${versionDir(v)}/manifest.txt")))
-      .map(_.drop(1).toLong).sorted.toSeq
-  }
+  def versions: Seq[Long] = listVersions()._1.map(_.drop(1).toLong)
 
   /** Read a table AS OF a published version — the snapshot-isolation read
     * the versioned layout was built to serve (what `table@v<N>` is in a
@@ -187,11 +225,10 @@ class StarStore(spark: SparkSession, root: String,
     * Fails with the retained range if the version has been swept. */
   def readVersion(name: String, version: Long): DataFrame = {
     val v = f"v$version%08d"
-    require(fs.exists(new Path(versionDir(v))),
+    require(isCommitted(v),
       s"version $version not retained at $root " +
         s"(retained: ${versions.mkString(",")})")
-    if (name == "fact") factOf(v)
-    else spark.read.parquet(s"${versionDir(v)}/$name")
+    table(v, name)
   }
 
   /** Retention sweep: keep the newest `retainVersions` version dirs, delete
@@ -201,36 +238,23 @@ class StarStore(spark: SparkSession, root: String,
     * i.e. after a compaction ages out of the window). Runs automatically
     * after every publish; idempotent and safe to call any time. */
   def sweepVersions(): Unit = {
-    // ONE listing, one manifest probe per dir, classifying committed vs
-    // debris (on an object store every exists() is an RPC — re-deriving
-    // `versions` here would double the LIST + HEAD cost per publish)
-    val vdir = new Path(s"$root/versions")
-    val entries =
-      if (fs.exists(vdir))
-        fs.listStatus(vdir).filter(_.getPath.getName.matches("v\\d+")).toSeq
-      else Seq.empty
-    val (committed, debris) = entries.partition(st =>
-      fs.exists(new Path(s"${versionDir(st.getPath.getName)}/manifest.txt")))
-    // retention window over COMMITTED versions only — a manifest-less dir
-    // is a crashed claimer's leftovers, not a version; counting it would
-    // let the sweep delete the LIVE version
-    val vs = committed.map(_.getPath.getName.drop(1).toLong).sorted
-    vs.dropRight(retainVersions).foreach { v =>
-      fs.delete(new Path(versionDir(f"v$v%08d")), true)
-      fs.delete(claimPath(f"v$v%08d"), false): Unit // retire its claim marker
+    // ONE listing, one manifest probe per dir (on an object store every
+    // exists() is an RPC)
+    val (committed, debris) = listVersions()
+    committed.dropRight(retainVersions).foreach { v =>
+      fs.delete(new Path(versionDir(v)), true)
+      fs.delete(claimPath(v), false): Unit // retire its claim marker
     }
     // Reclaim crash DEBRIS, age-gated by the claim staleness window so a
     // live writer's in-flight (non-atomic) copy is never hit; clearing it
     // frees the name for publishVersion's own debris check.
     debris.foreach { st =>
-      if (System.currentTimeMillis() - st.getModificationTime >
-            StarStore.StaleClaimMs &&
+      if (stale(st) &&
           // re-probe AT DELETE TIME: the classification above is seconds
           // old on an object store, and a publisher may have reclaimed
           // the name and COMMITTED since — a manifest now present means
           // live data, not debris
-          !fs.exists(new Path(
-            s"${versionDir(st.getPath.getName)}/manifest.txt"))) {
+          !isCommitted(st.getPath.getName)) {
         // the manifest probe narrows but does not close the window: a
         // publisher that reclaimed the name AFTER our listing can be
         // mid-rename (dir recreated, manifest not yet in place). Re-fetch
@@ -240,14 +264,10 @@ class StarStore(spark: SparkSession, root: String,
         val fresh =
           try Some(fs.getFileStatus(st.getPath))
           catch { case _: java.io.FileNotFoundException => None }
-        fresh.foreach { f =>
-          if (System.currentTimeMillis() - f.getModificationTime >
-              StarStore.StaleClaimMs)
-            fs.delete(st.getPath, true): Unit
-        }
+        if (fresh.exists(stale)) fs.delete(st.getPath, true): Unit
       }
     }
-    val retained = vs.takeRight(retainVersions).map(v => manifest(f"v$v%08d"))
+    val retained = committed.takeRight(retainVersions).map(manifest)
     val referenced = retained.flatMap(_.batches).toSet
     // Reclaim rules, concurrency-safe: a delta dir is deletable when it is
     // UNREFERENCED by every retained manifest AND either (a) its batch id
@@ -260,26 +280,86 @@ class StarStore(spark: SparkSession, root: String,
     // case the claim protocol exists to prevent. Staged `_tmp_` dirs are
     // attempt-scoped and reclaimed by age alone.
     val applied = retained.flatMap(_.applied).toSet
-    val now = System.currentTimeMillis()
     val fdir = new Path(s"$root/facts")
     if (fs.exists(fdir)) fs.listStatus(fdir).foreach { st =>
       val name = st.getPath.getName
-      def stale = now - st.getModificationTime > StarStore.StaleClaimMs
-      if (name.startsWith("batch_")) {
-        val id = name.stripPrefix("batch_")
-        if (!referenced.contains(id) && (applied.contains(id) || stale))
-          fs.delete(st.getPath, true): Unit
-      } else if (name.startsWith("_tmp_") && stale) {
-        fs.delete(st.getPath, true): Unit
-      }
+      val id = name.stripPrefix("batch_")
+      val reclaim =
+        if (name.startsWith("batch_"))
+          !referenced.contains(id) && (applied.contains(id) || stale(st))
+        else name.startsWith("_tmp_") && stale(st)
+      if (reclaim) fs.delete(st.getPath, true): Unit
     }
   }
 
   // ── write side ───────────────────────────────────────────────────────────
 
   private def writeManifest(dir: String, m: Manifest): Unit = {
-    val out = fs.create(new Path(s"$dir/manifest.txt"), true)
+    val out = fs.create(manifestPath(dir), true)
     try out.write(m.serialized.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Stage and commit one version — the ONE publish sequence, shared by
+    * [[attemptBatch]] and [[compact]]: write `delta` to attempt-unique
+    * staging; stage the version dir (`stageDims` fills it, then the
+    * manifest `manifestFor` derives from the staged delta's path); claim
+    * the version name and re-verify ownership and that the name is not
+    * already committed; finalize the delta into `facts/batch_<id>`, rename
+    * the staged dir, advance the pointer, retire the claim.
+    * Some(committed manifest), or None when the race was lost — every
+    * staged byte is deleted, a claim we own of an already-committed name is
+    * retired, a crashed claimer's stale claim is broken for the caller's
+    * retry. */
+  private def stageAndCommit(id: String, nextV: String, delta: DataFrame,
+                             stageDims: String => Unit,
+                             manifestFor: String => Manifest)
+      : Option[Manifest] = {
+    // Per-ATTEMPT staging paths: redelivery can run the SAME batch id
+    // concurrently (the at-least-once contract this class documents), and
+    // id-keyed staging would let one writer's delete/overwrite corrupt the
+    // other's half-staged files mid-commit. The delta moves to its
+    // immutable id-keyed home only under a WON claim, so a losing same-id
+    // twin can never clobber the winner's published data (nor a concurrent
+    // publisher's sweep see a half-written final dir).
+    val nonce = java.util.UUID.randomUUID().toString.take(8)
+    val deltaTmp = new Path(s"$root/facts/_tmp_${id}_$nonce")
+    val deltaDir = new Path(s"$root/facts/batch_$id")
+    delta.write.mode("overwrite").partitionBy("day").parquet(deltaTmp.toString)
+
+    val tmp = s"$root/versions/_tmp_${id}_$nonce"
+    fs.delete(new Path(tmp), true)
+    stageDims(tmp)
+    val m = manifestFor(deltaTmp.toString)
+    writeManifest(tmp, m)
+
+    claimVersion(nextV) match {
+      case Some(token) =>
+        val ours = claimStillOwned(nextV, token)
+        if (ours && !isCommitted(nextV)) {
+          // a crashed leftover at the final delta name is cleared under the
+          // claim
+          if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
+          require(fs.rename(deltaTmp, deltaDir),
+            s"fact delta finalize failed: $deltaTmp -> $deltaDir")
+          publishVersion(tmp, nextV)
+          swapPointer(nextV)
+          // the claim's job is done once the commit is visible — retire it
+          // so the versions/ listing stays exactly the committed dirs
+          // (claims of already-committed names are caught by the manifest
+          // pre-check above)
+          fs.delete(claimPath(nextV), false)
+          return Some(m)
+        }
+        // lost after all: the name was committed before its claim was
+        // retired (retire OUR claim of it), or our claim was broken and
+        // re-assigned mid-gap (then it is not ours to delete)
+        if (ours) fs.delete(claimPath(nextV), false): Unit
+      case None =>
+        breakStaleClaim(nextV): Unit // un-wedge a crashed claimer for the retry
+    }
+    fs.delete(new Path(tmp), true)
+    fs.delete(deltaTmp, true)
+    None
   }
 
   /** Rename a staged version dir into place — the COMMIT POINT of the
@@ -298,7 +378,7 @@ class StarStore(spark: SparkSession, root: String,
       // A manifest-LESS dir is crash debris (a non-atomic object-store
       // "rename" that died mid-copy, or manual interference): no reader
       // can resolve it, and we own the claim — clear it and commit.
-      require(!fs.exists(new Path(s"${versionDir(nextV)}/manifest.txt")),
+      require(!isCommitted(nextV),
         s"version $nextV already committed at $root — claim protocol violated")
       fs.delete(dest, true)
     }
@@ -397,43 +477,6 @@ class StarStore(spark: SparkSession, root: String,
     false
   }
 
-  /** The ONE commit sequence (shared by [[attemptBatch]] and [[compact]]):
-    * claim the version name, re-verify ownership and that the name is not
-    * already committed, run `beforeSwap` (delta finalization), rename the
-    * staged dir, advance the pointer, retire the claim. false = lost the
-    * race — the staged dir is deleted, a claim we own of an
-    * already-committed name is retired, a crashed claimer's stale claim is
-    * broken for the caller's retry. */
-  private def commitStaged(tmp: String, nextV: String,
-                           beforeSwap: () => Unit = () => ()): Boolean =
-    claimVersion(nextV) match {
-      case Some(token) =>
-        val ours = claimStillOwned(nextV, token)
-        if (ours &&
-            !fs.exists(new Path(s"${versionDir(nextV)}/manifest.txt"))) {
-          beforeSwap()
-          publishVersion(tmp, nextV)
-          swapPointer(nextV)
-          // the claim's job is done once the commit is visible — retire it
-          // so the versions/ listing stays exactly the committed dirs
-          // (claims of already-committed names are caught by the manifest
-          // pre-check above)
-          fs.delete(claimPath(nextV), false): Unit
-          true
-        } else {
-          // lost after all: the name was committed before its claim was
-          // retired (retire OUR claim of it), or our claim was broken and
-          // re-assigned mid-gap (then it is not ours to delete)
-          fs.delete(new Path(tmp), true)
-          if (ours) fs.delete(claimPath(nextV), false): Unit
-          false
-        }
-      case None =>
-        fs.delete(new Path(tmp), true)
-        breakStaleClaim(nextV): Unit // un-wedge a crashed claimer for the retry
-        false
-    }
-
   /** Break a CRASHED claimer's claim: the claim file exists, its version
     * dir never appeared, and it is older than [[StarStore.StaleClaimMs]]
     * (claims live for milliseconds in a healthy writer — the gap between
@@ -445,47 +488,22 @@ class StarStore(spark: SparkSession, root: String,
       // present): a manifest-less dir is a crashed mid-rename's debris —
       // treating it as a commit would make the claim unbreakable and wedge
       // every future publish on this name forever.
-      if (!fs.exists(claim) ||
-          fs.exists(new Path(s"${versionDir(nextV)}/manifest.txt"))) false
-      else {
-        val age = System.currentTimeMillis() - fs.getFileStatus(claim)
-          .getModificationTime
-        age > StarStore.StaleClaimMs && fs.delete(claim, false)
-      }
+      if (!fs.exists(claim) || isCommitted(nextV)) false
+      else stale(fs.getFileStatus(claim)) && fs.delete(claim, false)
     } catch { case _: java.io.IOException => false }
   }
 
-  /** Advance CURRENT to the highest COMPLETE version dir if the pointer
-    * fell behind (crash between the commit rename and the pointer swap):
-    * the rename is atomic over a fully-staged dir, so any visible
-    * versions/v<N> is a committed version — repairing forward loses
-    * nothing and un-wedges the next writer. */
-  private def repairPointer(): Unit = {
-    val vdir = new Path(s"$root/versions")
-    if (!fs.exists(vdir)) return
-    // only COMPLETE dirs count (manifest present): a manifest-less dir is
-    // crash debris, never a commit — advancing to it would wedge every read
-    val highest = fs.listStatus(vdir).map(_.getPath.getName)
-      .filter(_.matches("v\\d+"))
-      .filter(v => fs.exists(new Path(s"${versionDir(v)}/manifest.txt")))
-      .sorted.lastOption
-    val ptr = currentVersion
-    highest.foreach { h =>
-      if (ptr.forall(_ < h)) swapPointer(h)
+  /** Advance CURRENT to the highest committed version if the pointer fell
+    * behind (crash between the commit rename and the pointer swap): the
+    * rename is atomic over a fully-staged dir, so any committed
+    * versions/v<N> is a commit — repairing forward loses nothing and
+    * un-wedges the next writer. A missing pointer already resolves to the
+    * highest committed version, so it is left for the next commit to
+    * recreate. */
+  private def repairPointer(): Unit =
+    listVersions()._1.lastOption.foreach { h =>
+      if (pointer().exists(_ < h)) swapPointer(h)
     }
-  }
-
-  /** LEGACY conflict DETECTION (pre-claim protocol): the store version must
-    * still be the one this batch read its inputs from. [[runBatch]] now
-    * prevents the conflict outright via [[claimVersion]]; this check
-    * remains for external writers composing their own publish sequence. */
-  private[etl] def publishGuard(priorV: Option[String]): Unit = {
-    val nowV = currentVersion
-    require(nowV == priorV,
-      s"concurrent publish detected at $root: version moved from " +
-        s"${priorV.getOrElse("<empty>")} to ${nowV.getOrElse("<empty>")} " +
-        "since this batch read its inputs — re-run the batch on the new version")
-  }
 
   /** FORWARD-ONLY pointer advance: a writer that stalled between its
     * commit rename and this swap must not move CURRENT backward past a
@@ -494,44 +512,16 @@ class StarStore(spark: SparkSession, root: String,
     * names compare lexicographically = numerically. The read-check-swap
     * window is instruction-level, not stall-level — the residual race of
     * any lock-free filesystem pointer, self-healing via repairPointer. */
-  private def swapPointer(nextV: String): Unit = {
-    val cur0 = new Path(s"$root/CURRENT")
+  private def swapPointer(nextV: String): Unit =
     // the POINTER FILE only, never the committed-dir fallback (which would
     // see our own just-renamed dir and skip ever creating CURRENT)
-    val pointerNow =
-      if (!fs.exists(cur0)) None
-      else try {
-        val in = fs.open(cur0)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim).filter(_.nonEmpty)
-        finally in.close()
-      } catch { case _: java.io.IOException => None }
-    if (pointerNow.exists(_ >= nextV)) return // already at or past us
-    val curTmp = new Path(s"$root/CURRENT._tmp")
-    val cur = cur0
-    val pOut = fs.create(curTmp, true)
-    try pOut.write(nextV.getBytes("UTF-8")) finally pOut.close()
-    fs.delete(cur, false)
-    require(fs.rename(curTmp, cur), "CURRENT pointer swap failed")
-  }
-
-  /** Register the live star as SQL views (`dim_date`, `dim_platform`,
-    * `dim_site`, `dim_title`, `fact_videostart`) so `spark.sql` works over
-    * the store — the engine's stand-in for the reference's warehouse DDL
-    * surface (SURVEY §2 row 8). */
-  def registerViews(): Unit = {
-    dimDate.createOrReplaceTempView("dim_date")
-    dimPlatform.createOrReplaceTempView("dim_platform")
-    dimSite.createOrReplaceTempView("dim_site")
-    dimTitle.createOrReplaceTempView("dim_title")
-    fact.createOrReplaceTempView("fact_videostart")
-    viewsRegistered = true
-  }
-
-  // Views capture concrete version-dir paths; a publish retires that dir, so
-  // any registered views must be re-pointed after every publish or the next
-  // `spark.sql` over them fails on deleted files.
-  private var viewsRegistered = false
-  private def refreshViews(): Unit = if (viewsRegistered) registerViews()
+    if (!pointer().exists(_ >= nextV)) {
+      val curTmp = new Path(s"$root/CURRENT._tmp")
+      val pOut = fs.create(curTmp, true)
+      try pOut.write(nextV.getBytes("UTF-8")) finally pOut.close()
+      fs.delete(currentPath, false)
+      require(fs.rename(curTmp, currentPath), "CURRENT pointer swap failed")
+    }
 
   /** Process one raw batch end-to-end and atomically publish the updated
     * star. Returns the number of fact rows appended (0 for a replayed
@@ -544,13 +534,11 @@ class StarStore(spark: SparkSession, root: String,
     * would otherwise duplicate the winner's), bounded at
     * [[StarStore.MaxPublishRetries]] attempts. No update is ever lost and
     * versions stay strictly monotone (spec-pinned by the concurrent-writer
-    * test). */
-  def runBatch(raw: DataFrame, batchId: String): Long =
-    runBatch(raw, batchId, Nil)
-
-  /** [[runBatch]] with ADD-ONLY, WIDEN-ONLY SCHEMA EVOLUTION: `extras`
-    * names raw columns to carry into the fact beyond the reference's fixed
-    * derived set. The published manifest records the fact schema; a batch
+    * test).
+    *
+    * `extras` names raw columns to carry into the fact beyond the
+    * reference's fixed derived set, under ADD-ONLY, WIDEN-ONLY SCHEMA
+    * EVOLUTION. The published manifest records the fact schema; a batch
     * must carry every column the live schema already has (add-only — a
     * column, once published, never silently disappears mid-history) at its
     * published type or a lossless widening of it ([[StarStore.widens]]:
@@ -559,7 +547,8 @@ class StarStore(spark: SparkSession, root: String,
     * earlier delta: reads null-fill missing columns and up-cast narrower
     * pre-widening deltas at the recorded type, and old SNAPSHOTS stay
     * readable via time travel under their own (pre-evolution) schema. */
-  def runBatch(raw: DataFrame, batchId: String, extras: Seq[String]): Long = {
+  def runBatch(raw: DataFrame, batchId: String,
+               extras: Seq[String] = Nil): Long = {
     require(!batchId.contains("/"), s"batch id must be path-safe: $batchId")
     var attempt = 0
     while (attempt <= StarStore.MaxPublishRetries) {
@@ -592,10 +581,12 @@ class StarStore(spark: SparkSession, root: String,
   }
 
   /** One optimistic attempt: compute against the current snapshot, stage,
-    * claim, commit. None = lost the publish race (staged dir cleaned up,
+    * claim, commit. None = lost the publish race (staged dirs cleaned up,
     * caller recomputes). */
   private def attemptBatch(raw: DataFrame, batchId: String,
-                           extras: Seq[String] = Nil): Option[Long] = {
+                           extras: Seq[String]): Option[Long] = {
+    // the ONE version this attempt reads: its dims and manifest come from
+    // `prior`, never from a fresh CURRENT read
     val prior = currentVersion.map(v => (v, manifest(v)))
     if (prior.exists(_._2.applied.contains(batchId))) return Some(0L) // replay
 
@@ -603,23 +594,17 @@ class StarStore(spark: SparkSession, root: String,
       .withColumn("SITE", coalesce(col("SITE"), lit(Fact.NoneMember)))
 
     // Dim upserts: idempotent anti-join + deterministic SKEYs (rows 28/31).
-    val (dDate, dPlat, dSite, dTitle) = prior match {
-      case Some(_) =>
-        (Dims.upsert(dimDate, cleaned, "DATETIME", "DATETIME_SKEY"),
-         Dims.upsert(dimPlatform, cleaned, "PLATFORM", "PLATFORM_SKEY"),
-         Dims.upsert(dimSite, cleaned, "SITE", "SITE_SKEY"),
-         Dims.upsert(dimTitle, cleaned, "TITLE", "TITLE_SKEY"))
-      case None =>
-        (Dims.build(cleaned, "DATETIME", "DATETIME_SKEY"),
-         Dims.build(cleaned, "PLATFORM", "PLATFORM_SKEY"),
-         Dims.build(cleaned, "SITE", "SITE_SKEY"),
-         Dims.build(cleaned, "TITLE", "TITLE_SKEY"))
-    }
     // Dims are read multiple times (upsert + fact join) — cache the tiny frames.
-    Seq(dDate, dPlat, dSite, dTitle).foreach(_.cache())
+    val dims = Dimensions.map { d =>
+      (prior match {
+        case Some((v, _)) =>
+          Dims.upsert(table(v, d.table), cleaned, d.naturalKey, d.skeyCol)
+        case None => Dims.build(cleaned, d.naturalKey, d.skeyCol)
+      }).cache()
+    }
 
     val maxFactId = prior.map(_._2.maxFactId).getOrElse(0L) // manifest, no fact scan
-    val resolved = Fact.resolveSkeys(cleaned, dDate, dPlat, dSite, dTitle,
+    val resolved = Fact.resolveSkeys(cleaned, dims(0), dims(1), dims(2), dims(3),
       extras)
     val newFact = Fact.withFactIdsScalable(resolved, maxFactId)
 
@@ -633,157 +618,105 @@ class StarStore(spark: SparkSession, root: String,
     // readers; a widened column upgrades the recorded type, and reads
     // up-cast the narrower pre-widening deltas. Legacy stores (no recorded
     // schema) adopt this batch's schema going forward.
-    val priorSchema = prior.flatMap(_._2.factSchema)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-    priorSchema.foreach(_.fields.foreach { f =>
-      val got = newFact.schema.fields.find(_.name == f.name).getOrElse(
-        sys.error(s"schema evolution is ADD-ONLY: batch $batchId lacks " +
-          s"published fact column '${f.name}' (${f.dataType.sql}) — a " +
-          "published column must ride every later batch"))
-      require(got.dataType == f.dataType ||
-          StarStore.widens(f.dataType, got.dataType),
-        s"fact column '${f.name}' changed type: published ${f.dataType.sql}" +
-          s", batch $batchId carries ${got.dataType.sql} — only lossless " +
-          "widening (byte->short->int->long, float->double) evolves a " +
-          "published type")
-    })
-    val mergedSchema = priorSchema match {
-      case None => newFact.schema
-      case Some(ps) =>
-        org.apache.spark.sql.types.StructType(ps.fields.map { f =>
+    val mergedSchema = prior.flatMap(_._2.factSchema).map(StructType.fromDDL)
+      .fold(newFact.schema) { ps =>
+        StructType(ps.fields.map { f =>
+          val got = newFact.schema.fields.find(_.name == f.name).getOrElse(
+            sys.error(s"schema evolution is ADD-ONLY: batch $batchId lacks " +
+              s"published fact column '${f.name}' (${f.dataType.sql}) — a " +
+              "published column must ride every later batch"))
+          require(got.dataType == f.dataType ||
+              StarStore.widens(f.dataType, got.dataType),
+            s"fact column '${f.name}' changed type: published ${f.dataType.sql}" +
+              s", batch $batchId carries ${got.dataType.sql} — only lossless " +
+              "widening (byte->short->int->long, float->double) evolves a " +
+              "published type")
           // a widened column records the WIDER type from this version on
-          val got = newFact.schema.fields.find(_.name == f.name).get
-          if (got.dataType != f.dataType) f.copy(dataType = got.dataType)
-          else f
+          f.copy(dataType = got.dataType)
         } ++
           newFact.schema.fields.filterNot(f => ps.fieldNames.contains(f.name))
             .map(_.copy(nullable = true))) // null-filled in pre-evolution deltas
-    }
+      }
 
-    // Per-ATTEMPT staging paths: redelivery can run the SAME batch id
-    // concurrently (the at-least-once contract this class documents), and
-    // id-keyed staging would let one writer's delete/overwrite corrupt the
-    // other's half-staged files mid-commit. The delta moves to its
-    // immutable id-keyed home only under a WON claim (below).
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-
-    // 1. fact delta → attempt-unique staging.
-    val batchDir = s"$root/facts/batch_$batchId"
-    val deltaTmp = s"$root/facts/_tmp_${batchId}_$nonce"
-    newFact.write.mode("overwrite").partitionBy("day").parquet(deltaTmp)
-    val appended = spark.read.parquet(deltaTmp).count() // metadata-only count
-
-    // 2. stage the new version dir (dims + manifest), then one rename.
     val nextV = f"v${prior.map(_._1.drop(1).toLong).getOrElse(0L) + 1}%08d"
-    val tmp = s"$root/versions/_tmp_${batchId}_$nonce"
-    fs.delete(new Path(tmp), true)
-    dDate.write.mode("overwrite").parquet(s"$tmp/dim_date")
-    dPlat.write.mode("overwrite").parquet(s"$tmp/dim_platform")
-    dSite.write.mode("overwrite").parquet(s"$tmp/dim_site")
-    dTitle.write.mode("overwrite").parquet(s"$tmp/dim_title")
-    val newManifest = Manifest(maxFactId + appended,
-      prior.map(_._2.batches).getOrElse(Seq.empty) :+ batchId,
-      prior.map(_._2.applied).getOrElse(Seq.empty) :+ batchId,
-      Some(mergedSchema.toDDL))
-    writeManifest(tmp, newManifest)
-
-    // 3. claim + commit (shared sequence — see commitStaged); the delta is
-    //    finalized into its manifest-referenced home only after the claim
-    //    is WON, so a losing same-id twin can never clobber the winner's
-    //    published data. A crashed leftover at the final name is cleared
-    //    under the claim.
-    val committed = commitStaged(tmp, nextV, beforeSwap = () => {
-      if (fs.exists(new Path(batchDir))) fs.delete(new Path(batchDir), true)
-      require(fs.rename(new Path(deltaTmp), new Path(batchDir)),
-        s"fact delta finalize failed: $deltaTmp -> $batchDir")
-    })
-    if (!committed) fs.delete(new Path(deltaTmp), true): Unit
-    Seq(dDate, dPlat, dSite, dTitle).foreach(_.unpersist())
-    if (!committed) return None
-
-    // 4. post-commit maintenance. The batch IS committed at this point, so
-    //    a failure below must not escape into runBatch's lost-race retry —
-    //    the retried attempt would hit the replay check and report 0
-    //    appended for a batch that appended rows. Maintenance is
-    //    idempotent and repeats on every publish, so skipping one round
-    //    when a concurrent writer races our sweep/compact loses nothing.
-    try {
-      // retention sweep: retire version dirs beyond the time-travel window
-      // (fact data files are shared and never copied, so with the default
-      // retainVersions=1 this only removes tiny dim snapshots).
-      sweepVersions()
-      // Keep the live delta count bounded: the fact is a union over live
-      // batch dirs, so an unbounded batch history degrades every read. The
-      // `applied` list survives compaction — replays stay no-ops.
-      if (newManifest.batches.length > autoCompactAfter) compact(): Unit
-      else refreshViews()
-    } catch {
-      // NonFatal, not a type list: ANY maintenance failure after the
-      // commit (a transient delete IOException, a compaction losing its
-      // own claim race) must stay here — escaping would report 0 appended
-      // for a committed batch via the retry's replay check. But stay
-      // VISIBLE: a persistently failing sweep/compact (misconfigured
-      // permissions on versions/) otherwise accumulates version dirs and
-      // deltas unboundedly with no observable signal
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(classOf[StarStore]).warn(
-          s"post-commit maintenance failed (commit is intact; " +
-            s"sweep/compact will retry next publish): $e")
+    val published = stageAndCommit(batchId, nextV, newFact,
+      stageDims = tmp => Dimensions.zip(dims).foreach { case (d, df) =>
+        df.write.mode("overwrite").parquet(s"$tmp/${d.table}")
+      },
+      manifestFor = deltaTmp => Manifest(
+        // metadata-only count of the staged delta
+        maxFactId + spark.read.parquet(deltaTmp).count(),
+        prior.map(_._2.batches).getOrElse(Seq.empty) :+ batchId,
+        prior.map(_._2.applied).getOrElse(Seq.empty) :+ batchId,
+        Some(mergedSchema.toDDL)))
+    dims.foreach(_.unpersist())
+    published.map { m =>
+      // Post-commit maintenance. The batch IS committed at this point, so
+      // a failure below must not escape into runBatch's lost-race retry —
+      // the retried attempt would hit the replay check and report 0
+      // appended for a batch that appended rows. Maintenance is idempotent
+      // and repeats on every publish, so skipping one round when a
+      // concurrent writer races our sweep/compact loses nothing.
+      try {
+        // retention sweep: retire version dirs beyond the time-travel window
+        // (fact data files are shared and never copied, so with the default
+        // retainVersions=1 this only removes tiny dim snapshots).
+        sweepVersions()
+        // Keep the live delta count bounded: the fact is a union over live
+        // batch dirs, so an unbounded batch history degrades every read.
+        // The `applied` list survives compaction — replays stay no-ops.
+        if (m.batches.length > autoCompactAfter) compact(): Unit
+        else refreshViews()
+      } catch {
+        // NonFatal, not a type list: ANY maintenance failure after the
+        // commit (a transient delete IOException, a compaction losing its
+        // own claim race) must stay here — escaping would report 0 appended
+        // for a committed batch via the retry's replay check. But stay
+        // VISIBLE: a persistently failing sweep/compact (misconfigured
+        // permissions on versions/) otherwise accumulates version dirs and
+        // deltas unboundedly with no observable signal
+        case scala.util.control.NonFatal(e) =>
+          org.slf4j.LoggerFactory.getLogger(classOf[StarStore]).warn(
+            s"post-commit maintenance failed (commit is intact; " +
+              s"sweep/compact will retry next publish): $e")
+      }
+      m.maxFactId - maxFactId
     }
-    Some(appended)
   }
 
   /** Compact the live fact deltas into one partitioned directory and publish
-    * a version whose live list is just the compacted dir. Old delta dirs are
-    * deleted AFTER the pointer swap; the `applied` history is preserved, so
-    * replaying any pre-compaction batch id remains a no-op. Run when the
-    * batch count makes the union plan / file listing noticeable. */
+    * a version whose live list is just the compacted dir. The `applied`
+    * history is preserved, so replaying any pre-compaction batch id remains
+    * a no-op. Run when the batch count makes the union plan / file listing
+    * noticeable. */
   def compact(): Long = {
-    val (v, m) = currentVersion.map(v => (v, manifest(v)))
-      .getOrElse(sys.error(s"empty star store at $root"))
+    val v = live
+    val m = manifest(v)
     if (m.batches.length <= 1) return 0L
     val compactId = s"compact_${v.drop(1).toLong + 1}"
-    val dest = s"$root/facts/batch_$compactId"
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    // attempt-unique staging for the rewritten fact, finalized only under
-    // a WON claim — the same discipline as attemptBatch: a concurrent
-    // publisher's sweep must never see (or race) a half-written final dir
-    val destTmp = s"$root/facts/_tmp_${compactId}_$nonce"
-    fact.write.mode("overwrite").partitionBy("day").parquet(destTmp)
-
     val nextV = f"v${v.drop(1).toLong + 1}%08d"
-    val tmp = s"$root/versions/_tmp_${compactId}_$nonce"
-    fs.delete(new Path(tmp), true)
-    // dims are unchanged — copy the snapshots into the new version dir
-    Seq("dim_date", "dim_platform", "dim_site", "dim_title").foreach { t =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"${versionDir(v)}/$t"),
-        fs, new Path(s"$tmp/$t"), false, spark.sparkContext.hadoopConfiguration)
-    }
-    // compactId joins the `applied` history: the sweep reclaims aged-out
-    // deltas by applied-membership, and a compacted dir must stay
-    // reclaimable once a LATER compaction supersedes it
-    // the compacted delta materializes the reconciled (null-filled) frame,
-    // so the schema contract rides through compaction unchanged
-    writeManifest(tmp, Manifest(m.maxFactId, Seq(compactId),
-      m.applied :+ compactId, m.factSchema))
-    val committed = commitStaged(tmp, nextV, beforeSwap = () => {
-      if (fs.exists(new Path(dest))) fs.delete(new Path(dest), true)
-      require(fs.rename(new Path(destTmp), new Path(dest)),
-        s"compacted fact finalize failed: $destTmp -> $dest")
-    })
-    if (committed) {
-      // pre-compaction delta dirs are reclaimed by the sweep only once no
-      // RETAINED version still references them — time-travel reads into
-      // the pre-compaction window keep working until it ages out
-      sweepVersions()
-      refreshViews()
-      m.batches.length.toLong
-    } else {
-      // a concurrent publish superseded this compaction's snapshot — drop
-      // the staged delta; the next over-threshold publish re-triggers
-      fs.delete(new Path(destTmp), true)
-      0L
-    }
+    val published = stageAndCommit(compactId, nextV, factOf(v),
+      // dims are unchanged — copy the snapshots into the new version dir
+      stageDims = tmp => Dimensions.foreach { d =>
+        org.apache.hadoop.fs.FileUtil.copy(fs,
+          new Path(s"${versionDir(v)}/${d.table}"), fs,
+          new Path(s"$tmp/${d.table}"), false,
+          spark.sparkContext.hadoopConfiguration)
+      },
+      // compactId joins the `applied` history: the sweep reclaims aged-out
+      // deltas by applied-membership, and a compacted dir must stay
+      // reclaimable once a LATER compaction supersedes it. The compacted
+      // delta materializes the reconciled (null-filled) frame, so the
+      // schema contract rides through compaction unchanged.
+      manifestFor = _ => Manifest(m.maxFactId, Seq(compactId),
+        m.applied :+ compactId, m.factSchema))
+    if (published.isEmpty) return 0L // superseded; the next publish re-triggers
+    // pre-compaction delta dirs are reclaimed by the sweep only once no
+    // RETAINED version still references them — time-travel reads into the
+    // pre-compaction window keep working until it ages out
+    sweepVersions()
+    refreshViews()
+    m.batches.length.toLong
   }
 }
 
@@ -792,6 +725,22 @@ object StarStore {
     * steady-state ingest rarely pays a compaction, low enough that the
     * fact-union plan stays a handful of parquet roots. */
   val DefaultAutoCompactAfter: Int = 16
+
+  /** A dimension: its table (version subdir and view name), the natural key
+    * it upserts on, and its surrogate-key column. */
+  private final case class DimSpec(table: String, naturalKey: String,
+                                   skeyCol: String)
+
+  private val DimDate = DimSpec("dim_date", "DATETIME", "DATETIME_SKEY")
+  private val DimPlatform = DimSpec("dim_platform", "PLATFORM", "PLATFORM_SKEY")
+  private val DimSite = DimSpec("dim_site", "SITE", "SITE_SKEY")
+  private val DimTitle = DimSpec("dim_title", "TITLE", "TITLE_SKEY")
+
+  /** Every dim, in [[Fact.resolveSkeys]]'s argument order. */
+  private val Dimensions: Seq[DimSpec] =
+    Seq(DimDate, DimPlatform, DimSite, DimTitle)
+
+  private val FactTable = "fact"
 
   /** The lossless type-widening lattice schema evolution accepts
     * (byte→short→int→long along the integral chain, float→double): every
@@ -831,12 +780,8 @@ object StarStore {
         factSchema.map(s => s"factSchema=$s\n").getOrElse("")
   }
 
-  def apply(spark: SparkSession, root: String): StarStore = new StarStore(spark, root)
-
-  def apply(spark: SparkSession, root: String, autoCompactAfter: Int): StarStore =
-    new StarStore(spark, root, autoCompactAfter)
-
-  def apply(spark: SparkSession, root: String, autoCompactAfter: Int,
-            retainVersions: Int): StarStore =
+  def apply(spark: SparkSession, root: String,
+            autoCompactAfter: Int = DefaultAutoCompactAfter,
+            retainVersions: Int = 1): StarStore =
     new StarStore(spark, root, autoCompactAfter, retainVersions)
 }

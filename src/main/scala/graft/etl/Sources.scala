@@ -17,17 +17,19 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** The reference's CSV read semantics, shared by the batch scan
+    * ([[csv]]) and the streaming stage reader ([[Incremental.run]]). */
+  private[etl] val CsvReadOptions: Map[String, String] = Map(
+    "header" -> "true",
+    "quote" -> "\"",
+    "escape" -> "\\",
+    "ignoreLeadingWhiteSpace" -> "true",
+    "mode" -> "PERMISSIVE")
+
   /** CSV scan with the reference's quote/escape semantics
     * (SURVEY §2 row 1). */
   def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\\")
-      .option("ignoreLeadingWhiteSpace", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+    spark.read.schema(schema).options(CsvReadOptions).csv(path)
 
   /** Raw video-events CSV (`lambda_function_s3.py:65`). */
   def rawCsv(spark: SparkSession, path: String): DataFrame =

@@ -310,7 +310,8 @@ class PlanSpec extends SparkSpec {
     assert(!rp.contains("Window"), s"no window in SKEY resolution:\n$rp")
     val fact = Fact.withFactIdsScalable(resolved, existingMax = 1000L)
     // zipWithIndex preserves the batch's partitioning — ids are assigned in
-    // every partition in parallel (vs the window twin's single partition)
+    // every partition in parallel (a global row_number window would
+    // serialize them through one)
     assert(fact.rdd.getNumPartitions === resolved.rdd.getNumPartitions,
       "scalable factid assignment must not collapse partitioning")
     val Array((n, distinct, lo, hi)) = fact
@@ -319,9 +320,6 @@ class PlanSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect()
     assert(n === 5000L && distinct === n) // unique
     assert(lo === 1001L && hi === 1000L + n) // contiguous from existingMax
-    // the contrast that justifies the routing rule: the deterministic
-    // window twin (dims/tests only) serializes through ONE partition
-    assert(Fact.withFactIds(resolved).rdd.getNumPartitions === 1)
   }
 
   test("text_lm_score: cf vocabulary broadcast below the threshold, shuffle join above") {

@@ -231,6 +231,34 @@ class StarPipelineSpec extends SparkSpec {
     assert(store.dimDate.count() === 3)
   }
 
+  test("on-disk contract: CURRENT names the live version, whose manifest " +
+    "carries maxFactId and the live delta list") {
+    // external readers (the benchmark harness, ops scripts) read these
+    // files directly, without StarStore — pin the layout, not the API
+    val root = tmpDir("graft-star-layout")
+    val store = StarStore(spark, root, autoCompactAfter = Int.MaxValue)
+    def read(rel: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, rel)), "UTF-8")
+    def assertContract(expectedV: String, expectedBatches: Seq[String]): Unit = {
+      val v = read("CURRENT").trim
+      assert(v === expectedV)
+      val kv = read(s"versions/$v/manifest.txt").linesIterator
+        .map(_.split("=", 2)).collect { case Array(k, x) => k -> x }.toMap
+      assert(kv("maxFactId").toLong === store.fact.count())
+      assert(kv("batches").split(",").filter(_.nonEmpty).toSeq ===
+        expectedBatches)
+      val deltaDirs = new java.io.File(s"$root/facts").listFiles()
+        .map(_.getName).filter(_.startsWith("batch_")).sorted.toSeq
+      assert(deltaDirs === expectedBatches.map("batch_" + _).sorted)
+    }
+    assert(store.runBatch(rawBatch1, "l1") === 3)
+    assert(store.runBatch(rawBatch2, "l2") === 2)
+    assertContract("v00000002", Seq("l1", "l2"))
+    assert(store.compact() === 2)
+    assertContract("v00000003", Seq("compact_3"))
+    assert(store.fact.count() === 5)
+  }
+
   test("audit: count + one-job max-lengths (rows 26-27)") {
     val prof = Audit.profile(rawBatch1).head()
     assert(prof.getAs[Long]("n_records") === 5)
@@ -568,23 +596,5 @@ class StarPipelineSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(debris))
     assert(store.runBatch(rawBatch2, "b2") === 2)
     assert(store.versions.max === 2L)
-  }
-
-  test("optimistic concurrency: a publish from a stale snapshot fails loudly") {
-    val root = tmpDir("graft-star-occ")
-    val store = StarStore(spark, root)
-    assert(store.runBatch(rawBatch1, "b1") === 3)
-    // a writer that read v1 and then lost the race to a v2 publisher: its
-    // guard must refuse to commit from the stale snapshot
-    val staleView = Some("v00000001")
-    store.publishGuard(staleView) // still current — passes
-    assert(store.runBatch(rawBatch2, "b2") === 2)
-    val e = intercept[IllegalArgumentException](store.publishGuard(staleView))
-    assert(e.getMessage.contains("concurrent publish"))
-    // a writer that saw an empty store races an initializer the same way
-    val e2 = intercept[IllegalArgumentException](store.publishGuard(None))
-    assert(e2.getMessage.contains("concurrent publish"))
-    // the store itself is untouched by refused publishes
-    assert(store.fact.count() === 5)
   }
 }
