@@ -317,7 +317,7 @@ object Queries {
     // the two-level sum is bit-identical to the flat one while the join
     // shuffle carries one row per order instead of one per lineitem (a
     // reduction Catalyst does not derive on its own).
-    // MEASURED (graft.tools.MeasureQ5, local[32], median of 3 after warmup):
+    // MEASURED (local[32], median of 3 after warmup):
     // sf0.1 pre-agg 0.71 s vs flat 0.96 s; at a 10× replicated scale-up
     // 1.77 s vs 1.72 s (within run spread). The pre-agg wins locally and
     // ties at 10×, while its join shuffle stays O(orders) instead of

@@ -558,8 +558,8 @@ object CatalogShared {
 
   private[graft] object Sql {
     // MinHash-LSH near-dup pairs → recursive-reachability connected
-    // components (shared by the label-propagation row and its
-    // large/small-star twin: two independent algorithms, one oracle answer)
+    // components (shared by the union-find row and its large/small-star
+    // twin: two independent algorithms, one oracle answer)
     lazy val dedupClustersCc: String =
       s"""WITH RECURSIVE
          |w AS (SELECT doc_id, string_split(lower(text), ' ') AS words FROM documents),

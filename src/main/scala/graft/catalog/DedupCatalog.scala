@@ -717,8 +717,9 @@ object DedupCatalog {
 
 
     // Same clusters via large-star/small-star (the O(log n)-round published
-    // algorithm for web-scale graphs) — two independent CC algorithms pinned
-    // to one oracle answer.
+    // algorithm for web-scale graphs) — dedup_clusters resolves this small
+    // graph by driver union-find, so the two rows pin both CC algorithms to
+    // one oracle answer.
     "dedup_clusters_star" -> ((s, d) => {
       val pairs = Dedup.nearDuplicates(t(s, d, "documents"), "doc_id", "text")
       Dedup.connectedComponentsStar(pairs)
@@ -1917,7 +1918,7 @@ object DedupCatalog {
 
 
     // identical reachability oracle: the star-alternation row must produce
-    // the exact same component labeling as the label-propagation row
+    // the exact same component labeling as the union-find row
     "dedup_clusters_star" -> Sql.dedupClustersCc,
 
 

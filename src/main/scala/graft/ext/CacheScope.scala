@@ -14,8 +14,9 @@ import org.apache.spark.sql.Dataset
   * [[Dedup.duplicateClusters]] / [[Curation.curate]] (the `scope` parameter),
   * run the action that consumes the result, then `scope.close()`. Closing is
   * safe once the consumer no longer needs the cached data — persisted frames
-  * recompute from lineage if re-read; checkpointed label RDDs must not be
-  * read after close.
+  * recompute from lineage if re-read; a checkpointed edge RDD of the star
+  * connected-components rounds has no lineage, so labels it backs must not
+  * be read after close.
   */
 final class CacheScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]

@@ -92,11 +92,12 @@ object Curation {
     *
     * Cache discipline: the shingle/band frames persisted inside
     * [[Dedup.nearDuplicates]] are fully consumed once
-    * [[Dedup.duplicateClusters]] converges (it is eager — the cluster labels
-    * come back checkpointed), so they are released HERE, before returning.
-    * The final label checkpoint is still read lazily by the returned frames,
-    * so its ownership passes to the caller's `scope` (null → it stays
-    * persisted, the pre-scope behavior). */
+    * [[Dedup.duplicateClusters]] returns (it is eager — the cluster labels
+    * come back as a local relation, or checkpointed past its driver budget),
+    * so they are released HERE, before returning. A label checkpoint is
+    * still read lazily by the returned frames, so its ownership passes to
+    * the caller's `scope` (null → it stays persisted, the pre-scope
+    * behavior). */
   private def stages(docs: DataFrame, idCol: String, textCol: String,
                      cfg: Config, scope: CacheScope)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {

@@ -1079,13 +1079,21 @@ object Dedup {
   }
 
   /** Per-call state for the checkpoint-iteration discipline shared by the
-    * iterative operators ([[duplicateClusters]], [[connectedComponentsStar]],
-    * [[prefixDoubleRanks]]): each round's frame is materialized as a
+    * iterative operators (the star rounds of [[connectedComponentsStar]],
+    * which [[duplicateClusters]] also runs past its driver budget, and
+    * [[prefixDoubleRanks]]; both CC entry points checkpoint their canonical
+    * edge list through it): each round's frame is materialized as a
     * persisted + localCheckpoint'd InternalRow RDD (lineage stays CONSTANT
     * per round), and the RDD currently being materialized is tracked in
     * `pending` so a failure ANYWHERE between persist and ownership transfer
-    * still finds it in the operator's catch block. One instance per call —
-    * never shared across threads. */
+    * still finds it in the operator's catch block. The operator holds a
+    * DIRECT handle to each RDD: `Dataset.localCheckpoint` would persist an
+    * internal RDD the API exposes no handle to, and recovering it by a
+    * persistent-RDD-registry diff can claim (and later free) caches other
+    * jobs persisted concurrently in a shared session. `toRdd` may reuse row
+    * buffers, so rows are copied before caching. (Use reliable
+    * checkpointing on a real cluster: a local checkpoint dies with its
+    * executor.) One instance per call — never shared across threads. */
   private[ext] object CheckpointRounds {
     type IRdd =
       org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
@@ -1105,29 +1113,6 @@ object Dedup {
       (org.apache.spark.sql.graftbridge.GraftColumnBridge
         .internalCreateDataFrame(spark, r, df.schema), r, n)
     }
-    /** [[eagerCheckpoint]] that ALSO tallies rows whose boolean column at
-      * `flagOrdinal` is true, in the same materializing pass — iterative
-      * operators fold their per-round convergence test into the round's
-      * own materialization instead of paying a separate count-join query
-      * (which under AQE is several more scheduler round-trips per round;
-      * at sf0.1 the fixed job overhead, not data, dominates these loops). */
-    def eagerCheckpointFlagCount(df: DataFrame, flagOrdinal: Int)
-        : (DataFrame, IRdd, Long, Long) = {
-      val r = df.queryExecution.toRdd.map(_.copy())
-      r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pending = r
-      r.localCheckpoint()
-      val (n, flagged) = r.mapPartitions { it =>
-        var c = 0L; var f = 0L
-        while (it.hasNext) {
-          val row = it.next(); c += 1
-          if (row.getBoolean(flagOrdinal)) f += 1
-        }
-        Iterator.single((c, f))
-      }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-      (org.apache.spark.sql.graftbridge.GraftColumnBridge
-        .internalCreateDataFrame(spark, r, df.schema), r, n, flagged)
-    }
     /** Failure-path sweep: release the in-flight RDD unless an owner
       * variable (whose release the catch block handles itself) already
       * holds it. */
@@ -1141,26 +1126,32 @@ object Dedup {
     * `df.unpersist` cannot release — this listener unpersists the RDD once
     * the first Dataset action containing `trigger`'s plan completes. */
   private[ext] def releaseRddAfterFirstAction(
-      rdd: org.apache.spark.rdd.RDD[_], trigger: DataFrame): Unit = {
+      rdd: org.apache.spark.rdd.RDD[_], trigger: DataFrame): Unit =
+    onFirstAction(trigger)(rdd.unpersist(false))
+
+  /** The one listener behind [[releaseAfterFirstAction]],
+    * [[releaseRddAfterFirstAction]] and [[destroyAfterFirstAction]]: run
+    * `release` exactly once, when the first Dataset action containing
+    * `trigger`'s plan completes (success or failure), then unregister. */
+  private def onFirstAction(trigger: DataFrame)(release: => Unit): Unit = {
+    import org.apache.spark.sql.execution.QueryExecution
     val spark = trigger.sparkSession
     val target = trigger.queryExecution.analyzed
     val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def maybeRelease(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      // `analyzed` is pre-cache-substitution, so the trigger frame's plan
+      // appears verbatim as a subtree of any consuming query.
+      private def maybeRelease(qe: QueryExecution): Unit =
         if (qe.analyzed.exists(_.sameResult(target)) &&
             released.compareAndSet(false, true)) {
-          rdd.unpersist(false)
+          release
           spark.listenerManager.unregister(this)
         }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = maybeRelease(qe)
-    }
-    spark.listenerManager.register(listener)
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = maybeRelease(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = maybeRelease(qe)
+    })
   }
 
   /** SUBSTRING-level dedup at ARBITRARY offsets (Lee et al. 2021,
@@ -1359,29 +1350,8 @@ object Dedup {
     * subtree would treat that stale event as the caller's consumption and
     * evict the cache early. */
   private[ext] def releaseAfterFirstAction(df: DataFrame,
-                                           trigger: DataFrame): Unit = {
-    val spark = df.sparkSession
-    val target = trigger.queryExecution.analyzed
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def maybeRelease(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        // `analyzed` is pre-cache-substitution, so the trigger frame's
-        // plan appears verbatim as a subtree of any consuming query.
-        if (qe.analyzed.exists(_.sameResult(target)) &&
-            released.compareAndSet(false, true)) {
-          df.unpersist(false)
-          spark.listenerManager.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = maybeRelease(qe)
-    }
-    spark.listenerManager.register(listener)
-  }
+                                           trigger: DataFrame): Unit =
+    onFirstAction(trigger)(df.unpersist(false))
 
   /** n-bit SimHash over pre-hashed tokens: bit i is set iff the sum over
     * tokens of ±1 (sign of hash-bit i) is positive. Near-dups then cluster
@@ -1575,121 +1545,119 @@ object Dedup {
 
   /** Resolve near-dup PAIRS into duplicate CLUSTERS: connected components
     * over the pair graph, labeling every member with the minimum id in its
-    * component (the canonical survivor). This is the step pairwise dedup
-    * pipelines forget — without it, A≈B and B≈C dedup to two survivors.
+    * component under the id type's ordering (the canonical survivor). This
+    * is the step pairwise dedup pipelines forget — without it, A≈B and B≈C
+    * dedup to two survivors. One (id, rep) row per node of a kept edge;
+    * edges with a null endpoint and self-pairs are dropped.
     *
-    * Iterative min-label propagation with pointer jumping: each round (a)
-    * takes the min label across edges, then (b) compresses rep → label(rep),
-    * so label distances roughly halve per round — O(log diameter) rounds,
-    * each one shuffle, no driver-side graph. Throws if `maxIter` rounds
-    * don't converge (silently-wrong clusters would under-dedup). */
+    * The one connected-components entry point; the input's size picks the
+    * algorithm. The canonical edge list is checkpointed once, which gives
+    * its count. At catalog sizes a distributed CC costs rounds of Spark
+    * jobs, not data, so an edge list within [[ccFitsDriver]]'s budget whose
+    * id type has a driver-side ordering is collected from the checkpoint's
+    * cached blocks and resolved by union-find on the driver — one collect
+    * after the checkpoint's own jobs, no round loop; the labels come back as
+    * a local relation and the checkpoint is released at once. Any other edge list continues into the
+    * large/small-star rounds of [[connectedComponentsStar]] from the same
+    * checkpoint; `maxIter` bounds those rounds (throwing past it —
+    * silently-wrong clusters would under-dedup) and `scope` owns their final
+    * checkpoint. */
   def duplicateClusters(pairs: DataFrame, aCol: String = "a_id",
-                        bCol: String = "b_id", maxIter: Int = 20,
+                        bCol: String = "b_id", maxIter: Int = 30,
                         scope: CacheScope = null): DataFrame = {
-    val spark = pairs.sparkSession
-    // Each round's labels frame is materialized as an RDD[InternalRow] this
-    // method holds a DIRECT handle to: persisting + localCheckpoint-ing that
-    // handle truncates lineage (the label self-join would otherwise double
-    // the logical plan every round until planning itself OOMs after ~8
-    // rounds), and the handle lets the superseded round be unpersisted
-    // precisely. Checkpointing queryExecution.toRdd (InternalRow, via the
-    // graftbridge) skips the InternalRow→Row deserialize + re-serialize
-    // round trip `df.rdd`/`createDataFrame` would pay per round; toRdd may
-    // reuse row buffers, so rows are copied before caching.
-    // Dataset.localCheckpoint would persist an internal RDD the API exposes
-    // no handle to — recovering it via a persistent-RDD-registry diff can
-    // claim (and later free) caches persisted concurrently by other jobs in
-    // a shared session, so it is deliberately avoided here. Safe under
-    // concurrent use. (Use reliable checkpointing on a real cluster: a
-    // local checkpoint dies with its executor.)
-    // The shared checkpoint-iteration discipline: cp.pending is the RDD
-    // currently being materialized, cleared once `labelRdd` owns it — so a
-    // failure ANYWHERE between persist and ownership transfer (the count,
-    // the changed-count join) still finds it in the catch block below.
-    val cp = new CheckpointRounds(spark)
-    // undirected edge list, both directions
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels: DataFrame = null
-    var labelRdd: CheckpointRounds.IRdd = null
-    var changed = 1L
-    var iter = 0
-    // Any exit before the happy-path return — non-convergence below, or a
-    // failure inside a round — must release the persisted edges, the
-    // current round's labels, AND a freshly persisted not-yet-owned RDD,
-    // or they leak in a long-lived session.
-    try {
-      val first = cp.eagerCheckpoint(
-        edges.select(col("src").as("id")).distinct()
-          .select(col("id"), col("id").as("rep")))
-      labels = first._1
-      labelRdd = first._2
-      cp.pending = null
-      while (changed > 0 && iter < maxIter) {
-        val lab = labels.select(col("id"), col("rep"))
-        // (a) candidate label for each node: min of own and neighbors'
-        // labels — the PREVIOUS label rides along so the round's frame can
-        // carry its own convergence flag (no separate count-join query)
-        val viaEdges = edges
-          .join(lab.withColumnRenamed("id", "dst").withColumnRenamed("rep", "nrep"), "dst")
-          .groupBy(col("src").as("id")).agg(min(col("nrep")).as("mrep"))
-          .join(lab, "id")
-          .select(col("id"), col("rep").as("_old"),
-            least(col("rep"), col("mrep")).as("rep"))
-        // (b) pointer jump: rep → label(rep) (labels only shrink, so the
-        // looked-up label is never worse than the current one). ONE fresh
-        // jump only: a second jump would self-join the candidate frame
-        // again, and exchange reuse does not fire across the differently-
-        // keyed sides, so the whole propagation subtree would execute 4×
-        // per round (measured: rounds do not halve, wall time rises).
-        val j1 = viaEdges
-          .join(viaEdges.select(col("id").as("rep"), col("rep").as("rep2")), "rep")
-          .select(col("id"), col("rep2").as("rep"),
-            (col("rep2") =!= col("_old")).as("_chg"))
-        val (next, nextRdd, _, nChanged) = cp.eagerCheckpointFlagCount(j1, 2)
-        changed = nChanged
-        labelRdd.unpersist(false) // previous round, fully superseded
-        labels = next
-        labelRdd = nextRdd
-        cp.pending = null // ownership transferred to labelRdd
-        iter += 1
-      }
-      require(changed == 0,
-        s"duplicateClusters did not converge in $maxIter rounds — raise maxIter")
-    } catch {
-      case t: Throwable =>
-        edges.unpersist(false)
-        if (labelRdd != null) labelRdd.unpersist(false)
-        cp.releasePendingUnless(labelRdd)
-        throw t
+    import org.apache.spark.sql.types._
+    val edges @ (edgeFrame, edgeRdd, edgeCount) =
+      connectedComponentsEdges(pairs, aCol, bCol)
+    val idType = edgeFrame.schema("x").dataType
+    // (id, rep) are nullable iff either pair column is, on both paths
+    val nullable = pairs.select(col(aCol), col(bCol)).schema.exists(_.nullable)
+    // `defaultSize` counts a string at 20 bytes whatever its length, so
+    // String ids within that estimate are measured as well (one aggregate
+    // over the cached edges) before they go to the driver
+    val heap = Runtime.getRuntime.maxMemory
+    def fits = ccFitsDriver(edgeCount * edgeFrame.schema.defaultSize, heap) &&
+      (idType != StringType || ccFitsDriver(edgeFrame.select(coalesce(sum(
+        octet_length(col("x")) + octet_length(col("y"))), lit(0L))).head.getLong(0), heap))
+    idType match {
+      // id types whose internal values hash and compare equal exactly when
+      // Spark groups them together; any other id type takes the star rounds
+      case ByteType | ShortType | IntegerType | LongType | StringType |
+           DateType | TimestampType | TimestampNTZType if fits =>
+        val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(idType)
+        val rows = try edgeRdd.collect() finally edgeRdd.unpersist(false)
+        // union-find keeping each root at its component's minimum
+        val node = rows.flatMap(e => Array(e.get(0, idType), e.get(1, idType))).distinct
+        val index = node.zipWithIndex.toMap
+        val parent = Array.range(0, node.length)
+        def root(i: Int): Int = {
+          var r = i
+          while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+          r
+        }
+        rows.foreach { e =>
+          val a = root(index(e.get(0, idType)))
+          val b = root(index(e.get(1, idType)))
+          if (a != b) { if (ord.lt(node(a), node(b))) parent(b) = a else parent(a) = b }
+        }
+        val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(idType)
+        pairs.sparkSession.createDataFrame(
+          java.util.Arrays.asList(node.indices.map(i =>
+            org.apache.spark.sql.Row(toScala(node(i)), toScala(node(root(i))))): _*),
+          new StructType().add("id", idType, nullable).add("rep", idType, nullable))
+      case _ =>
+        import org.apache.spark.sql.graftbridge.GraftColumnBridge.{column, expression}
+        val labels = connectedComponentsStarRounds(edges, maxIter, scope)
+        // the rounds' min aggregates widen nullability; narrow it back
+        if (nullable) labels
+        else labels.select(Seq("id", "rep").map(c => column(
+          org.apache.spark.sql.catalyst.expressions.KnownNotNull(
+            expression(col(c)))).as(c)): _*)
     }
-    edges.unpersist(false) // final labels are materialized — lineage done
-    if (scope != null) scope.ownRdds(Seq(labelRdd))
-    // post-round frames carry the internal _old/_chg bookkeeping columns;
-    // the contract (and every caller) is exactly (id, rep)
-    labels.select(col("id"), col("rep"))
+  }
+
+  /** Share of the driver heap [[duplicateClusters]] may budget for the
+    * bytes of an edge list it resolves locally. Measured in `local[2]` with
+    * a 1 GiB heap on graphs of 8-node trees: at this share (168k Long
+    * edges, 21k edges of 64-character String ids) the driver path's heap
+    * peak stayed at or below the star rounds' on the same graph, and the
+    * clustering plus one downstream join took a third of star's time or
+    * less. At twice the share (335k Long edges) its live heap reached ~0.7
+    * of the heap; 256-character String ids budgeted at `defaultSize` alone
+    * filled it. */
+  private val DriverCcHeapFraction = 0.0025
+
+  /** Whether an edge list of `edgeBytes` (edge count times the edge
+    * schema's `defaultSize`, or measured) fits the driver union-find
+    * budget of a `heapBytes` heap. */
+  private[ext] def ccFitsDriver(edgeBytes: Long, heapBytes: Long): Boolean =
+    edgeBytes <= heapBytes * DriverCcHeapFraction
+
+  /** The canonical edge list both CC algorithms start from, checkpointed
+    * once: one (x, y) row per undirected edge with x > y. A null endpoint
+    * makes greatest = least, so such edges drop with the self-pairs.
+    * Returns the frame, its checkpointed RDD and the edge count. */
+  private def connectedComponentsEdges(pairs: DataFrame, aCol: String,
+      bCol: String): (DataFrame, CheckpointRounds.IRdd, Long) = {
+    val cp = new CheckpointRounds(pairs.sparkSession)
+    try cp.eagerCheckpoint(
+      pairs.select(greatest(col(aCol), col(bCol)).as("x"),
+          least(col(aCol), col(bCol)).as("y"))
+        .where(col("x") =!= col("y")).distinct())
+    catch { case t: Throwable => cp.releasePendingUnless(); throw t }
   }
 
   /** Connected components by LARGE-STAR / SMALL-STAR alternation (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the O(log n)-round twin of [[duplicateClusters]]'s min-label
-    * propagation, and the published algorithm of record for web-scale
-    * graphs. Same contract: one (id, rep) row per node appearing in
-    * `pairs`, rep = the component's minimum id.
+    * et al., "Connected Components in MapReduce and Beyond", SoCC 2014):
+    * the distributed algorithm behind [[duplicateClusters]] for edge lists
+    * past its driver budget, here run on every input. Same contract: one
+    * (id, rep) row per node of a kept edge, rep = the component's minimum
+    * id; null-endpoint edges and self-pairs are dropped.
     *
-    * Why a second algorithm for the same answer: label propagation carries
-    * a LABEL TABLE through every round — each iteration joins the full
-    * edge list against the full label frame, so per-round shuffle is
-    * O(E + V) however close to converged the graph is. The star operations
-    * rewrite the EDGE LIST itself toward its fixpoint (every component a
-    * star centered on its minimum): per-round shuffle is the current edge
-    * set, which collapses as components resolve, and convergence is
-    * O(log n) rounds on any topology — a long-path topology (web redirect
-    * chains, linked near-dup spans) costs label propagation rounds
-    * proportional to log(diameter) with its pointer-jump, each at full
-    * O(E + V) width, where the star rounds shrink with the work remaining.
+    * The star operations rewrite the EDGE LIST itself toward its fixpoint
+    * (every component a star centered on its minimum): per-round shuffle is
+    * the current edge set, which collapses as components resolve, and
+    * convergence is O(log n) rounds on any topology, long paths included.
     *
     * One round is two halves over the symmetrized neighbor view:
     *  - LARGE-STAR: every node u links each LARGER neighbor v to
@@ -1706,30 +1674,29 @@ object Dedup {
     * Scale shape: per half-round, one hash aggregation keyed on the node
     * (the per-node minimum) and one join keyed on the node — no label
     * table, no window, no driver-side graph. Every round's edge frame is
-    * materialized via the same InternalRow checkpoint discipline as
-    * [[duplicateClusters]] (lineage would otherwise double per round), the
-    * superseded round released immediately. */
+    * materialized via the [[CheckpointRounds]] discipline (lineage would
+    * otherwise double per round), the superseded round released
+    * immediately; `scope` owns the final round's checkpoint. */
   def connectedComponentsStar(pairs: DataFrame, aCol: String = "a_id",
                               bCol: String = "b_id", maxIter: Int = 30,
-                              scope: CacheScope = null): DataFrame = {
-    val spark = pairs.sparkSession
-    val cp = new CheckpointRounds(spark)
+                              scope: CacheScope = null): DataFrame =
+    connectedComponentsStarRounds(
+      connectedComponentsEdges(pairs, aCol, bCol), maxIter, scope)
+
+  /** The star rounds of [[connectedComponentsStar]] from a checkpointed
+    * canonical edge list, which they take ownership of. */
+  private def connectedComponentsStarRounds(
+      first: (DataFrame, CheckpointRounds.IRdd, Long), maxIter: Int,
+      scope: CacheScope): DataFrame = {
+    var (edges, edgeRdd, edgeCount) = first
+    val cp = new CheckpointRounds(edges.sparkSession)
     // symmetric neighbor view of a canonical (x > y) edge frame
     def nbrs(e: DataFrame): DataFrame =
       e.select(col("x").as("u"), col("y").as("v"))
         .unionByName(e.select(col("y").as("u"), col("x").as("v")))
-    var edges: DataFrame = null
-    var edgeRdd: CheckpointRounds.IRdd = null
-    var edgeCount = -1L
     var converged = false
     var iter = 0
     try {
-      val first = cp.eagerCheckpoint(
-        pairs.select(greatest(col(aCol), col(bCol)).as("x"),
-            least(col(aCol), col(bCol)).as("y"))
-          .where(col("x") =!= col("y")).distinct())
-      edges = first._1; edgeRdd = first._2; edgeCount = first._3
-      cp.pending = null
       while (!converged && iter < maxIter) {
         // LARGE-STAR: (v, m(u)) for every neighbor v > u
         val s = nbrs(edges)
@@ -1757,7 +1724,7 @@ object Dedup {
         iter += 1
       }
       require(converged,
-        s"connectedComponentsStar did not converge in $maxIter rounds — raise maxIter")
+        s"star connected components did not converge in $maxIter rounds — raise maxIter")
       // structural star check: at the fixpoint no rep is also a member
       require(edges.select(col("y")).distinct()
           .join(edges.select(col("x")).distinct(),
@@ -1765,7 +1732,7 @@ object Dedup {
         "star fixpoint violated: a component representative is itself re-attached")
     } catch {
       case t: Throwable =>
-        if (edgeRdd != null) edgeRdd.unpersist(false)
+        edgeRdd.unpersist(false)
         cp.releasePendingUnless(edgeRdd)
         throw t
     }
@@ -2499,25 +2466,6 @@ object Dedup {
     * abandon results on error paths should use a [[CacheScope]], whose
     * `close()` releases unconditionally. */
   private[ext] def destroyAfterFirstAction(
-      result: DataFrame, bc: org.apache.spark.broadcast.Broadcast[_]): Unit = {
-    val spark = result.sparkSession
-    val target = result.queryExecution.analyzed
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def maybeRelease(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (qe.analyzed.exists(_.sameResult(target)) &&
-            released.compareAndSet(false, true)) {
-          bc.destroy()
-          spark.listenerManager.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = maybeRelease(qe)
-    }
-    spark.listenerManager.register(listener)
-  }
+      result: DataFrame, bc: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    onFirstAction(result)(bc.destroy())
 }

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * gives every interleaved column locality at once: a range predicate on
   * ANY of them touches a contiguous-ish fraction of the curve, so most row
   * groups fall outside its min/max envelope and never leave the object
-  * store. MeasureZorder quantifies it on sf0.1 lineitem: a 2-D predicate
-  * scans ~N/k rows from a z-ordered layout vs ~N from a single-column sort.
+  * store. Measured on sf0.1 lineitem (256 KB row groups, a 5%×5% box
+  * predicate): 16,795 rows scanned from a z-ordered layout vs 33,028 from a
+  * partkey-sorted one (2.0×; 1.4× at 1 MB row groups).
   *
   * The key is pure integer bit arithmetic (shift/and/or — whole-stage
   * codegen primitives, no HOF, no UDF), deterministic and engine-exact, so

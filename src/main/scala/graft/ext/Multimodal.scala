@@ -1628,13 +1628,11 @@ object Multimodal {
     if (scope != null) scope.own(fp)
     val pairs = graft.ext.Dedup.hammingPairs64(fp, "asset_id", "dhash",
       maxHamming, scope)
-    // star CC, not label propagation: the dhash graph chains (noise-twin
-    // links compose across scenes — measured diameter ≥ 25 at sf0.1), and
-    // label propagation pays O(diameter) materialized rounds at full
-    // O(E + V) width each, where large/small-star converges in O(log n)
-    // rounds on any topology with per-round cost that SHRINKS as
-    // components resolve. Identical (id, rep=min) contract, spec-pinned.
-    val cc = graft.ext.Dedup.connectedComponentsStar(pairs, scope = scope)
+    // the dhash graph chains (noise-twin links compose across scenes —
+    // measured diameter ≥ 25 at sf0.1); duplicateClusters resolves it in a
+    // round count independent of that diameter (driver union-find, or
+    // O(log n) star rounds past the driver budget)
+    val cc = graft.ext.Dedup.duplicateClusters(pairs, scope = scope)
       .select(col("id").as("asset_id"), col("rep"))
     val out = fp.join(cc, Seq("asset_id"), "left")
       .select(col("asset_id"),
@@ -1711,10 +1709,7 @@ object Multimodal {
         try {
           val pairs = graft.ext.Dedup.hammingPairs64(fresh, "asset_id",
             "dhash", maxHamming)
-          // star CC for the same reason as imageDedupSurvivors: the dhash
-          // graph chains, and O(log n) star rounds beat O(diameter) label
-          // propagation; identical (id, rep=min) contract
-          val cc = graft.ext.Dedup.connectedComponentsStar(pairs)
+          val cc = graft.ext.Dedup.duplicateClusters(pairs)
             .select(col("id").as("asset_id"), col("rep"))
           val survivors = fresh.join(cc, Seq("asset_id"), "left")
             .where(coalesce(col("rep"), col("asset_id")) === col("asset_id"))

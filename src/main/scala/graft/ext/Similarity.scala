@@ -355,7 +355,7 @@ object Similarity {
     * the value is trivially engine-identical. Native codegen'd expression
     * ([[graft.ext.expressions.IntDotExpr]]); [[intDotHof]] is the portable
     * reference twin (NativeExprSpec asserts equality). Measured honestly
-    * (MeasureInt8): the fold alone was a modest win — the 4.5× gap on the
+    * (10× sf0.1): the fold alone was a modest win — the 4.5× gap on the
     * int8 scan was the THREE-HOF quantizer, fixed by
     * [[graft.ext.expressions.QuantizeInt8Expr]]; with both native,
     * int8TopK reaches float-scan parity even paying per-run quantization

@@ -125,7 +125,7 @@ case class DotProductExpr(left: Expression, right: Expression)
   * long arithmetic (quantized codes ≤ 127 over ≤ thousands of dims never
   * approach 2^63), same NULL semantics as the HOF fold
   * `aggregate(zip_with(a,b,_*_), 0L, _+_)`, minus the lambda interpreter.
-  * Honest measurement (MeasureInt8): a modest win alone — the dominant
+  * Honest measurement (10× sf0.1): a modest win alone — the dominant
   * int8-scan cost was the three-HOF quantizer ([[QuantizeInt8Expr]]). */
 case class IntDotExpr(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -195,24 +195,27 @@ class ExtSpec extends SparkSpec {
       "1_exact_dedup" -> 3L, "2_neardup_dedup" -> 3L, "3_quality_gate" -> 3L))
   }
 
-  test("duplicateClusters converges on a long chain (pointer jumping)") {
-    // 40-node chain: plain one-hop propagation needs 39 rounds; with
-    // pointer jumping it must fit the default maxIter
+  test("duplicateClusters: 40-node chain is one component, no RDD kept") {
+    // diameter 39 stresses any round-based CC; the scope-less driver path
+    // releases its edge checkpoint before returning
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val labels = Dedup.duplicateClusters(chain)
       .select("rep").as[Long].collect().toSet
     assert(labels === Set(1L)) // single component, min id everywhere
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("duplicateClusters: transitive pairs collapse to one min-id survivor") {
     // chain 1-2, 2-3 plus separate pair 10-11: components {1,2,3}, {10,11}
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
-    val labels = Dedup.duplicateClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val clusters = Dedup.duplicateClusters(pairs)
+    val labels = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(clusters.schema.map(_.nullable) === Seq(false, false)) // as the pairs
   }
 
-  test("connectedComponentsStar equals label propagation on adversarial graphs") {
+  test("star CC equals driver union-find on adversarial graphs") {
     val rnd = new scala.util.Random(11)
     // long path (diameter stress) + two bridged cliques + random noise
     // edges + an isolated pair + star already centered on its max id
@@ -229,11 +232,74 @@ class ExtSpec extends SparkSpec {
       starMax).toDF("a_id", "b_id")
     val viaStar = Dedup.connectedComponentsStar(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = Dedup.duplicateClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar === viaProp)
+    val driver = Dedup.duplicateClusters(pairs)
+    assert(driver.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val viaDriver = driver.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaStar === viaDriver)
     assert(viaStar(163L) === 100L) // far path end labeled with the path min
     assert(viaStar(2005L) === 1000L) // bridged cliques share one component
+  }
+
+  test("both CC paths label String ids with the binary-ordered min string") {
+    // "B" < "a" under the binary ordering; the self-pair drops
+    val pairs = Seq(("b", "a"), ("c", "b"), ("y", "x"), ("B", "c"), ("d", "d"))
+      .toDF("a_id", "b_id")
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", "string").add("rep", "string")
+    for (out <- Seq(Dedup.duplicateClusters(pairs),
+                    Dedup.connectedComponentsStar(pairs))) {
+      assert(out.schema === schema)
+      assert(out.as[(String, String)].collect().toMap === Map("B" -> "B",
+        "a" -> "B", "b" -> "B", "c" -> "B", "x" -> "x", "y" -> "x"))
+    }
+  }
+
+  test("duplicateClusters: Decimal ids take the star rounds, schema and scope kept") {
+    // Decimal has no driver-side union-find, so any size goes to the star
+    // rounds; labels are the numeric minimum (9 < 10 < 100). A long fits
+    // decimal(20, 0), so the cast keeps the pair columns non-nullable.
+    val dec = org.apache.spark.sql.types.DecimalType(20, 0)
+    val pairs = Seq((10L, 9L), (9L, 100L), (200L, 30L)).toDF("a", "b")
+      .select(col("a").cast(dec).as("a_id"), col("b").cast(dec).as("b_id"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val scope = new CacheScope
+    val clusters = Dedup.duplicateClusters(pairs, scope = scope)
+    assert(!clusters.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(clusters.schema === new org.apache.spark.sql.types.StructType()
+      .add("id", dec, false).add("rep", dec, false))
+    assert(clusters.collect().map(r => r.getDecimal(0).longValue ->
+      r.getDecimal(1).longValue).toMap ===
+      Map(9L -> 9L, 10L -> 9L, 100L -> 9L, 30L -> 30L, 200L -> 30L))
+    // the final round's checkpoint stays persisted until its scope closes
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
+    scope.close(blocking = true)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
+  test("ccFitsDriver: the edge budget is a fixed share of the heap") {
+    // catalog-sized graphs resolve on the driver, a billion edges never do;
+    // the budget is linear in the heap
+    val heap = 4L << 30
+    assert(Dedup.ccFitsDriver(100000L * 16, heap))
+    assert(!Dedup.ccFitsDriver((1L << 30) * 16, heap))
+    val n = (1 to 40).map(1L << _).find(!Dedup.ccFitsDriver(_, heap)).get
+    assert(Dedup.ccFitsDriver(n, 2 * heap) && Dedup.ccFitsDriver(n / 2, heap))
+  }
+
+  test("duplicateClusters: String ids past the budget by length take the star rounds") {
+    // four edges fit any budget at the schema's 20 bytes a string; ids this
+    // long do not, once measured
+    val heap = Runtime.getRuntime.maxMemory
+    val len = Iterator.iterate(1 << 10)(_ * 2)
+      .find(l => !Dedup.ccFitsDriver(4L * 2 * l, heap)).get
+    val id = (0 until 5).map(i => ('a' + i).toChar.toString * len)
+    val pairs = (0 until 4).map(i => (id(i + 1), id(i))).toDF("a_id", "b_id")
+    val clusters = Dedup.duplicateClusters(pairs)
+    assert(!clusters.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(clusters.as[(String, String)].collect().toMap === id.map(_ -> id(0)).toMap)
   }
 
   test("connectedComponentsStar: scope owns the fixpoint; non-convergence throws") {
