@@ -757,7 +757,7 @@ object CatalogShared {
       s"list_reduce(list_concat([0::BIGINT], list_transform(range(1, 65), i -> $a[i] * $b[i])), (x, y) -> x + y)"
 
     // strict-left-fold dot product of two DOUBLE[] expressions over the
-    // first n dims (mirrors Similarity.dotHof's fold order exactly)
+    // first n dims (mirrors Similarity.dot's fold order exactly)
     def dotN(a: String, b: String, n: Int): String =
       s"list_reduce(list_concat([0.0::DOUBLE], list_transform(range(1, ${n + 1}), i -> $a[i] * $b[i])), (x, y) -> x + y)"
 

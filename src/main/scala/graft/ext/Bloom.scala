@@ -48,8 +48,8 @@ object Bloom {
     * an exact join) — it never produces false negatives.
     *
     * LIFECYCLE IS THE CALLER'S: destroy the broadcast after the last
-    * consuming action ([[Dedup.destroyAfterFirstAction]] for scope-less
-    * single consumption, [[CacheScope.ownBroadcast]] for multi-action use) —
+    * consuming action ([[CacheScope.handOverBroadcast]], which destroys it
+    * after the first action scope-less or at `close()` with a scope) —
     * a leaked blob stays executor-resident for the session lifetime. */
   def buildKeyFilter(src: DataFrame, keyCol: String,
                      expectedItems: Long = 1L << 22,

@@ -78,9 +78,7 @@ object BloomJoin {
           case _ =>
             probe.where(might).join(build, Seq(key), joinType)
         }
-        if (scope != null) scope.ownBroadcast(blobBc)
-        else Dedup.destroyAfterFirstAction(result, blobBc)
-        result
+        CacheScope.handOverBroadcast(scope, result, blobBc)
     }
   }
 }

@@ -94,10 +94,11 @@ object Curation {
     * [[Dedup.nearDuplicates]] are fully consumed once
     * [[Dedup.duplicateClusters]] returns (it is eager — the cluster labels
     * come back as a local relation, or checkpointed past its driver budget),
-    * so they are released HERE, before returning. A label checkpoint is
-    * still read lazily by the returned frames, so its ownership passes to
-    * the caller's `scope` (null → it stays persisted, the pre-scope
-    * behavior). */
+    * so they are released HERE, before returning. A star-rounds label
+    * checkpoint is still read lazily by the returned frames, so it goes to
+    * the caller's `scope` (the exception documented on [[CacheScope]]); the
+    * persisted `incoming` frame is handed over by [[curate]] and [[funnel]]
+    * against the frame each returns. */
   private def stages(docs: DataFrame, idCol: String, textCol: String,
                      cfg: Config, scope: CacheScope)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -128,17 +129,11 @@ object Curation {
     //    (shingles, bands, cluster iterations, anti-joins) and each
     //    re-execution would otherwise re-probe the bloom AND re-scan the
     //    store for the confirm join — measured 7× the whole pipeline's
-    //    cost at sf0.1 before this cache. Ownership passes to the caller's
-    //    scope (null → stays persisted, the same contract as the cluster
-    //    label checkpoint documented above).
+    //    cost at sf0.1 before this cache.
     val incoming = {
       val inc = incomingStage(extracted, textCol, cfg, scope)
       if (inc eq extracted) extracted
-      else {
-        val cached = inc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (scope != null) scope.own(cached)
-        cached
-      }
+      else inc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
     // 1. exact dedup: keep the min-id copy of each normalized text
@@ -202,14 +197,19 @@ object Curation {
   /** Surviving documents after the full pipeline. Output = input rows of the
     * survivors (all columns pass through; with `cfg.scrubPii` the text
     * column carries the masked form). Pass a [[CacheScope]] and close it
-    * after the consuming action to release every cached intermediate. */
+    * after the consuming actions to release every cached intermediate.
+    * Without one they are released after the first action, and with
+    * `cfg.history` the result is then single-consumption: the history
+    * bloom broadcast is destroyed with them (see [[Dedup.newAgainstHistory]]). */
   def curate(docs: DataFrame, idCol: String, textCol: String,
              cfg: Config = Config(), scope: CacheScope = null): DataFrame = {
-    val decon = decontamStage(stages(docs, idCol, textCol, cfg, scope)._6,
-      idCol, textCol, cfg)
-    if (cfg.scrubPii)
-      decon.withColumn(textCol, TextStats.scrubPii(col(textCol)))
-    else decon
+    val (extracted, incoming, _, _, _, afterQuality) =
+      stages(docs, idCol, textCol, cfg, scope)
+    val decon = decontamStage(afterQuality, idCol, textCol, cfg)
+    CacheScope.handOver(scope,
+      if (cfg.scrubPii) decon.withColumn(textCol, TextStats.scrubPii(col(textCol)))
+      else decon,
+      if (incoming eq extracted) null else incoming)
   }
 
   /** Per-stage funnel counts — the audit a curation run reports. The three
@@ -255,7 +255,8 @@ object Curation {
     // funnel reader keys on stable names.
     val rows = if (!cfg.scrubPii) withDecon
       else withDecon :+ ("5_scrubbed", withDecon.last._2)
-    rows.toDF("stage", "n_docs")
+    CacheScope.handOver(scope, rows.toDF("stage", "n_docs"),
+      if (incoming eq extracted) null else incoming)
   }
 
   /** Pairwise source-overlap matrix: for every pair of sources, how many

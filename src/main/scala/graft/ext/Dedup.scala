@@ -64,7 +64,7 @@ object Dedup {
 
   /** Distinct n-word shingles hashed to longs in one pass — the native
     * kernel of the fast MinHash path ([[expressions.HashedShinglesExpr]]).
-    * Bit-identical to [[hashedWordShinglesHof]] (asserted in NativeExprSpec):
+    * Bit-identical to its HOF twin (asserted in NativeExprSpec):
     * same join/distinct/hash semantics, minus two interpreted `transform`s,
     * an interpreted `array_distinct`, and per-shingle slice allocations. */
   def hashedWordShingles(text: Column, n: Int): Column =
@@ -77,11 +77,6 @@ object Dedup {
     GraftColumnBridge.column(expressions.HashedShinglesExpr(
       GraftColumnBridge.expression(words(text, tok)), n))
   }
-
-  /** Higher-order-function twin of [[hashedWordShingles]] — the portable
-    * reference implementation NativeExprSpec compares against. */
-  private[ext] def hashedWordShinglesHof(text: Column, n: Int): Column =
-    transform(wordShingles(text, n), s => xxhash64(s))
 
   /** Distinct character n-grams (for short/no-whitespace text). */
   def charShingles(text: Column, n: Int): Column = {
@@ -98,20 +93,13 @@ object Dedup {
     * (hex is lexicographic-comparable) avoids any integer-overflow semantics
     * an external oracle could disagree on. NULL element ⟺ empty shingle set.
     * Native one-pass expression ([[expressions.Md5MinHashExpr]]) —
-    * bit-identical to the k-fold twin [[minhashSignatureHof]] (asserted in
-    * NativeExprSpec), minus k interpreted traversals and k×n hex encodes. */
+    * bit-identical to the k-fold HOF twin (asserted in NativeExprSpec),
+    * minus k interpreted traversals and k×n hex encodes. */
   def minhashSignature(shingles: Column, k: Int): Column = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(expressions.Md5MinHashExpr(
       GraftColumnBridge.expression(shingles), k))
   }
-
-  /** Higher-order-function twin of [[minhashSignature]] — the portable
-    * reference implementation NativeExprSpec compares against. */
-  private[ext] def minhashSignatureHof(shingles: Column, k: Int): Column =
-    array((1 to k).map { j =>
-      array_min(transform(shingles, s => md5(concat(lit(s"$j:"), s))))
-    }: _*)
 
   /** PORTABLE md5 minhash signature as 60-bit longs: the [[minhashSignature]]
     * md5-string family with each per-seed minimum mapped to its first-15-hex
@@ -120,8 +108,8 @@ object Dedup {
     * strings order lexicographically = numerically), so the long array
     * restates externally while fitting the Array[Long] state shape the
     * streaming near-dup operator keeps per bucket. Native one-pass kernel
-    * ([[expressions.Md5MinHash60Expr]]), bit-identical to the HOF twin
-    * [[minhashSignature60Hof]] (NativeExprSpec). */
+    * ([[expressions.Md5MinHash60Expr]]), bit-identical to its HOF twin
+    * (NativeExprSpec). */
   def minhashSignature60(text: Column, shingleLen: Int, k: Int): Column =
     minhashSignature60(text, shingleLen, k, Tokenizer.Whitespace)
 
@@ -133,30 +121,15 @@ object Dedup {
       GraftColumnBridge.expression(wordShingles(text, shingleLen, tok)), k))
   }
 
-  /** Higher-order-function twin of [[minhashSignature60]] — the portable
-    * reference implementation NativeExprSpec compares against. */
-  private[ext] def minhashSignature60Hof(text: Column, shingleLen: Int, k: Int,
-                                         tok: Tokenizer = Tokenizer.Whitespace)
-      : Column =
-    transform(minhashSignatureHof(wordShingles(text, shingleLen, tok), k),
-      s => conv(substring(s, 1, 15), 16, 10).cast("long"))
-
   /** Fast-path signature (xxhash64-based, one long per seed). Native
     * one-pass expression ([[expressions.MinHashSigExpr]]) — bit-identical to
-    * the k-fold twin [[minhashSignatureFastHof]] (asserted in
-    * NativeExprSpec), minus k interpreted traversals of the shingle array. */
+    * the k-fold HOF twin (asserted in NativeExprSpec), minus k interpreted
+    * traversals of the shingle array. */
   def minhashSignatureFast(shingles: Column, k: Int): Column = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(expressions.MinHashSigExpr(
       GraftColumnBridge.expression(shingles), k))
   }
-
-  /** Higher-order-function twin of [[minhashSignatureFast]] — the portable
-    * reference implementation NativeExprSpec compares against. */
-  private[ext] def minhashSignatureFastHof(shingles: Column, k: Int): Column =
-    array((1 to k).map { j =>
-      array_min(transform(shingles, s => xxhash64(lit(j), s)))
-    }: _*)
 
   /** Exact duplicate groups keyed by a normalization fingerprint.
     * Returns (fingerprint, keep_id, n_copies): canonical survivor = min id.
@@ -438,14 +411,25 @@ object Dedup {
     * capping, dropped mega-buckets do not count toward the match total
     * (conservative: a capped bucket carries ~no similarity signal anyway).
     *
-    * `scope` (optional) takes ownership of the persisted bands frame — the
-    * returned pairs frame reads it lazily, so the caller closes the scope
-    * after the consuming action (see [[CacheScope]]). */
+    * The persisted bands (and hot-bucket) frames are handed to `scope`
+    * against the returned pairs frame (see [[CacheScope]]). */
   def lshCandidates(sigDf: DataFrame, idCol: String, sigCol: String,
                     bandRows: Int = 1, maxBucketSize: Int = Int.MaxValue,
                     scope: CacheScope = null,
                     hashBands: Boolean = false,
                     minBandMatches: Int = 1): DataFrame = {
+    val (out, caches) = lshCandidatePairs(sigDf, idCol, sigCol, bandRows,
+      maxBucketSize, hashBands, minBandMatches)
+    CacheScope.handOver(scope, out, caches: _*)
+  }
+
+  /** [[lshCandidates]]' pairs frame and the frames it persisted, which the
+    * entry point hands over. */
+  private def lshCandidatePairs(sigDf: DataFrame, idCol: String,
+                                sigCol: String, bandRows: Int,
+                                maxBucketSize: Int, hashBands: Boolean,
+                                minBandMatches: Int)
+      : (DataFrame, Seq[DataFrame]) = {
     // the AdaptiveBucket sentinel is resolved by nearDupPairs (which owns a
     // corpus-size count); here a non-positive cap would drop EVERY bucket
     require(maxBucketSize > 0,
@@ -474,15 +458,14 @@ object Dedup {
       .select(col(idCol), posexplode(bandArr))
       .toDF(idCol, "band", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(bands)
+    var hot: DataFrame = null
     val pruned =
       if (maxBucketSize == Int.MaxValue) bands
       else {
-        val hot = bands.groupBy(col("band"), col("v"))
+        hot = bands.groupBy(col("band"), col("v"))
           .agg(count(lit(1)).as("_bsz"))
           .where(col("_bsz") > maxBucketSize)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (scope != null) scope.own(hot)
         // one pass over the hot list yields the count AND the dropped-pair
         // upper bound Σ bsz·(bsz−1)/2 (pairs co-occurring ONLY in a dropped
         // bucket are the ones actually lost — this logs the ceiling), and
@@ -501,11 +484,13 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"))
-    if (minBandMatches <= 1) joined.distinct()
-    else joined.groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("_nb"))
-      .where(col("_nb") >= minBandMatches)
-      .select(col("a_id"), col("b_id"))
+    val out =
+      if (minBandMatches <= 1) joined.distinct()
+      else joined.groupBy(col("a_id"), col("b_id"))
+        .agg(count(lit(1)).as("_nb"))
+        .where(col("_nb") >= minBandMatches)
+        .select(col("a_id"), col("b_id"))
+    (out, Seq(bands, hot))
   }
 
   /** Exact Jaccard similarity of two array-set columns (as double). */
@@ -584,10 +569,9 @@ object Dedup {
       s"thresholdPpm out of (0, 1e6]: $thresholdPpm")
     require(sampleMod >= 1, s"sampleMod must be positive: $sampleMod")
     require(maxBucketSize >= 1, s"maxBucketSize must be positive: $maxBucketSize")
-    val par = df.sparkSession.sparkContext.defaultParallelism
     val sh = ensureParallelism(
       df.select(col(idCol), col(textCol))
-        .where(size(words(col(textCol), tok)) >= shingleLen), par)
+        .where(size(words(col(textCol), tok)) >= shingleLen))
       .select(col(idCol).cast("long").as("id"),
         array_distinct(wordShingles(col(textCol), shingleLen, tok)).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -615,8 +599,7 @@ object Dedup {
       .withColumn("cont_ppm",
         expr("(cast(inter AS bigint) * 1000000) div least(na, nb)"))
       .where(col("cont_ppm") >= thresholdPpm)
-    releaseAfterFirstAction(sh)
-    verified
+    CacheScope.handOver(null, verified, sh)
   }
 
   /** Near-duplicate pairs: MinHash(k seeds) LSH candidates, verified by
@@ -690,12 +673,18 @@ object Dedup {
       hashBands = true, minSigAgree = minSigAgree, tok = tok)
 
   /** Repartition only when the incoming frame has fewer partitions than the
-    * requested parallelism: a narrow input (one CSV file, a coalesced
-    * upstream) must be widened before per-row-heavy expression work, but a
-    * well-split input (thousands of parquet splits at scale) must NOT pay a
-    * gratuitous full exchange. */
-  private[ext] def ensureParallelism(df: DataFrame, par: Int): DataFrame =
+    * session's default parallelism: a narrow input (one CSV file, a
+    * coalesced upstream) must be widened before per-row-heavy expression
+    * work, but a well-split input (thousands of parquet splits at scale)
+    * must NOT pay a gratuitous full exchange. The served-store probes widen
+    * their store scan the same way: a small store compacts to a handful of
+    * files, and the probe's per-candidate work runs in the store scan's
+    * stage (the batch side broadcasts), so a 4-file store would pin a
+    * 32-core probe to 4 tasks. */
+  private[ext] def ensureParallelism(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
+  }
 
   private def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                            shingleLen: Int, numHashes: Int, threshold: Double,
@@ -705,7 +694,6 @@ object Dedup {
                            hashBands: Boolean = false,
                            minSigAgree: Int = 0,
                            tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
     // Pre-shingle filter on the RAW text (size(words) >= n ⟺ shingle set
     // non-empty): cheap enough to push to the scan, unlike a size(sh) > 0
     // filter, which Catalyst would rewrite into a full shingle recompute at
@@ -713,10 +701,9 @@ object Dedup {
     // shingle projection — and is a no-op for an already-well-split input.
     val sh = ensureParallelism(
       df.select(col(idCol), col(textCol))
-        .where(size(words(col(textCol), tok)) >= shingleLen), par)
+        .where(size(words(col(textCol), tok)) >= shingleLen))
       .select(col(idCol), shinglesOf(col(textCol), shingleLen).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(sh)
     // AdaptiveBucket resolves to c·√N here, where the count is a single
     // pass that materializes the shingle cache everything downstream reads
     require(maxBucketSize > 0 || maxBucketSize == AdaptiveBucket,
@@ -743,14 +730,9 @@ object Dedup {
     // every minhash. numHashes values per doc: far smaller than the shingles.
     val sig =
       if (!needSigJoin) sig0
-      else {
-        val p = sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (scope != null) scope.own(p)
-        p
-      }
-    val cand0 = lshCandidates(sig, idCol, "sig", bandRows, bucketCap, scope,
-      hashBands = hashBands,
-      minBandMatches = if (useBandCount) minSigAgree else 1)
+      else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (cand0, bandCaches) = lshCandidatePairs(sig, idCol, "sig", bandRows,
+      bucketCap, hashBands, if (useBandCount) minSigAgree else 1)
     val cand =
       if (!needSigJoin) cand0
       else cand0
@@ -761,7 +743,7 @@ object Dedup {
         .select(col("a_id"), col("b_id"))
     // Verify with one array_intersect per pair: |A∪B| = |A|+|B|-|A∩B| for
     // sets, so the (identical-valued) union array is never materialized.
-    cand
+    val out = cand
       .join(sh.select(col(idCol).as("a_id"), col("sh").as("sh_a"),
         size(col("sh")).as("na")), "a_id")
       .join(sh.select(col(idCol).as("b_id"), col("sh").as("sh_b"),
@@ -773,6 +755,8 @@ object Dedup {
         (col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
           .as("jaccard"))
       .where(col("jaccard") >= threshold)
+    CacheScope.handOver(scope, out,
+      Seq(sh, if (needSigJoin) sig else null) ++ bandCaches: _*)
   }
 
   /** Exact-verify routing for estimate-based candidate sources — the
@@ -788,14 +772,8 @@ object Dedup {
     * — the shingle computation is a scan-speed projection and the joins
     * shuffle on the id, so cost is O(corpus) + O(candidates), never
     * quadratic. The shingle frame is persisted because it feeds both join
-    * sides (without it the scan + shingle kernel runs twice). Cache
-    * lifetime: pass a [[CacheScope]] and close it after the consuming
-    * action for explicit control; with no scope the cache releases ITSELF
-    * after the first completed action that reads the result (a
-    * QueryExecutionListener — see [[releaseAfterFirstAction]]), so the
-    * default usage is leak-free in a long-lived session. Only re-consuming
-    * the result repeatedly warrants a scope (later actions recompute the
-    * shingles). */
+    * sides (without it the scan + shingle kernel runs twice); its lifetime
+    * follows [[CacheScope]]'s rule. */
   def verifyPairs(cands: DataFrame, corpus: DataFrame, idCol: String,
                   textCol: String, aCol: String = "a_id", bCol: String = "b_id",
                   shingleLen: Int = 3, threshold: Double = 0.5,
@@ -806,8 +784,7 @@ object Dedup {
       .select(col(idCol),
         hashedWordShingles(col(textCol), shingleLen, tok).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(sh) else releaseAfterFirstAction(sh)
-    cands
+    val out = cands
       .select(col(aCol), col(bCol)).distinct()
       .join(sh.select(col(idCol).as(aCol), col("sh").as("sh_a"),
         size(col("sh")).as("na")), aCol)
@@ -820,6 +797,7 @@ object Dedup {
         (col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
           .as("jaccard"))
       .where(col("jaccard") >= threshold)
+    CacheScope.handOver(scope, out, sh)
   }
 
   // ─────────────── suffix-array substring dedup (Lee et al. 2021) ────────
@@ -1025,8 +1003,7 @@ object Dedup {
         if (ranksRdd != null) ranksRdd.unpersist(false)
         throw t
     }
-    releaseRddAfterFirstAction(ranksRdd, ranks)
-    ranks
+    CacheScope.handOverRdds(null, ranks, ranksRdd)
   }
 
   /** (gpos, rank) view of [[prefixDoubleRanksPackedState]] — the packed
@@ -1074,8 +1051,7 @@ object Dedup {
         if (ranksRdd != null) ranksRdd.unpersist(false)
         throw t
     }
-    releaseRddAfterFirstAction(ranksRdd, ranks)
-    ranks
+    CacheScope.handOverRdds(null, ranks, ranksRdd)
   }
 
   /** Per-call state for the checkpoint-iteration discipline shared by the
@@ -1119,39 +1095,6 @@ object Dedup {
     def releasePendingUnless(owned: IRdd*): Unit =
       if (pending != null && !owned.exists(_ eq pending))
         pending.unpersist(false)
-  }
-
-  /** RDD form of [[releaseAfterFirstAction]]: the checkpoint-iteration
-    * operators persist raw InternalRow RDDs (not DataFrames), which
-    * `df.unpersist` cannot release — this listener unpersists the RDD once
-    * the first Dataset action containing `trigger`'s plan completes. */
-  private[ext] def releaseRddAfterFirstAction(
-      rdd: org.apache.spark.rdd.RDD[_], trigger: DataFrame): Unit =
-    onFirstAction(trigger)(rdd.unpersist(false))
-
-  /** The one listener behind [[releaseAfterFirstAction]],
-    * [[releaseRddAfterFirstAction]] and [[destroyAfterFirstAction]]: run
-    * `release` exactly once, when the first Dataset action containing
-    * `trigger`'s plan completes (success or failure), then unregister. */
-  private def onFirstAction(trigger: DataFrame)(release: => Unit): Unit = {
-    import org.apache.spark.sql.execution.QueryExecution
-    val spark = trigger.sparkSession
-    val target = trigger.queryExecution.analyzed
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      // `analyzed` is pre-cache-substitution, so the trigger frame's plan
-      // appears verbatim as a subtree of any consuming query.
-      private def maybeRelease(qe: QueryExecution): Unit =
-        if (qe.analyzed.exists(_.sameResult(target)) &&
-            released.compareAndSet(false, true)) {
-          release
-          spark.listenerManager.unregister(this)
-        }
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = maybeRelease(qe)
-    })
   }
 
   /** SUBSTRING-level dedup at ARBITRARY offsets (Lee et al. 2021,
@@ -1324,34 +1267,8 @@ object Dedup {
       .agg(min(col("start")).as("span_start"),
         (max(col("end")) - min(col("start"))).as("span_len"))
       .select(col("doc_id"), col("span_start"), col("span_len"))
-    releaseAfterFirstAction(chars, out)
-    out
+    CacheScope.handOver(null, out, chars)
   }
-
-  /** Self-releasing cache for scope-less callers: unpersist `df` as soon as
-    * the FIRST action that reads it completes (success or failure), via a
-    * session QueryExecutionListener that matches the cached frame's analyzed
-    * plan as a subtree of each finished query. This makes the default usage
-    * of a persisting operator leak-free in a long-lived session — the
-    * opt-in [[CacheScope]] remains the tool for callers that consume the
-    * result MORE than once (after self-release, later actions recompute
-    * from lineage: correct, just uncached). The listener fires on the
-    * session's async listener bus, so release is eventually-after-action —
-    * a second action racing the release at worst recomputes. */
-  private[ext] def releaseAfterFirstAction(df: DataFrame): Unit =
-    releaseAfterFirstAction(df, df)
-
-  /** Two-frame form: unpersist `df` once the first action containing
-    * `trigger`'s plan completes. Operators that run their OWN eager jobs
-    * over the cached frame before returning (a sizing count, a centroid
-    * fit) must watch the RETURNED plan, not the cached one — the async
-    * listener bus may still be delivering the internal job's completion
-    * event when the listener registers, and a listener keyed on the cached
-    * subtree would treat that stale event as the caller's consumption and
-    * evict the cache early. */
-  private[ext] def releaseAfterFirstAction(df: DataFrame,
-                                           trigger: DataFrame): Unit =
-    onFirstAction(trigger)(df.unpersist(false))
 
   /** n-bit SimHash over pre-hashed tokens: bit i is set iff the sum over
     * tokens of ±1 (sign of hash-bit i) is positive. Near-dups then cluster
@@ -1359,22 +1276,13 @@ object Dedup {
     * must carry at least `bits` independent bits.
     * Native one-pass codegen'd expression
     * ([[graft.ext.expressions.SimHashExpr]]); bit-identical to the
-    * per-bit-fold twin [[simhashNHof]] (asserted in NativeExprSpec), minus
+    * per-bit-fold HOF twin (asserted in NativeExprSpec), minus
     * `bits` interpreted lambda folds per row. */
   private def simhashN(hashes: Column, bits: Int): Column = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(graft.ext.expressions.SimHashExpr(
       GraftColumnBridge.expression(hashes), bits))
   }
-
-  /** Higher-order-function twin of [[simhashN]] — the portable reference
-    * implementation NativeExprSpec compares against. */
-  private[ext] def simhashNHof(hashes: Column, bits: Int): Column =
-    (0 until bits).map { i =>
-      val bitSum = aggregate(hashes, lit(0L),
-        (acc, h) => acc + (shiftright(h, i).bitwiseAND(lit(1L)) * 2 - 1))
-      when(bitSum > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** 16-bit SimHash (see [[simhashN]]) — compact and cheap; collision-prone
     * past ~10⁴ docs, where [[simhashWideOf]] is the scale path. */
@@ -1419,7 +1327,6 @@ object Dedup {
     // expression (60 md5+fold terms per doc for the wide path) is computed
     // twice plus a double source scan (same pathology nearDupPairs guards)
     val f = fp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(f)
     val banded = f.select(col(idCol), col("simhash"),
         fpBands(col("simhash"), nBands, bandBits))
       .toDF(idCol, "simhash", "band", "v")
@@ -1433,12 +1340,7 @@ object Dedup {
         hamming(col("fp_a"), col("fp_b")).as("hamming"))
       .where(col("hamming") <= maxHamming)
       .distinct() // a pair can agree on several bands
-    // scope-less callers get the self-releasing contract every other
-    // persisting operator honors: without it, each call in a long-lived
-    // session (the bench loops the perceptual-dedup rows per iteration)
-    // strands one MEMORY_AND_DISK fingerprint frame forever
-    if (scope == null) releaseAfterFirstAction(f, out)
-    out
+    CacheScope.handOver(scope, out, f)
   }
 
   /** 64-bit Hamming near-dup pairs — the PERCEPTUAL-FINGERPRINT join
@@ -1736,10 +1638,9 @@ object Dedup {
         cp.releasePendingUnless(edgeRdd)
         throw t
     }
-    val labels = edges.select(col("x").as("id"), col("y").as("rep"))
+    CacheScope.handOverCheckpoint(scope, edgeRdd)
+    edges.select(col("x").as("id"), col("y").as("rep"))
       .unionByName(edges.select(col("y").as("id"), col("y").as("rep")).distinct())
-    if (scope != null) scope.ownRdds(Seq(edgeRdd))
-    labels
   }
 
   /** Quality-priority survivor selection: given duplicate-cluster labels
@@ -1890,9 +1791,7 @@ object Dedup {
         (col("_sab") - col("inter_cnt")).as("union_cnt"))
       .where(lit(thresholdDen) * col("inter_cnt") >=
         lit(thresholdNum) * col("union_cnt"))
-    if (scope != null) scope.own(ordered)
-    else releaseAfterFirstAction(ordered, out)
-    out
+    CacheScope.handOver(scope, out, ordered)
   }
 
   /** Incremental dedup of a new batch against a historical store, EXACT
@@ -1967,9 +1866,7 @@ object Dedup {
     // the md5-string signature projection is the CPU (numHashes passes ×
     // md5 per shingle) and a narrow input (one parquet split) would run it
     // in a single task — widen first, the nearDupPairs discipline
-    ensureParallelism(
-        df.where(size(words(col(textCol), tok)) >= shingleLen),
-        df.sparkSession.sparkContext.defaultParallelism)
+    ensureParallelism(df.where(size(words(col(textCol), tok)) >= shingleLen))
       .select(col(idCol).as("id"),
         minhashSignature60(col(textCol), shingleLen, numHashes, tok).as("sig"))
 
@@ -2034,9 +1931,8 @@ object Dedup {
     val b = bandedSig(
       minhashStore(batch, idCol, textCol, shingleLen, numHashes, tok), "batch",
       numHashes, bandRows)
-    val out = bandedAgreementJoin(b, sCapped, numHashes, threshold)
-    if (maxBucketSize == AdaptiveBucket) releaseAfterFirstAction(storeP, out)
-    out
+    CacheScope.handOver(null, bandedAgreementJoin(b, sCapped, numHashes,
+      threshold), if (maxBucketSize == AdaptiveBucket) storeP else null)
   }
 
   /** Band-explode a signature frame (id, sig) into one row per band:
@@ -2060,7 +1956,7 @@ object Dedup {
   private def bandedAgreementJoin(batchBanded: DataFrame, storeBanded: DataFrame,
                                   numHashes: Int, threshold: Double): DataFrame = {
     // native positional-agreement kernel: the zip_with + aggregate HOF twin
-    // (kept below as [[sigAgreeHof]] for the bit-identity spec) is
+    // (kept in the specs for the bit-identity check) is
     // CodegenFallback and ran the lambda interpreter once per shared-band
     // candidate — the probe stage's measured cost at high candidate counts
     val agree = sigAgree(col("batch_sig"), col("store_sig"))
@@ -2077,13 +1973,6 @@ object Dedup {
     GraftColumnBridge.column(graft.ext.expressions.SigAgreeExpr(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
-
-  /** The HOF reference law [[graft.ext.expressions.SigAgreeExpr]] replaces
-    * in [[bandedAgreementJoin]] — kept for the bit-identity spec. */
-  private[ext] def sigAgreeHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v)
 
   /** MATERIALIZED capped band-representative store — the served LSH-bucket
     * state as data, built ONCE: [[minhashStore]]'s signatures band-exploded
@@ -2320,23 +2209,10 @@ object Dedup {
                                   threshold: Double = 0.5,
                                   broadcastBatch: Boolean = true): DataFrame = {
     val (shingleLen, numHashes, bandRows, _, tok) = bandedGeometry(spark, dir)
-    nearDupAgainstBandedStore(servedScan(spark, dir), batch, idCol, textCol,
+    nearDupAgainstBandedStore(ensureParallelism(spark.read.parquet(dir)),
+      batch, idCol, textCol,
       shingleLen, numHashes, threshold, bandRows, broadcastBatch, tok)
   }
-
-  /** Served-store scan with read-side parallelism widening: a small store
-    * compacts to a handful of parquet files (§6-correct layout for its
-    * size), but the probe's heavy per-candidate work runs in the STORE
-    * scan's stage (the batch side broadcasts), so a 4-file store pins a
-    * 32-core probe to 4 tasks — the measured anti-scaling of the served
-    * probe rows. [[ensureParallelism]] widens only when the scan has fewer
-    * splits than the session's parallelism: a production-sized store
-    * (thousands of splits) passes through untouched and the no-store-
-    * shuffle design point is preserved where it matters. */
-  private[ext] def servedScan(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): DataFrame =
-    ensureParallelism(spark.read.parquet(dir),
-      spark.sparkContext.defaultParallelism)
 
   /** [[nearDupAgainstBandedStoreAt]] with the caller supplying the
     * TOKENIZER (geometry still comes from the sidecar): for [[Tokenizer
@@ -2351,7 +2227,8 @@ object Dedup {
       broadcastBatch: Boolean = true): DataFrame = {
     val (shingleLen, numHashes, bandRows, _, t) =
       bandedGeometry(spark, dir, Some(tok))
-    nearDupAgainstBandedStore(servedScan(spark, dir), batch, idCol, textCol,
+    nearDupAgainstBandedStore(ensureParallelism(spark.read.parquet(dir)),
+      batch, idCol, textCol,
       shingleLen, numHashes, threshold, bandRows, broadcastBatch, t)
   }
 
@@ -2450,22 +2327,7 @@ object Dedup {
     val confirmed = hist
       .join(broadcast(candidates), Seq(keyCol), "left_semi")
       .select(col(keyCol)).distinct()
-    val result = batch.join(broadcast(confirmed), Seq(keyCol), "left_anti")
-    if (scope != null) scope.ownBroadcast(blobBc)
-    else destroyAfterFirstAction(result, blobBc)
-    result
+    CacheScope.handOverBroadcast(scope,
+      batch.join(broadcast(confirmed), Seq(keyCol), "left_anti"), blobBc)
   }
-
-  /** Broadcast twin of [[releaseAfterFirstAction]]: destroy `bc` as soon as
-    * the first action consuming `result` completes (success or failure).
-    * Destroyed broadcasts do NOT recompute — callers needing multiple
-    * consumption own the broadcast via [[CacheScope.ownBroadcast]] instead.
-    * Shared limitation of the listener pattern (frames and broadcasts
-    * alike): a result that is built but NEVER acted on keeps its listener
-    * registered and its resource alive for the session — callers that may
-    * abandon results on error paths should use a [[CacheScope]], whose
-    * `close()` releases unconditionally. */
-  private[ext] def destroyAfterFirstAction(
-      result: DataFrame, bc: org.apache.spark.broadcast.Broadcast[_]): Unit =
-    onFirstAction(result)(bc.destroy())
 }

@@ -205,9 +205,6 @@ object Dsir {
         Row.fromSeq(Seq(i + 1L, r.get(0)))
       }, schema)
     val kept = ranked.where(col("_rk") <= keep).select(col(idCol))
-    val out = df.join(kept, Seq(idCol), "left_semi")
-    if (scope != null) scope.own(scores)
-    else Dedup.releaseAfterFirstAction(scores, out)
-    out
+    CacheScope.handOver(scope, df.join(kept, Seq(idCol), "left_semi"), scores)
   }
 }

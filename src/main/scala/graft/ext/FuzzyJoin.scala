@@ -55,18 +55,15 @@ object FuzzyJoin {
               tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
     require(numHashes >= 1, s"numHashes must be >= 1: $numHashes")
     require(maxBucketSize > 0, s"maxBucketSize must be positive: $maxBucketSize")
-    val shL = shingled(left, leftId, leftText, shingleLen, scope, tok)
-    val shR = shingled(right, rightId, rightText, shingleLen, scope, tok)
+    val shL = shingled(left, leftId, leftText, shingleLen, tok)
+    val shR = shingled(right, rightId, rightText, shingleLen, tok)
     val bL = banded(shL, numHashes).withColumnRenamed("_fj_id", "_fj_l")
     val bR = banded(shR, numHashes).withColumnRenamed("_fj_id", "_fj_r")
     // One bucket = one (band, v); candidates are generated ONLY inside a
     // bucket ([[cappedCandidates]]), so the join is a plain equi-join on
     // the band key — the similarity join never degenerates to all-pairs.
     val cand = cappedCandidates(bL, bR, maxBucketSize)
-    val out = verifyPairs(cand, shL, shR, threshold)
-    Dedup.releaseAfterFirstAction(shL)
-    Dedup.releaseAfterFirstAction(shR)
-    out
+    CacheScope.handOver(scope, verifyPairs(cand, shL, shR, threshold), shL, shR)
   }
 
   /** Incremental linkage at the continuous-ingest design point: the
@@ -148,13 +145,9 @@ object FuzzyJoin {
                           catalogText: String,
                           shingleLen: Int, tok: Tokenizer,
                           threshold: Double, scope: CacheScope): DataFrame = {
-    val shL = shingled(batch, batchId, batchText, shingleLen, scope, tok)
-    val shR = shingled(catalog, catalogId, catalogText, shingleLen, scope,
-      tok)
-    val out = verifyPairs(cand, shL, shR, threshold)
-    Dedup.releaseAfterFirstAction(shL)
-    Dedup.releaseAfterFirstAction(shR)
-    out
+    val shL = shingled(batch, batchId, batchText, shingleLen, tok)
+    val shR = shingled(catalog, catalogId, catalogText, shingleLen, tok)
+    CacheScope.handOver(scope, verifyPairs(cand, shL, shR, threshold), shL, shR)
   }
 
   /** Top-1 linkage against a SERVED catalog store: each batch record's
@@ -283,8 +276,8 @@ object FuzzyJoin {
     // Jaccard over n-gram shingles would need shingle-level df, which is
     // the same code with a different unit; the token unit is the linkage
     // standard (entity strings are short).
-    val shL = shingled(left, leftId, leftText, 1, scope, tok)
-    val shR = shingled(right, rightId, rightText, 1, scope, tok)
+    val shL = shingled(left, leftId, leftText, 1, tok)
+    val shR = shingled(right, rightId, rightText, 1, tok)
     // df over entity-token incidences (sets per entity, so df = #entities
     // containing t across both tables). PERSISTED: the frame feeds up to
     // three consumers (the rare-token filter, the verify's weight lookup,
@@ -296,7 +289,6 @@ object FuzzyJoin {
       .unionByName(shR.select(explode(col("sh")).as("_fj_t")))
       .groupBy("_fj_t").agg(count(lit(1)).as("_fj_df"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(vocab)
     // The banded channel samples UNWEIGHTED Jaccard unless
     // `weightedCandidates` = K > 0 switches it to a WEIGHTED sampler by
     // integer replication: token t expands into ceil(K/df(t)) virtual
@@ -348,10 +340,7 @@ object FuzzyJoin {
     val out = weightedVerify(cand, shL, shR,
       vocab.select(col("_fj_t"), (lit(1.0) / col("_fj_df")).as("_fj_w")),
       threshold)
-    Dedup.releaseAfterFirstAction(shL)
-    Dedup.releaseAfterFirstAction(shR)
-    if (scope == null) Dedup.releaseAfterFirstAction(vocab, out)
-    out
+    CacheScope.handOver(scope, out, shL, shR, vocab)
   }
 
   /** The weighted verify shared by [[weightedLinkage]] and
@@ -376,7 +365,7 @@ object FuzzyJoin {
     // entity, and each candidate pair is scored by ONE native sorted-merge
     // projection ([[graft.ext.expressions.WJaccardMergeExpr]]) — no
     // per-pair explode, no pair-level aggregation. Bit-identity with the
-    // HOF fold law is pinned by [[wjaccardHofReference]]/FuzzyJoinSpec.
+    // HOF fold law is pinned by NativeExprSpec and FuzzyJoinSpec.
     def preWeighted(sh: DataFrame, idOut: String, out: String): DataFrame =
       sh.select(col("_fj_id"), explode(col("sh")).as("_fj_t"))
         .join(broadcast(weights), Seq("_fj_t"), "left_outer")
@@ -441,22 +430,6 @@ object FuzzyJoin {
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
 
-  /** The HOF reference law [[graft.ext.expressions.WJaccardMergeExpr]]
-    * stands in for inside [[weightedVerify]] — kept for the bit-identity
-    * spec: union entries (t, w, b = on both sides) sorted by token, then
-    * two strict left folds from 0.0 in token order. Inputs are the two
-    * per-entity token arrays plus the weight lookup applied per union
-    * token (absent → 1.0), exactly the pre-kernel formulation. */
-  private[ext] def wjaccardHofReference(shLArr: Column, shRArr: Column,
-                                        wOf: Column => Column): Column = {
-    val union = array_sort(array_union(shLArr, shRArr))
-    val es = transform(union, t => struct(t.as("t"), wOf(t).as("w"),
-      (array_contains(shLArr, t) && array_contains(shRArr, t)).as("b")))
-    val sumW = (a: Column) => aggregate(a, lit(0.0),
-      (acc, e) => acc + e.getField("w"))
-    sumW(filter(es, e => e.getField("b"))) / sumW(es)
-  }
-
   /** `(band, v, <outCol>)` rows of the integer-replication WEIGHTED
     * sampler signature ([[weightedLinkage]]'s `weightedCandidates` law):
     * each token expands into ceil(quantK / df) virtual tokens "t#i" from
@@ -516,7 +489,7 @@ object FuzzyJoin {
     require(quantK >= 1, s"quantK must be >= 1: $quantK")
     require(cap > 0, s"cap must be positive: $cap")
     val spark = catalog.sparkSession
-    val sh = shingled(catalog, catalogId, catalogText, 1, null, tok)
+    val sh = shingled(catalog, catalogId, catalogText, 1, tok)
     val vocab = sh.select(explode(col("sh")).as("_fj_t"))
       .groupBy("_fj_t").agg(count(lit(1)).as("_fj_df"))
     val banded0 = weightedBandedRows(sh, vocab, quantK, numHashes,
@@ -570,21 +543,19 @@ object FuzzyJoin {
     val tok = Tokenizer.fromIdAt(spark, storeDir, f("tokenizer"))
     val vocab = spark.read.parquet(s"$storeDir/$WeightedVocabDir")
       .select(col("t").as("_fj_t"), col("df").as("_fj_df"))
-    val shB = shingled(batch, batchId, batchText, 1, scope, tok)
+    val shB = shingled(batch, batchId, batchText, 1, tok)
     val bb = weightedBandedRows(shB, vocab, quantK, numHashes, "_fj_l")
-    // read-side widening for small stores (Dedup.servedScan's rationale)
-    val store = Dedup.servedScan(spark, storeDir)
+    // read-side widening for small stores (see Dedup.ensureParallelism)
+    val store = Dedup.ensureParallelism(spark.read.parquet(storeDir))
     val cand =
       (if (broadcastBatch) store.join(broadcast(bb), Seq("band", "v"))
        else store.join(bb, Seq("band", "v")))
         .select(col("_fj_l"), col("store_id").as("_fj_r")).distinct()
-    val shC = shingled(catalog, catalogId, catalogText, 1, scope, tok)
+    val shC = shingled(catalog, catalogId, catalogText, 1, tok)
     val out = weightedVerifySparse(cand, shB, shC,
       vocab.select(col("_fj_t"), (lit(1.0) / col("_fj_df")).as("_fj_w")),
       threshold)
-    Dedup.releaseAfterFirstAction(shB)
-    Dedup.releaseAfterFirstAction(shC)
-    out
+    CacheScope.handOver(scope, out, shB, shC)
   }
 
   /** Candidate pairs from the banded frames under the joint bucket cap —
@@ -743,20 +714,16 @@ object FuzzyJoin {
   /** Shared per-side prep: (id, distinct shingle set), rows with fewer
     * tokens than the shingle length dropped (their shingle set is empty —
     * they can never match), persisted because the frame feeds both the
-    * signature projection and the exact-verify join. */
+    * signature projection and the exact-verify join. The entry point hands
+    * the cache over against the frame it returns. */
   private def shingled(df: DataFrame, idCol: String, textCol: String,
-                       shingleLen: Int, scope: CacheScope,
-                       tok: Tokenizer): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val sh = Dedup.ensureParallelism(
+                       shingleLen: Int, tok: Tokenizer): DataFrame =
+    Dedup.ensureParallelism(
       df.select(col(idCol), col(textCol))
-        .where(size(Dedup.words(col(textCol), tok)) >= shingleLen), par)
+        .where(size(Dedup.words(col(textCol), tok)) >= shingleLen))
       .select(col(idCol).as("_fj_id"),
         Dedup.wordShingles(col(textCol), shingleLen, tok).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(sh)
-    sh
-  }
 
   /** (band, v, id) rows: band b carries the b-th md5-min signature value.
     * bandRows is fixed at 1 — with the portable md5-string family each

@@ -86,13 +86,7 @@ object Graph {
           (base + (lit(dampNum) * coalesce(col("in_sum"), lit(0L)))
             .divLong(lit(dampDen))).as("rank"))
     }
-    val out = rank
-    if (scope != null) { scope.own(ewd); scope.own(nodes) }
-    else {
-      Dedup.releaseAfterFirstAction(ewd, out)
-      Dedup.releaseAfterFirstAction(nodes, out)
-    }
-    out
+    CacheScope.handOver(scope, rank, ewd, nodes)
   }
 
   /** EXACT triangle count via the degree-ordered wedge join (the MapReduce-
@@ -139,9 +133,7 @@ object Graph {
       .crossJoin(und.agg(count(lit(1)).as("n_edges")))
       .crossJoin(closed.agg(count(lit(1)).as("n_wedges"),
         count(col("_hit")).as("n_triangles")))
-    Dedup.releaseAfterFirstAction(und, out)
-    Dedup.releaseAfterFirstAction(oriented, out)
-    out
+    CacheScope.handOver(null, out, und, oriented)
   }
 
 }

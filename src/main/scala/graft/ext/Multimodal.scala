@@ -1521,10 +1521,8 @@ object Multimodal {
       s"banded candidates are exact only for maxHamming < 8 bands, got $maxHamming")
     // the frame-hash frame feeds the banded join (twice) AND the per-clip
     // frame counts — persist it, or an upstream decode re-runs per
-    // consumer (the recompute pathology bandedHammingPairs guards); the
-    // scope-less default self-releases after the first action
+    // consumer (the recompute pathology bandedHammingPairs guards)
     val fh = frameHashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(fh)
     val banded = fh.select(col("asset_id"), col("frame_no"),
         col("dhash"),
         Dedup.fpBands(col("dhash"), 8, 8).as(Seq("band", "v")))
@@ -1550,8 +1548,7 @@ object Multimodal {
         (col("n_matched").cast("double") /
           least(col("_na"), col("_nb")).cast("double")).as("matched_frac"))
       .where(col("matched_frac") >= minFrac)
-    if (scope == null) graft.ext.Dedup.releaseAfterFirstAction(fh, out)
-    out
+    CacheScope.handOver(scope, out, fh)
   }
 
   /** SHIFT-INVARIANT clip near-dup — the trimmed-copy detector
@@ -1581,7 +1578,6 @@ object Multimodal {
     // both join sides read the frame hashes — persist, or an upstream
     // decode runs twice (see videoNearDupPairs)
     val fh = frameHashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(fh)
     val banded = fh.select(col(idCol), col(posCol), col(fpCol),
         Dedup.fpBands(col(fpCol), 8, 8).as(Seq("band", "v")))
     val a = banded.select(col("band"), col("v"), col(idCol).as("a_id"),
@@ -1606,8 +1602,7 @@ object Multimodal {
         (-col("_best").getField("_negoff")).cast("int").as("offset"),
         col("_best").getField("n_matched").as("n_matched"))
       .where(col("n_matched") >= minMatched)
-    if (scope == null) graft.ext.Dedup.releaseAfterFirstAction(fh, out)
-    out
+    CacheScope.handOver(scope, out, fh)
   }
 
   /** The COMPOSED image-dedup recipe — decode → perceptual hash → banded
@@ -1616,7 +1611,7 @@ object Multimodal {
     * own rep) and a survivor flag. This is the cluster-RESOLUTION step
     * pairwise dedup forgets: A≈B and B≈C must collapse to ONE survivor.
     * The fingerprint frame is persisted across its three consumers (pair
-    * join sides + final census join) and self-released scope-less. */
+    * join sides + final census join). */
   def imageDedupSurvivors(assets: Dataset[RawAsset], maxHamming: Int = 6,
                           scope: CacheScope = null): DataFrame = {
     // the DECODED hash seam: container-sniffed PNG/JPEG/P6, so the recipe
@@ -1625,7 +1620,6 @@ object Multimodal {
     val fp = imageDHashDecoded(assets).toDF()
       .select(col("asset_id"), col("dhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(fp)
     val pairs = graft.ext.Dedup.hammingPairs64(fp, "asset_id", "dhash",
       maxHamming, scope)
     // the dhash graph chains (noise-twin links compose across scenes —
@@ -1639,8 +1633,7 @@ object Multimodal {
         coalesce(col("rep"), col("asset_id")).as("rep"),
         (coalesce(col("rep"), col("asset_id")) === col("asset_id"))
           .cast("int").as("survivor"))
-    if (scope == null) graft.ext.Dedup.releaseAfterFirstAction(fp, out)
-    out
+    CacheScope.handOver(scope, out, fp)
   }
 
   /** The FULL LAION-shaped ingest loop, end to end: WebDataset tar walk →

@@ -27,17 +27,13 @@ object Similarity {
 
   /** Dot product as a strict left fold in index order — native codegen'd
     * expression ([[graft.ext.expressions.DotProductExpr]]); bit-identical to
-    * [[dotHof]] (same op order), minus the lambda-interpreter cost. */
+    * its HOF twin (same op order; NativeExprSpec), minus the
+    * lambda-interpreter cost. */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(graft.ext.expressions.DotProductExpr(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
-
-  /** Higher-order-function twin of [[dot]] (kept as the portable reference
-    * implementation; NativeExprSpec asserts bitwise equality). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -164,9 +160,7 @@ object Similarity {
       .where(col("fr") === 1 && col("br") === 1 &&
         col("margin") >= minMargin)
       .drop("fr", "br")
-    Dedup.releaseAfterFirstAction(f, out)
-    Dedup.releaseAfterFirstAction(b, out)
-    out
+    CacheScope.handOver(null, out, f, b)
   }
 
   /** Brute-force bitext mining between two embedding corpora (e.g. the
@@ -318,10 +312,7 @@ object Similarity {
       .select(col("query_id"), col("a"), col("b"),
         cosine(col("va"), col("vb")).as("sim"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = mmrSelect(cands, sims, kSel)
-    Dedup.releaseAfterFirstAction(cands, out)
-    Dedup.releaseAfterFirstAction(sims, out)
-    out
+    CacheScope.handOver(null, mmrSelect(cands, sims, kSel), cands, sims)
   }
 
   /** Symmetric per-vector int8 quantization: code_i = floor(x_i·127/maxabs
@@ -339,22 +330,11 @@ object Similarity {
       GraftColumnBridge.expression(v)))
   }
 
-  /** Higher-order-function twin of [[quantizeInt8]] — three CodegenFallback
-    * HOFs per row, kept as the portable reference (NativeExprSpec asserts
-    * bit-equality); the native one-pass expression replaced it on the scan
-    * path, where the lambda interpreter was the measured bottleneck. */
-  def quantizeInt8Hof(v: Column): Column = {
-    val maxabs = array_max(transform(v, x => abs(x)))
-    when(maxabs === lit(0.0), transform(v, _ => lit(0L)))
-      .otherwise(transform(v,
-        x => floor(x * lit(127.0) / maxabs + lit(0.5)).cast("long")))
-  }
-
   /** Integer dot product of two code arrays — exact (codes ≤ 127, 64 dims
     * ⇒ ≪ 2^63), so unlike float dots the reduction order is irrelevant and
     * the value is trivially engine-identical. Native codegen'd expression
-    * ([[graft.ext.expressions.IntDotExpr]]); [[intDotHof]] is the portable
-    * reference twin (NativeExprSpec asserts equality). Measured honestly
+    * ([[graft.ext.expressions.IntDotExpr]]); NativeExprSpec asserts it
+    * equal to the portable HOF twin. Measured honestly
     * (10× sf0.1): the fold alone was a modest win — the 4.5× gap on the
     * int8 scan was the THREE-HOF quantizer, fixed by
     * [[graft.ext.expressions.QuantizeInt8Expr]]; with both native,
@@ -365,10 +345,6 @@ object Similarity {
     GraftColumnBridge.column(graft.ext.expressions.IntDotExpr(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
-
-  /** Higher-order-function twin of [[intDot]]. */
-  def intDotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
   /** Brute-force cosine top-k over int8-QUANTIZED vectors: the integer-dot
     * cosine of the code arrays (norms precomputed per side). Scores are a
@@ -594,8 +570,7 @@ object Similarity {
     val out = qd.select(col("vec_id"),
       nearestCell(col("qd"), centLit).as("cell"),
       nearestCellScore(col("qd"), centLit).as("score"))
-    Dedup.releaseAfterFirstAction(qd, out)
-    out
+    CacheScope.handOver(null, out, qd)
   }
 
   /** Farthest-point sampling (greedy k-center, Gonzalez 1985) — the
@@ -1098,15 +1073,7 @@ object Similarity {
       .join(touched, Seq("id"), "left_anti")
       .unionByName(patched)
       .unionByName(newEdges)
-    if (newEdgesPersisted != null) {
-      if (scope != null) scope.own(newEdgesPersisted)
-      else Dedup.releaseAfterFirstAction(newEdgesPersisted, out)
-    }
-    if (batchPersisted != null) {
-      if (scope != null) scope.own(batchPersisted)
-      else Dedup.releaseAfterFirstAction(batchPersisted, out)
-    }
-    out
+    CacheScope.handOver(scope, out, newEdgesPersisted, batchPersisted)
     } catch {
       case t: Throwable =>
         if (batchPersisted != null) batchPersisted.unpersist(blocking = false): Unit
@@ -1546,19 +1513,7 @@ object Similarity {
     val out = TopK.topKPerKey(beamScored(c, q)(frontier),
         "query_id", "score", "_gid", k)
       .toDF("query_id", "rank", "id", "score")
-    if (scope != null) {
-      scope.own(frontier); scope.own(c)
-      if (qPersisted != null) scope.own(qPersisted)
-    } else {
-      // trigger = out, NOT frontier: the fallback cut just ran count() on
-      // the frontier, and a listener keyed on it could consume that stale
-      // event and evict before the caller's first action (the 2-arg form's
-      // documented race — c one line below has the same shape)
-      Dedup.releaseAfterFirstAction(frontier, out)
-      Dedup.releaseAfterFirstAction(c, out)
-      if (qPersisted != null) Dedup.releaseAfterFirstAction(qPersisted, out)
-    }
-    out
+    CacheScope.handOver(scope, out, frontier, c, qPersisted)
     } catch {
       case t: Throwable =>
         c.unpersist(): Unit
@@ -1938,15 +1893,7 @@ object Similarity {
     val out = TopK.topKPerKey(beamScored(cAll.select("_gid", "cv"), q)(frontier),
         "query_id", "score", "_gid", k)
       .toDF("query_id", "rank", "id", "score")
-    if (scope != null) {
-      scope.own(frontier); scope.own(cAll)
-      if (qPersisted != null) scope.own(qPersisted)
-    } else {
-      Dedup.releaseAfterFirstAction(frontier, out)
-      Dedup.releaseAfterFirstAction(cAll, out)
-      if (qPersisted != null) Dedup.releaseAfterFirstAction(qPersisted, out)
-    }
-    out
+    CacheScope.handOver(scope, out, frontier, cAll, qPersisted)
     } catch {
       case t: Throwable =>
         cAll.unpersist(): Unit
@@ -1996,8 +1943,7 @@ object Similarity {
           .select(lit(l).as("level"), col("id"), col("rank"),
             col("nbr_id"), col("score"))
       }.reduce(_ unionByName _)
-      Dedup.releaseAfterFirstAction(c, out)
-      out
+      CacheScope.handOver(null, out, c)
     } catch { case t: Throwable => c.unpersist(): Unit; throw t }
   }
 
@@ -2076,15 +2022,7 @@ object Similarity {
           Seq("_gid"), "left_anti")
       val out = TopK.topKPerKey(cand, "query_id", "score", "_gid", k)
         .toDF("query_id", "rank", "id", "score")
-      if (scope != null) {
-        scope.own(frontier); scope.own(cAll)
-        if (qPersisted != null) scope.own(qPersisted)
-      } else {
-        Dedup.releaseAfterFirstAction(frontier, out)
-        Dedup.releaseAfterFirstAction(cAll, out)
-        if (qPersisted != null) Dedup.releaseAfterFirstAction(qPersisted, out)
-      }
-      out
+      CacheScope.handOver(scope, out, frontier, cAll, qPersisted)
     } catch {
       case t: Throwable =>
         cAll.unpersist(): Unit
@@ -2300,7 +2238,7 @@ object Similarity {
     def batchBitsFor(level: Int): Int =
       if (bits != AdaptiveBits) bits
       else adaptiveBitsCapped(newAtLeast(level), dim)
-    (0 to maxLevel).map { l =>
+    val out = (0 to maxLevel).map { l =>
       val lvl = hnswLevel(col(idCol), m, maxLevel, salt)
       val o = oldVecs.where(lvl >= l)
       val nu = batchPinned.where(lvl >= l)
@@ -2311,11 +2249,8 @@ object Similarity {
           graphDegBound = indexDegBound)
         .select(lit(l).as("level"), col("id"), col("rank"),
           col("nbr_id"), col("score"))
-    }.reduce(_ unionByName _) match {
-      case out =>
-        if (batchPersisted != null) Dedup.releaseAfterFirstAction(batchPersisted, out)
-        out
-    }
+    }.reduce(_ unionByName _)
+    CacheScope.handOver(null, out, batchPersisted)
     } catch {
       // the width-probe aggregation, requireFixedDim, and every eager
       // per-level append can throw before the release above registers —
@@ -2351,21 +2286,18 @@ object Similarity {
     require(maxDf >= 1, s"maxDf must be positive: $maxDf")
     // tf feeds the df filter, both self-join sides, and the norms — always
     // persist it (recomputing the corpus explode four times is the single
-    // biggest cost of the operator). A caller-provided scope owns the cache
-    // across repeated consumption; the scope-less default self-releases
-    // after the first action (the same leak-free contract as verifyPairs).
+    // biggest cost of the operator)
     val tf = df
       .select(col(idCol).as("_lid"), explode(Dedup.words(col(textCol))).as("term"))
       .where(length(col("term")) > 0)
       .groupBy(col("_lid"), col("term")).agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (scope != null) scope.own(tf) else Dedup.releaseAfterFirstAction(tf)
     val keep = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDf).select(col("term"))
     val tfKept = tf.join(keep, "term")
     val norms = tfKept.groupBy(col("_lid"))
       .agg(sum(col("tf") * col("tf")).as("norm2"))
-    tfKept.select(col("term"), col("_lid").as("a_id"), col("tf").as("a_tf"))
+    val out = tfKept.select(col("term"), col("_lid").as("a_id"), col("tf").as("a_tf"))
       .join(tfKept.select(col("term"), col("_lid").as("b_id"), col("tf").as("b_tf")),
         Seq("term"))
       .where(col("a_id") < col("b_id"))
@@ -2377,5 +2309,6 @@ object Similarity {
         (sqrt(col("_na").cast("double")) * sqrt(col("_nb").cast("double"))))
       .where(col("cosine") >= threshold)
       .select(col("a_id"), col("b_id"), col("dot"), col("cosine"))
+    CacheScope.handOver(scope, out, tf)
   }
 }

@@ -258,8 +258,8 @@ object TextStats {
     * mod 1e9+7 over characters, left to right. The modulus keeps every
     * intermediate under 2^35, so the value is identical in any engine with
     * 64-bit integers — no overflow semantics in play. Native codegen'd
-    * expression ([[graft.ext.expressions.RollingHashExpr]]); [[rollingHashHof]]
-    * is the built-in-functions twin (NativeExprSpec asserts equality). */
+    * expression ([[graft.ext.expressions.RollingHashExpr]]); NativeExprSpec
+    * asserts it equal to the built-in-functions twin. */
   def rollingHash(text: Column): Column = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(graft.ext.expressions.RollingHashExpr(
@@ -286,15 +286,6 @@ object TextStats {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(graft.ext.expressions.StripAccentsExpr(
       GraftColumnBridge.expression(text)))
-  }
-
-  /** Higher-order-function twin of [[rollingHash]]. */
-  def rollingHashHof(text: Column): Column = {
-    val folded = aggregate(
-      sequence(lit(1), length(text)),
-      lit(0L),
-      (acc, i) => (acc * 31 + ascii(substr(text, i, lit(1)))) % lit(1000000007L))
-    when(length(text) === 0, 0L).otherwise(folded)
   }
 
   /** Document frequency per (group, token): in how many of the group's
@@ -416,8 +407,7 @@ object TextStats {
                            scope: CacheScope = null,
                            tok: Tokenizer = Tokenizer.Whitespace): org.apache.spark.sql.DataFrame = {
     // tf feeds both the vocabulary aggregation and the join-back — persist
-    // it so one action doesn't run the corpus explode twice (caller scope,
-    // or the verifyPairs-style self-release as the leak-free default).
+    // it so one action doesn't run the corpus explode twice.
     // NOTE (r9 measurement): this explode+groupBy is already the right
     // scale shape — hash-aggregate partials collapse a document's tokens
     // MAP-SIDE (its rows share a partition), so the exchange carries
@@ -432,8 +422,7 @@ object TextStats {
     // on a single task however many cores the session had. The same
     // ensureParallelism guard the dedup family uses: a no-op for a
     // well-split input at scale.
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val tf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)), par)
+    val tf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)))
       .select(col(idCol), explode(tokenNgrams(col(textCol), 1, tok)).as("token"))
       .groupBy(col(idCol), col("token"))
       .agg(count(lit(1)).as("tf"))
@@ -458,13 +447,7 @@ object TextStats {
         sum(col("tf") * col("cf")).as("freq_sum"))
       .withColumn("mean_token_freq",
         col("freq_sum").cast("double") / col("n_tokens").cast("double"))
-    // the scope-less release listener watches the RESULT plan, not tf: the
-    // sizing count's completion event may still be in flight on the async
-    // listener bus when the listener registers, and a tf-keyed listener
-    // would treat it as the caller's consumption and evict the cache early
-    if (scope != null) scope.own(tf)
-    else Dedup.releaseAfterFirstAction(tf, result)
-    result
+    CacheScope.handOver(scope, result, tf)
   }
 
   /** Load a token→log-probability table from a local TSV
@@ -572,13 +555,12 @@ object TextStats {
     // widened reference PERSISTS: it feeds every count frame (c2 + c1
     // here; c3/c2/c1 in the trigram ops), and an unpersisted repartition
     // subtree would re-scan and re-exchange once per frame.
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val ref = Dedup.ensureParallelism(ref0.select(col(refText)), par)
+    val ref = Dedup.ensureParallelism(ref0.select(col(refText)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // explode+groupBy is the scale shape here too: partial aggregation
     // collapses per-doc pairs map-side before any exchange (see the
     // corpusFrequencyScore note on the rejected row-local alternatives)
-    val pf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)), par)
+    val pf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)))
       .select(col(idCol), explode(tokenNgrams(col(textCol), 2, tok)).as("p"))
       .select(col(idCol), col("p.w1").as("w1"), col("p.w2").as("w2"))
       .groupBy(col(idCol), col("w1"), col("w2"))
@@ -615,12 +597,7 @@ object TextStats {
         sum(col("pf") * pairFp).as("score_fp"))
       .withColumn("mean_score",
         col("score_fp").cast("double") / (col("n_bigrams") * FP).cast("double"))
-    if (scope != null) { scope.own(pf); scope.own(ref) }
-    else {
-      Dedup.releaseAfterFirstAction(pf, result)
-      Dedup.releaseAfterFirstAction(ref, result)
-    }
-    result
+    CacheScope.handOver(scope, result, pf, ref)
   }
 
   /** Fused native tokenize + adjacent n-grams (lowercase → single-space
@@ -702,10 +679,9 @@ object TextStats {
     val FP = 1L << 20
     // widen both sides before the tokenize+explode, reference persisted —
     // three count frames read it (see bigramBackoffScore)
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val ref = Dedup.ensureParallelism(ref0.select(col(refText)), par)
+    val ref = Dedup.ensureParallelism(ref0.select(col(refText)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)), par)
+    val tf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)))
       .select(col(idCol), explode(tokenNgrams(col(textCol), 3, tok)).as("p"))
       .select(col(idCol), col("p.w1").as("w1"), col("p.w2").as("w2"),
         col("p.w3").as("w3"))
@@ -760,12 +736,7 @@ object TextStats {
         sum(col("tf") * tripleFp).as("score_fp"))
       .withColumn("mean_score",
         col("score_fp").cast("double") / (col("n_trigrams") * FP).cast("double"))
-    if (scope != null) { scope.own(tf); scope.own(ref) }
-    else {
-      Dedup.releaseAfterFirstAction(tf, result)
-      Dedup.releaseAfterFirstAction(ref, result)
-    }
-    result
+    CacheScope.handOver(scope, result, tf, ref)
   }
 
   /** Interpolated Kneser-Ney trigram scoring (Kneser & Ney 1995; the
@@ -816,10 +787,9 @@ object TextStats {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // widen both sides before the tokenize+explode, reference persisted —
     // three count frames read it (see bigramBackoffScore)
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val ref = Dedup.ensureParallelism(ref0.select(col(refText)), par)
+    val ref = Dedup.ensureParallelism(ref0.select(col(refText)))
       .persist(lvl)
-    val tf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)), par)
+    val tf = Dedup.ensureParallelism(df.select(col(idCol), col(textCol)))
       .select(col(idCol), explode(tokenNgrams(col(textCol), 3, tok)).as("p"))
       .select(col(idCol), col("p.w1").as("w1"), col("p.w2").as("w2"),
         col("p.w3").as("w3"))
@@ -892,11 +862,7 @@ object TextStats {
         sum(col("tf") * floor(lit(FP.toDouble) * p3)).as("score_fp"))
       .withColumn("mean_score",
         col("score_fp").cast("double") / (col("n_trigrams") * FP).cast("double"))
-    Seq(tf, c3, c2, ref).foreach { f =>
-      if (scope != null) scope.own(f)
-      else Dedup.releaseAfterFirstAction(f, result)
-    }
-    result
+    CacheScope.handOver(scope, result, tf, c3, c2, ref)
   }
 
   /** Vocabulary drift between two corpus snapshots — the crawl-health
@@ -1245,8 +1211,8 @@ object TextStats {
     * lambda interpretation) — a scan-level projection, zero shuffle, zero
     * driver state; the weight table never materializes anywhere (a learned
     * one would ride the closure as a broadcast array indexed by bucket).
-    * Bit-equality with the portable Column-chain twin
-    * ([[hashedLinearScoreHof]]) is pinned in RecipeSamplingSpec. */
+    * Bit-equality with the portable Column-chain twin is pinned in
+    * RecipeSamplingSpec. */
   /** The classifier kernel as a bare Column — `struct<n_feats, score_fp>`
     * over a text column, so a pipeline can GATE on the score as a pure
     * scan-level filter (no join against a score frame). */
@@ -1270,31 +1236,9 @@ object TextStats {
       .withColumn("label", when(col("score_fp") > 0, 1).otherwise(0))
   }
 
-  /** Built-in-Column twin of [[hashedLinearScore]] (HOF `aggregate` over the
-    * md5/conv string chain) — the portable reference implementation
-    * RecipeSamplingSpec pins the native kernel against bit-for-bit. */
-  private[ext] def hashedLinearScoreHof(df: org.apache.spark.sql.DataFrame,
-                                        idCol: String, textCol: String,
-                                        dim: Int = 4096,
-                                        salt: String = "qc"): org.apache.spark.sql.DataFrame = {
-    require(dim > 0, s"feature dimension must be positive: $dim")
-    val feats = classifierFeats(col(textCol))
-    def weightOf(t: Column): Column = {
-      val bucket = conv(substring(md5(concat(t, lit(salt))), 1, 8), 16, 10)
-        .cast("long") % dim
-      (bucket * 1103515245L + 12345L) % 2001L - 1000L
-    }
-    df.select(col(idCol), feats.as("_f"))
-      .select(col(idCol),
-        size(col("_f")).as("n_feats"),
-        aggregate(col("_f"), lit(0L), (acc, t) => acc + weightOf(t))
-          .as("score_fp"))
-      .withColumn("label", when(col("score_fp") > 0, 1).otherwise(0))
-  }
-
   /** The unigram + adjacent-bigram feature array of [[hashedLinearScore]]'s
     * feature space ("tok" and "tok_tok", multiplicity kept). */
-  private def classifierFeats(text: Column): Column = {
+  private[ext] def classifierFeats(text: Column): Column = {
     val toks = filter(tokens(text), t => length(t) > 0)
     val nb = size(toks) - 1
     val bigrams = when(nb >= 1,

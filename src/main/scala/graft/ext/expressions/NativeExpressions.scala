@@ -175,7 +175,7 @@ case class IntDotExpr(left: Expression, right: Expression)
 }
 
 /** One-pass symmetric int8 quantizer over array<double> — the native twin of
-  * [[graft.ext.Similarity.quantizeInt8Hof]]
+  * [[graft.ext.Similarity.quantizeInt8]]'s HOF formulation
   * (`when(array_max(transform(v, abs)) === 0, zeros)
   *   .otherwise(transform(v, x => floor(x·127/maxabs + 0.5)))`).
   * The Column twin runs THREE CodegenFallback higher-order functions per

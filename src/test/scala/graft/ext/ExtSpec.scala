@@ -381,11 +381,11 @@ class ExtSpec extends SparkSpec {
   test("ensureParallelism widens narrow inputs and no-ops on well-split ones") {
     val par = spark.sparkContext.defaultParallelism
     val narrow = spark.range(1000).toDF("id").coalesce(1)
-    assert(Dedup.ensureParallelism(narrow, par).rdd.getNumPartitions === par)
+    assert(Dedup.ensureParallelism(narrow).rdd.getNumPartitions === par)
     // an input already at/above the target parallelism is returned UNTOUCHED
     // (same object ⇒ no extra Exchange in any downstream plan)
     val wide = spark.range(1000).toDF("id").repartition(par)
-    assert(Dedup.ensureParallelism(wide, par) eq wide)
+    assert(Dedup.ensureParallelism(wide) eq wide)
   }
 
   test("lshCandidates: minBandMatches keeps only pairs sharing enough bands") {
@@ -508,20 +508,6 @@ class ExtSpec extends SparkSpec {
         threshold = 0.3)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(verified === Set((1L, 2L))) // 1-4 share no shingles
-  }
-
-  test("verifyPairs without a scope self-releases its cache after the first action") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val cands = Seq((1L, 2L), (1L, 4L)).toDF("a_id", "b_id")
-    val verified = Dedup.verifyPairs(cands, docs, "doc_id", "text",
-        threshold = 0.3)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(verified === Set((1L, 2L)))
-    // the release rides the async listener bus — poll briefly for it
-    val deadline = System.nanoTime() + 10e9.toLong
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(leaked.isEmpty, s"leaked cached RDD ids: $leaked")
   }
 
   test("CacheScope: a scoped curation run leaves no cached blocks behind") {
@@ -1605,7 +1591,7 @@ class ExtSpec extends SparkSpec {
     // completes (async bus — poll); a destroyed broadcast throws on read
     val bc = spark.sparkContext.broadcast(Array[Byte](1, 2, 3))
     val consumer = Seq(1L, 2L).toDF("x")
-    Dedup.destroyAfterFirstAction(consumer, bc)
+    CacheScope.handOverBroadcast(null, consumer, bc)
     assert(bc.value.length === 3, "live before the action")
     assert(consumer.count() === 2)
     val deadline = System.nanoTime() + 10e9.toLong

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /** Spark-job budgets for hot paths on fixture-sized inputs. Wall time moves
   * with the host; the job count of a path does not, so a rise past a budget
@@ -29,5 +30,32 @@ class JobBudgetSpec extends SparkSpec {
 
   test("connectedComponentsStar on a 40-node chain: at most 92 jobs") {
     assert(jobsOf(Dedup.connectedComponentsStar(chain).collect()) <= 92)
+  }
+
+  private def rawBatch(minute: Int) = Seq(
+    (f"2017-01-11T00:$minute%02d:53.000Z", "news| Shark attacks spearfisherman", "127,206"),
+    (f"2017-01-11T00:$minute%02d:59.000Z", "iPhone|Clips|Some Video", "206"),
+    (f"2017-01-11T00:${minute + 1}%02d:02.000Z", "9news|Local|V3", "101,206"),
+    (f"2017-01-11T00:${minute + 1}%02d:05.000Z", "JustOnePiece", "206")
+  ).toDF("DateTime", "VideoTitle", "events")
+
+  test("warm StarStore.runBatch: a second batch into a one-batch store, at most 38 jobs") {
+    val store = graft.etl.StarStore(spark, tmpDir("job-budget-star"))
+    assert(store.runBatch(rawBatch(0), "b1") === 3)
+    assert(jobsOf(assert(store.runBatch(rawBatch(10), "b2") === 3)) <= 38)
+  }
+
+  test("StoreMeta.compact of a 3-file served store: at most 3 jobs") {
+    val docs = (1L to 30L).map(i => (i, s"served store doc $i with words w${i % 7} and x$i"))
+      .toDF("doc_id", "text")
+    val dir = tmpDir("job-budget-served")
+    Dedup.minhashStoreBandedWrite(docs.where(col("doc_id") <= 10).coalesce(1),
+      "doc_id", "text", dir, numHashes = 8, cap = 2)
+    for (lo <- Seq(11L, 21L))
+      Dedup.minhashStoreBandedAppendAt(spark, dir,
+        docs.where(col("doc_id") >= lo && col("doc_id") < lo + 10).coalesce(1),
+        "doc_id", "text")
+    assert(spark.read.parquet(dir).inputFiles.length === 3)
+    assert(jobsOf(assert(StoreMeta.compact(spark, dir) === 3L)) <= 3)
   }
 }

@@ -15,13 +15,13 @@ class NativeExprSpec extends SparkSpec {
   test("graft_rolling_hash ≡ TextStats.rollingHash on real text") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val diff = docs.select(
-      TextStats.rollingHashHof(col("text")).as("hof"),
+      HofTwins.rollingHashHof(col("text")).as("hof"),
       expr("graft_rolling_hash(text)").as("native"))
       .where(col("hof") =!= col("native")).count()
     assert(diff === 0)
     // edge cases: empty string, single char
     val edge = Seq("", "a", "Z9 ").toDF("text").select(
-      TextStats.rollingHashHof(col("text")).as("hof"),
+      HofTwins.rollingHashHof(col("text")).as("hof"),
       expr("graft_rolling_hash(text)").as("native")).collect()
     edge.foreach(r => assert(r.getLong(0) === r.getLong(1)))
   }
@@ -34,7 +34,7 @@ class NativeExprSpec extends SparkSpec {
       .where(col("a_id") < 20 && col("b_id") < 20)
     // bitwise comparison: doubles cast to raw bits, not approximate equality
     val diff = pairs.select(
-      Similarity.dotHof(col("va"), col("vb")).as("hof"),
+      HofTwins.dotHof(col("va"), col("vb")).as("hof"),
       expr("graft_dot(va, vb)").as("native"))
       .where(expr("cast(hof as string) != cast(native as string) OR hof != native"))
       .count()
@@ -48,7 +48,7 @@ class NativeExprSpec extends SparkSpec {
         split(lower(col("text")), " "),
         t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))).as("hs"))
       val diff = hashed.select(
-        Dedup.simhashNHof(col("hs"), bits).as("hof"),
+        HofTwins.simhashNHof(col("hs"), bits).as("hof"),
         expr(s"graft_simhash(hs, $bits)").as("native"))
         .where(col("hof") =!= col("native")).count()
       assert(diff === 0, s"bits=$bits")
@@ -74,7 +74,7 @@ class NativeExprSpec extends SparkSpec {
       .crossJoin(e.select(col("vec_id").as("b_id"), col("c").as("cb")))
       .where(col("a_id") < 20 && col("b_id") < 20)
     val diff = pairs.select(
-      Similarity.intDotHof(col("ca"), col("cb")).as("hof"),
+      HofTwins.intDotHof(col("ca"), col("cb")).as("hof"),
       Similarity.intDot(col("ca"), col("cb")).as("native"))
       .where(col("hof") =!= col("native")).count()
     assert(diff === 0)
@@ -95,7 +95,7 @@ class NativeExprSpec extends SparkSpec {
       .select(Similarity.asDouble(col("embedding")).as("v"))
     val diff = e.select(
       Similarity.quantizeInt8(col("v")).as("native"),
-      Similarity.quantizeInt8Hof(col("v")).as("hof"))
+      HofTwins.quantizeInt8Hof(col("v")).as("hof"))
       .where(not(col("native") <=> col("hof"))).count()
     assert(diff === 0)
     // edges: zero vector → zeros; empty → empty; all-null elements →
@@ -106,16 +106,16 @@ class NativeExprSpec extends SparkSpec {
       .select(col("tag"), col("v").cast("array<double>").as("v"))
       .select(col("tag"),
         Similarity.quantizeInt8(col("v")).as("native"),
-        Similarity.quantizeInt8Hof(col("v")).as("hof"))
+        HofTwins.quantizeInt8Hof(col("v")).as("hof"))
     assert(edges.where(not(col("native") <=> col("hof"))).count() === 0)
     val nulls = spark.range(1).select(
       Similarity.quantizeInt8(array(lit(null).cast("double"),
         lit(null).cast("double"))).as("allnull"),
-      Similarity.quantizeInt8Hof(array(lit(null).cast("double"),
+      HofTwins.quantizeInt8Hof(array(lit(null).cast("double"),
         lit(null).cast("double"))).as("allnull_hof"),
       Similarity.quantizeInt8(array(lit(2.0), lit(null).cast("double"),
         lit(-1.0))).as("mixed"),
-      Similarity.quantizeInt8Hof(array(lit(2.0), lit(null).cast("double"),
+      HofTwins.quantizeInt8Hof(array(lit(2.0), lit(null).cast("double"),
         lit(-1.0))).as("mixed_hof"),
       Similarity.quantizeInt8(lit(null).cast("array<double>")).as("nullarr"))
       .head
@@ -136,7 +136,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("graft_rolling_hash handles astral-plane characters like the HOF twin") {
     val r = Seq("a🙂b").toDF("text").select(
-      TextStats.rollingHashHof(col("text")).as("hof"),
+      HofTwins.rollingHashHof(col("text")).as("hof"),
       expr("graft_rolling_hash(text)").as("native")).head
     assert(r.getLong(0) === r.getLong(1))
   }
@@ -173,7 +173,7 @@ class NativeExprSpec extends SparkSpec {
       // null-SAFE comparison: a plain =!= would silently skip any row where
       // exactly one side is NULL — the divergence class under test
       val diff = docs.select(
-        Dedup.hashedWordShinglesHof(col("text"), n).as("hof"),
+        HofTwins.hashedWordShinglesHof(col("text"), n).as("hof"),
         Dedup.hashedWordShingles(col("text"), n).as("native"))
         .where(!(col("hof") <=> col("native"))).count()
       assert(diff === 0, s"n=$n")
@@ -185,7 +185,7 @@ class NativeExprSpec extends SparkSpec {
     for (k <- Seq(1, 8, 16)) {
       val hashed = docs.select(Dedup.hashedWordShingles(col("text"), 3).as("sh"))
       val diff = hashed.select(
-        Dedup.minhashSignatureFastHof(col("sh"), k).as("hof"),
+        HofTwins.minhashSignatureFastHof(col("sh"), k).as("hof"),
         Dedup.minhashSignatureFast(col("sh"), k).as("native"))
         .where(!(col("hof") <=> col("native"))).count()
       assert(diff === 0, s"k=$k")
@@ -197,7 +197,7 @@ class NativeExprSpec extends SparkSpec {
     for (k <- Seq(1, 8, 16)) {
       val sh = docs.select(Dedup.wordShingles(col("text"), 3).as("sh"))
       val diff = sh.select(
-        Dedup.minhashSignatureHof(col("sh"), k).as("hof"),
+        HofTwins.minhashSignatureHof(col("sh"), k).as("hof"),
         Dedup.minhashSignature(col("sh"), k).as("native"))
         .where(!(col("hof") <=> col("native"))).count()
       assert(diff === 0, s"k=$k")
@@ -205,7 +205,7 @@ class NativeExprSpec extends SparkSpec {
     // the 60-bit projection law (conv(substring(hex,1,15),16,10)) on the
     // same corpus — truncation must commute with the digest minimum
     val diff60 = docs.select(
-      Dedup.minhashSignature60Hof(col("text"), 3, 16).as("hof"),
+      HofTwins.minhashSignature60Hof(col("text"), 3, 16).as("hof"),
       Dedup.minhashSignature60(col("text"), 3, 16).as("native"))
       .where(!(col("hof") <=> col("native"))).count()
     assert(diff60 === 0)
@@ -218,7 +218,7 @@ class NativeExprSpec extends SparkSpec {
       (Option.empty[Seq[Option[String]]], "nullarr"))
       .toDF("sh", "label")
     val rows = frames.select(col("label"),
-      Dedup.minhashSignatureHof(col("sh"), 4).as("hof"),
+      HofTwins.minhashSignatureHof(col("sh"), 4).as("hof"),
       Dedup.minhashSignature(col("sh"), 4).as("native")).collect()
     rows.foreach { r =>
       if (r.isNullAt(1)) assert(r.isNullAt(2), r.getString(0))
@@ -227,7 +227,7 @@ class NativeExprSpec extends SparkSpec {
     // short doc (< shingleLen words) through the 60-bit text form: the
     // wordShingles guard yields the empty array → all-NULL signature
     val short = Seq("one two").toDF("text").select(
-      Dedup.minhashSignature60Hof(col("text"), 3, 4).as("hof"),
+      HofTwins.minhashSignature60Hof(col("text"), 3, 4).as("hof"),
       Dedup.minhashSignature60(col("text"), 3, 4).as("native")).head
     assert(short.getSeq[Any](0) === short.getSeq[Any](1))
     // registered SQL surface
@@ -245,7 +245,7 @@ class NativeExprSpec extends SparkSpec {
       (Option.empty[Seq[Option[Long]]], "nullarr"))
       .toDF("sh", "label")
     val rows = frames.select(col("label"),
-      Dedup.minhashSignatureFastHof(col("sh"), 4).as("hof"),
+      HofTwins.minhashSignatureFastHof(col("sh"), 4).as("hof"),
       Dedup.minhashSignatureFast(col("sh"), 4).as("native")).collect()
     rows.foreach { r =>
       if (r.isNullAt(1)) assert(r.isNullAt(2), r.getString(0))
@@ -259,13 +259,13 @@ class NativeExprSpec extends SparkSpec {
     val fixtures = Seq("ab", "one two three", "a b a b a b a b", "",
       "héllo wörld héllo wörld emoji 🙂 here").toDF("text")
     val rows = fixtures.select(
-      Dedup.hashedWordShinglesHof(col("text"), 3).as("hof"),
+      HofTwins.hashedWordShinglesHof(col("text"), 3).as("hof"),
       Dedup.hashedWordShingles(col("text"), 3).as("native")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
     // NULL text: the twin's wordShingles guard falls through to its
     // empty-array branch, never NULL — the native expression must match
     val nullRow = Seq(Option.empty[String]).toDF("text").select(
-      Dedup.hashedWordShinglesHof(col("text"), 3).as("hof"),
+      HofTwins.hashedWordShinglesHof(col("text"), 3).as("hof"),
       Dedup.hashedWordShingles(col("text"), 3).as("native")).head
     assert(!nullRow.isNullAt(0) && nullRow.getSeq[Long](0).isEmpty)
     assert(!nullRow.isNullAt(1) && nullRow.getSeq[Long](1).isEmpty)
@@ -341,7 +341,7 @@ class NativeExprSpec extends SparkSpec {
       (Seq[String](), Seq("a")))
       .toDF("sa", "sb")
     val got = rows.select(
-      Dedup.sigAgreeHof(col("sa"), col("sb")).as("hof"),
+      HofTwins.sigAgreeHof(col("sa"), col("sb")).as("hof"),
       expr("graft_sig_agree(sa, sb)").as("native")).collect()
     got.foreach { r =>
       assert(r.getInt(0) === r.getInt(1), s"sig_agree drift: $r")
@@ -370,7 +370,7 @@ class NativeExprSpec extends SparkSpec {
       .withColumn("ents_a", entries(col("sa")))
       .withColumn("ents_b", entries(col("sb")))
       .select(
-        FuzzyJoin.wjaccardHofReference(col("sa"), col("sb"), w).as("hof"),
+        HofTwins.wjaccardHofReference(col("sa"), col("sb"), w).as("hof"),
         expr("graft_wjaccard_merge(ents_a, ents_b)").as("native"))
       .collect()
     prepared.foreach { r =>

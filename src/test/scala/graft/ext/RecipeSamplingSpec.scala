@@ -202,7 +202,7 @@ class RecipeSamplingSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val native = TextStats.hashedLinearScore(docs, "doc_id", "text")
       .as[(Long, Int, Long, Int)].collect().sortBy(_._1)
-    val hof = TextStats.hashedLinearScoreHof(docs, "doc_id", "text")
+    val hof = HofTwins.hashedLinearScoreHof(docs, "doc_id", "text")
       .as[(Long, Int, Long, Int)].collect().sortBy(_._1)
     assert(native.length === hof.length && native.length > 0)
     native.zip(hof).foreach { case (n, h) => assert(n === h) }
