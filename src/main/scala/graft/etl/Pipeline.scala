@@ -35,8 +35,9 @@ import org.apache.spark.sql.types.StructType
   * rewrote the whole fact per batch, O(total), which caps out fast. Data
   * files are immutable and shared across versions; publish is one version-
   * dir rename + one CURRENT pointer swap, COMMITTED by an atomic
-  * create-if-absent claim on the version name so two concurrent writers
-  * serialize — the loser recomputes on the winner's version instead of
+  * create-if-absent claim on the version name ([[Commit]], the one commit
+  * primitive every writer of persisted state shares) so two concurrent
+  * writers serialize — the loser recomputes on the winner's version instead of
   * clobbering it (optimistic concurrency, the Delta/Iceberg commit shape).
   * A crash mid-batch leaves the live version untouched (at worst `_tmp_`
   * staging the retention sweep reclaims by age); a crash between rename
@@ -99,18 +100,12 @@ class StarStore(spark: SparkSession, root: String,
     (committed.map(_.getPath.getName).sortBy(_.drop(1).toLong), debris)
   }
 
-  /** The CURRENT pointer file alone; None when absent, empty or unreadable
-    * (mid-swap, between its delete and rename). */
+  /** The CURRENT pointer file alone ([[Commit.readText]]: its swap temp
+    * between the swap's delete and rename); None when absent, empty or
+    * unreadable. */
   private def pointer(): Option[String] =
-    try {
-      val in = fs.open(currentPath)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim).filter(_.nonEmpty)
-      finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  /** The age gate every crash-debris reclaim and stale-claim break uses. */
-  private def stale(st: FileStatus): Boolean =
-    System.currentTimeMillis() - st.getModificationTime > StaleClaimMs
+    try Commit.readText(fs, currentPath).map(_.trim).filter(_.nonEmpty)
+    catch { case _: java.io.IOException => None }
 
   /** Live version, from CURRENT; falls back to the highest committed
     * version (covers a crash in the tiny delete→rename window of the
@@ -124,8 +119,8 @@ class StarStore(spark: SparkSession, root: String,
   def exists: Boolean = currentVersion.isDefined
 
   private def manifest(v: String): Manifest = {
-    val in = fs.open(manifestPath(versionDir(v)))
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val text = Commit.readText(fs, manifestPath(versionDir(v)))
+      .getOrElse(throw new java.io.FileNotFoundException(s"$root manifest $v"))
     val kv = text.linesIterator.map(_.split("=", 2)).collect {
       case Array(k, v1) => k -> v1
     }.toMap
@@ -249,23 +244,16 @@ class StarStore(spark: SparkSession, root: String,
     // live writer's in-flight (non-atomic) copy is never hit; clearing it
     // frees the name for publishVersion's own debris check.
     debris.foreach { st =>
-      if (stale(st) &&
-          // re-probe AT DELETE TIME: the classification above is seconds
-          // old on an object store, and a publisher may have reclaimed
-          // the name and COMMITTED since — a manifest now present means
-          // live data, not debris
-          !isCommitted(st.getPath.getName)) {
-        // the manifest probe narrows but does not close the window: a
-        // publisher that reclaimed the name AFTER our listing can be
-        // mid-rename (dir recreated, manifest not yet in place). Re-fetch
-        // the dir's status and re-apply the age gate to the FRESH mtime —
-        // a reclaimed dir is young and gets skipped until it either
-        // commits (manifest probe protects it) or goes stale again.
-        val fresh =
-          try Some(fs.getFileStatus(st.getPath))
-          catch { case _: java.io.FileNotFoundException => None }
-        if (fresh.exists(stale)) fs.delete(st.getPath, true): Unit
-      }
+      // re-probe AT DELETE TIME: the classification above is seconds old
+      // on an object store, and a publisher may have reclaimed the name
+      // and COMMITTED since — a manifest now present means live data, not
+      // debris. The manifest probe narrows but does not close the window:
+      // a publisher that reclaimed the name AFTER our listing can be
+      // mid-rename (dir recreated, manifest not yet in place), so the age
+      // gate is re-applied to the FRESH mtime — a reclaimed dir is young
+      // and gets skipped until it either commits or goes stale again.
+      if (Commit.stale(st))
+        Commit.breakStale(fs, st.getPath, isCommitted(st.getPath.getName)): Unit
     }
     val retained = committed.takeRight(retainVersions).map(manifest)
     val referenced = retained.flatMap(_.batches).toSet
@@ -286,18 +274,13 @@ class StarStore(spark: SparkSession, root: String,
       val id = name.stripPrefix("batch_")
       val reclaim =
         if (name.startsWith("batch_"))
-          !referenced.contains(id) && (applied.contains(id) || stale(st))
-        else name.startsWith("_tmp_") && stale(st)
+          !referenced.contains(id) && (applied.contains(id) || Commit.stale(st))
+        else name.startsWith("_tmp_") && Commit.stale(st)
       if (reclaim) fs.delete(st.getPath, true): Unit
     }
   }
 
   // ── write side ───────────────────────────────────────────────────────────
-
-  private def writeManifest(dir: String, m: Manifest): Unit = {
-    val out = fs.create(manifestPath(dir), true)
-    try out.write(m.serialized.getBytes("UTF-8")) finally out.close()
-  }
 
   /** Stage and commit one version — the ONE publish sequence, shared by
     * [[attemptBatch]] and [[compact]]: write `delta` to attempt-unique
@@ -330,17 +313,16 @@ class StarStore(spark: SparkSession, root: String,
     fs.delete(new Path(tmp), true)
     stageDims(tmp)
     val m = manifestFor(deltaTmp.toString)
-    writeManifest(tmp, m)
+    Commit.write(fs, manifestPath(tmp), m.serialized)
 
-    claimVersion(nextV) match {
+    Commit.claim(fs, claimPath(nextV)) match {
       case Some(token) =>
-        val ours = claimStillOwned(nextV, token)
+        val ours = Commit.stillOwned(fs, claimPath(nextV), token)
         if (ours && !isCommitted(nextV)) {
           // a crashed leftover at the final delta name is cleared under the
           // claim
           if (fs.exists(deltaDir)) fs.delete(deltaDir, true)
-          require(fs.rename(deltaTmp, deltaDir),
-            s"fact delta finalize failed: $deltaTmp -> $deltaDir")
+          Commit.move(fs, deltaTmp, deltaDir)
           publishVersion(tmp, nextV)
           swapPointer(nextV)
           // the claim's job is done once the commit is visible — retire it
@@ -355,7 +337,10 @@ class StarStore(spark: SparkSession, root: String,
         // re-assigned mid-gap (then it is not ours to delete)
         if (ours) fs.delete(claimPath(nextV), false): Unit
       case None =>
-        breakStaleClaim(nextV): Unit // un-wedge a crashed claimer for the retry
+        // un-wedge a crashed claimer for the retry: its claim is stale and
+        // its version never committed (a manifest-less dir is a crashed
+        // mid-rename's debris, not a commit)
+        Commit.breakStale(fs, claimPath(nextV), isCommitted(nextV)): Unit
     }
     fs.delete(new Path(tmp), true)
     fs.delete(deltaTmp, true)
@@ -363,7 +348,7 @@ class StarStore(spark: SparkSession, root: String,
   }
 
   /** Rename a staged version dir into place — the COMMIT POINT of the
-    * claim protocol. The destination cannot exist: [[claimVersion]] grants
+    * claim protocol. The destination cannot exist: [[Commit.claim]] grants
     * the name exclusively, and a committed version dir is never deleted
     * (a crash after this rename but before the pointer swap leaves a
     * COMPLETE version that [[repairPointer]] advances to — the batch is
@@ -382,116 +367,21 @@ class StarStore(spark: SparkSession, root: String,
         s"version $nextV already committed at $root — claim protocol violated")
       fs.delete(dest, true)
     }
-    require(fs.rename(new Path(tmp), dest),
-      s"version publish failed: $tmp -> $nextV")
+    Commit.move(fs, new Path(tmp), dest)
   }
 
-  // ── optimistic-concurrency commit (claim files) ───────────────────────────
+  // ── optimistic-concurrency commit (claim files, [[Commit]]) ──────────────
   //
   // Two concurrent runBatch callers must SERIALIZE, not lose an update: the
   // loser recomputes on the winner's published version instead of clobbering
-  // it. The primitive is an atomic create-if-absent CLAIM file
-  // (versions/v<N>.claim): whoever creates it owns the right to rename its
-  // staged dir to versions/v<N>. Claims are taken LATE (right before the
-  // rename), so a claim's lifetime is milliseconds; a claim with no version
-  // dir older than StaleClaimMs is a crashed claimer and is broken. Claim
-  // content is a per-writer token re-checked immediately before the rename,
-  // so a broken-and-reclaimed name aborts the original writer instead of
-  // racing two renames onto one destination.
-
-  /** Atomically claim `nextV`; Some(writer token) on success, None when the
-    * name is already claimed (lost the race). On a `file:` store the create
-    * uses O_EXCL via NIO (Hadoop's RawLocalFileSystem create-if-absent is
-    * check-then-act, not atomic); elsewhere `FileSystem.create(overwrite =
-    * false)` — atomic on HDFS and object stores with conditional puts. */
-  private def claimVersion(nextV: String): Option[String] = {
-    val claim = claimPath(nextV)
-    fs.mkdirs(claim.getParent)
-    val token = java.util.UUID.randomUUID().toString
-    val created =
-      if (fs.getScheme == "file")
-        try {
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(claim.toUri.getPath),
-            token.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.io.IOException =>
-            // CREATE_NEW succeeded but the write died: the torn claim is
-            // OURS — remove it, or it wedges the name for StaleClaimMs as
-            // an orphan no writer owns (the caller sees a clean lost-race
-            // and retries)
-            try java.nio.file.Files.deleteIfExists(
-              java.nio.file.Paths.get(claim.toUri.getPath)): Unit
-            catch { case _: java.io.IOException => () }
-            false
-        }
-      else {
-        var out: org.apache.hadoop.fs.FSDataOutputStream = null
-        try {
-          out = fs.create(claim, false) // throws when already claimed
-          out.write(token.getBytes("UTF-8"))
-          out.close(); out = null
-          true
-        } catch {
-          case _: java.io.IOException =>
-            if (out != null) {
-              // create-if-absent SUCCEEDED, so the failure was our own
-              // write/close — the half-written claim is ours to delete
-              // (same orphan-wedge hazard as the local branch above)
-              try out.close() catch { case _: java.io.IOException => () }
-              try fs.delete(claim, false): Unit
-              catch { case _: java.io.IOException => () }
-            }
-            false
-        }
-      }
-    if (created) Some(token) else None
-  }
+  // it. Whoever creates the claim file versions/v<N>.claim owns the right to
+  // rename its staged dir to versions/v<N>; a claim with no committed
+  // version older than Commit.StaleClaimMs is a crashed claimer and is
+  // broken, and the token re-check before the rename aborts a writer whose
+  // claim was broken and re-taken mid-gap.
 
   private def claimPath(nextV: String) =
     new Path(s"$root/versions/$nextV.claim")
-
-  /** The claim is still OURS (content equals our token): re-checked
-    * immediately before the commit rename — if a stale-claim break
-    * re-assigned the name while we were between claim and rename, abort
-    * rather than rename onto a destination someone else now owns. Reads
-    * retry a couple of times: a single transient IO hiccup must not make
-    * a writer abandon a claim it actually holds (the orphaned claim would
-    * wedge the name for StaleClaimMs). */
-  private def claimStillOwned(nextV: String, token: String): Boolean = {
-    var attempt = 0
-    while (attempt < 3) {
-      try {
-        val in = fs.open(claimPath(nextV))
-        val content =
-          try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        return content == token
-      } catch {
-        case _: java.io.FileNotFoundException => return false // broken claim
-        case _: java.io.IOException => attempt += 1; Thread.sleep(100L)
-      }
-    }
-    false
-  }
-
-  /** Break a CRASHED claimer's claim: the claim file exists, its version
-    * dir never appeared, and it is older than [[StarStore.StaleClaimMs]]
-    * (claims live for milliseconds in a healthy writer — the gap between
-    * claim and rename). Returns true if a stale claim was removed. */
-  private def breakStaleClaim(nextV: String): Boolean = {
-    val claim = claimPath(nextV)
-    try {
-      // "its version dir never appeared" means never COMMITTED (manifest
-      // present): a manifest-less dir is a crashed mid-rename's debris —
-      // treating it as a commit would make the claim unbreakable and wedge
-      // every future publish on this name forever.
-      if (!fs.exists(claim) || isCommitted(nextV)) false
-      else stale(fs.getFileStatus(claim)) && fs.delete(claim, false)
-    } catch { case _: java.io.IOException => false }
-  }
 
   /** Advance CURRENT to the highest committed version if the pointer fell
     * behind (crash between the commit rename and the pointer swap): the
@@ -515,20 +405,14 @@ class StarStore(spark: SparkSession, root: String,
   private def swapPointer(nextV: String): Unit =
     // the POINTER FILE only, never the committed-dir fallback (which would
     // see our own just-renamed dir and skip ever creating CURRENT)
-    if (!pointer().exists(_ >= nextV)) {
-      val curTmp = new Path(s"$root/CURRENT._tmp")
-      val pOut = fs.create(curTmp, true)
-      try pOut.write(nextV.getBytes("UTF-8")) finally pOut.close()
-      fs.delete(currentPath, false)
-      require(fs.rename(curTmp, currentPath), "CURRENT pointer swap failed")
-    }
+    if (!pointer().exists(_ >= nextV)) Commit.replace(fs, currentPath, nextV)
 
   /** Process one raw batch end-to-end and atomically publish the updated
     * star. Returns the number of fact rows appended (0 for a replayed
     * batch id).
     *
     * CONCURRENT-WRITER SAFE: the publish commits by atomically claiming
-    * the next version name ([[claimVersion]]) before the rename, so two
+    * the next version name ([[Commit.claim]]) before the rename, so two
     * simultaneous callers serialize — the loser deletes its staged dir and
     * RECOMPUTES against the winner's published version (its SKEYs/fact ids
     * would otherwise duplicate the winner's), bounded at
@@ -550,34 +434,13 @@ class StarStore(spark: SparkSession, root: String,
   def runBatch(raw: DataFrame, batchId: String,
                extras: Seq[String] = Nil): Long = {
     require(!batchId.contains("/"), s"batch id must be path-safe: $batchId")
-    var attempt = 0
-    while (attempt <= StarStore.MaxPublishRetries) {
+    // a concurrent winner's retention sweep can retire the exact version
+    // snapshot an attempt was reading (retainVersions=1 keeps only the live
+    // one): Commit.retrying recomputes from the fresh snapshot
+    Commit.retrying(StarStore.MaxPublishRetries, s"runBatch($batchId) at $root") {
       repairPointer()
-      val result =
-        try attemptBatch(raw, batchId, extras)
-        catch {
-          // a concurrent winner's retention sweep can retire the exact
-          // version snapshot this attempt was reading (retainVersions=1
-          // keeps only the live one) — that is a lost race wearing an IO
-          // error, not a failure: recompute from the fresh snapshot. The
-          // LAST attempt rethrows, so a genuine persistent IO fault still
-          // surfaces as itself rather than as "pathological contention".
-          case e @ (_: java.io.FileNotFoundException
-                    | _: org.apache.spark.SparkException) =>
-            if (attempt >= StarStore.MaxPublishRetries) throw e
-            None
-        }
-      result match {
-        case Some(appended) => return appended
-        case None =>
-          attempt += 1
-          // the winner is mid-swap or just ahead; brief linear backoff and
-          // recompute from its published snapshot
-          Thread.sleep(50L * attempt)
-      }
+      attemptBatch(raw, batchId, extras)
     }
-    sys.error(s"runBatch($batchId) gave up after " +
-      s"${StarStore.MaxPublishRetries} concurrent-publish retries at $root")
   }
 
   /** One optimistic attempt: compute against the current snapshot, stage,
@@ -763,13 +626,6 @@ object StarStore {
     * means 5+ publishes landed during this batch's compute: a pathological
     * contention level worth failing loudly over. */
   val MaxPublishRetries: Int = 5
-
-  /** Age past which a claim file with NO version dir is a crashed claimer
-    * (a live claim spans only the claim→rename gap, milliseconds): broken
-    * by the next writer. Generous so a stalled-but-alive writer is never
-    * raced on any realistic filesystem hiccup; the claim-token re-check
-    * before rename backstops even that. */
-  val StaleClaimMs: Long = 5L * 60 * 1000
 
   final case class Manifest(maxFactId: Long, batches: Seq[String],
                             applied: Seq[String],

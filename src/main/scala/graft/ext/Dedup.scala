@@ -2133,11 +2133,8 @@ object Dedup {
                                   dir: String,
                                   explicitTok: Option[Tokenizer] = None)
       : (Int, Int, Int, Int, Tokenizer) = {
-    val (kind, f) = StoreMeta.read(spark, dir).getOrElse(sys.error(
-      s"no ${StoreMeta.FileName} under $dir — write the store with " +
-        "minhashStoreBandedWrite (geometry cannot be assumed)"))
-    require(kind == "minhash-banded",
-      s"store under $dir is kind '$kind', not a banded minhash store")
+    val f = StoreMeta.open(spark, dir, "minhash-banded",
+      "a banded minhash store", "minhashStoreBandedWrite")
     require(f.get("family").contains("minhash-md5-60"),
       s"unknown signature family ${f.get("family")} under $dir")
     // the tokenizer is still the SIDECAR's: an explicit one must match its

@@ -530,12 +530,8 @@ object FuzzyJoin {
                                   threshold: Double = 0.5,
                                   broadcastBatch: Boolean = true,
                                   scope: CacheScope = null): DataFrame = {
-    val (kind, f) = StoreMeta.read(spark, storeDir).getOrElse(sys.error(
-      s"no ${StoreMeta.FileName} under $storeDir — cannot assume probe " +
-        "geometry; write the store with weightedStoreWrite"))
-    require(kind == "wminhash-banded",
-      s"store under $storeDir is kind '$kind', not a weighted banded " +
-        "linkage store")
+    val f = StoreMeta.open(spark, storeDir, "wminhash-banded",
+      "a weighted banded linkage store", "weightedStoreWrite")
     require(f.get("family").contains("wminhash-md5-60"),
       s"unknown signature family ${f.get("family")} under $storeDir")
     val numHashes = f("numHashes").toInt

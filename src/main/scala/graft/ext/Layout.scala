@@ -119,8 +119,8 @@ object Layout {
     * Sizing uses the INPUT byte total as the estimate of output bytes
     * (same codec/schema ⇒ close enough; row-group consolidation usually
     * shrinks output slightly, never pathologically). Writes to a fresh
-    * `outDir` — pair with the atomic versioned-publish pattern
-    * (`graft.etl.Pipeline`) to swap it in; never compact in place.
+    * `outDir`, which the caller publishes (points its readers at it);
+    * never compact in place.
     *
     * Returns the number of output files planned. */
   def compactTo(spark: org.apache.spark.sql.SparkSession, inDir: String,
@@ -165,7 +165,7 @@ object Layout {
     require(statsCols.nonEmpty, "writeWithManifest: no stats columns")
     df.write.mode("overwrite").parquet(outDir)
     val entries = manifestEntries(spark.read.parquet(outDir), statsCols)
-    writeManifestText(spark, outDir, entries.mkString("[", ",\n", "]"))
+    writeSidecarText(spark, outDir, "_graft_manifest.json", entries.mkString("[", ",\n", "]"))
   }
 
   /** APPEND a batch to a manifest-tracked table: write `df` in append
@@ -182,8 +182,8 @@ object Layout {
     require(statsCols.nonEmpty, "appendWithManifest: no stats columns")
     val dPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mPath = new org.apache.hadoop.fs.Path(dir, "_graft_manifest.json")
-    require(fs.exists(mPath),
+    val old = readSidecarText(spark, dir, "_graft_manifest.json")
+    require(old.isDefined,
       s"no _graft_manifest.json under $dir — writeWithManifest first")
     def listParquet(): Set[String] = {
       val it = fs.listFiles(dPath, false)
@@ -203,11 +203,11 @@ object Layout {
     // no stats rows and carry no data, so they are simply not listed (the
     // manifest IS the table's file listing, Delta-log style)
     if (entries.isEmpty) return
-    val old = readManifestText(spark, dir).trim
+    val prior = old.get.trim
     val merged =
-      if (old == "[]") entries.mkString("[", ",\n", "]")
-      else old.stripSuffix("]") + ",\n" + entries.mkString(",\n") + "]"
-    writeManifestText(spark, dir, merged)
+      if (prior == "[]") entries.mkString("[", ",\n", "]")
+      else prior.stripSuffix("]") + ",\n" + entries.mkString(",\n") + "]"
+    writeSidecarText(spark, dir, "_graft_manifest.json", merged)
   }
 
   /** One manifest entry per file of `src`: per-column [min,max] envelopes
@@ -253,37 +253,22 @@ object Layout {
       case c => c.toString
     }.mkString("\"", "", "\"")
 
-  /** Sidecar-file IO shared by the manifest and the bloom index: one
-    * place for the create/write/close and open/read-loop/close edges. */
+  /** Sidecar-file IO shared by the manifest and the bloom index: a
+    * [[graft.etl.Commit.replace]], so a crash mid-rewrite leaves the old
+    * sidecar or the new one — never JSON a later read fails to parse. */
   private def writeSidecarText(spark: org.apache.spark.sql.SparkSession,
                                dir: String, name: String, text: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
+    graft.etl.Commit.replace(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, text)
   }
 
   private def readSidecarText(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, name: String): String = {
+                              dir: String, name: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try {
-      val bs = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n > 0) { bs.write(buf, 0, n); n = in.read(buf) }
-      bs.toString("UTF-8")
-    } finally in.close()
+    graft.etl.Commit.readText(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
-
-  private def writeManifestText(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, text: String): Unit =
-    writeSidecarText(spark, dir, "_graft_manifest.json", text)
-
-  private def readManifestText(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): String =
-    readSidecarText(spark, dir, "_graft_manifest.json")
 
   /** Per-file BLOOM INDEX — equality-lookup file skipping for
     * high-cardinality columns, where [[writeWithManifest]]'s min/max
@@ -353,13 +338,11 @@ object Layout {
   def readPrunedPoint(spark: org.apache.spark.sql.SparkSession, dir: String,
                       keyCol: String, value: Long): DataFrame = {
     import org.apache.spark.util.sketch.BloomFilter
-    val bPath = new org.apache.hadoop.fs.Path(dir, "_graft_bloom.json")
-    val fs = bPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(bPath), s"no _graft_bloom.json under $dir — writeBloomIndex first")
     val json = readSidecarText(spark, dir, "_graft_bloom.json")
+    require(json.isDefined, s"no _graft_bloom.json under $dir — writeBloomIndex first")
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val parsed = JsonMethods.parse(json)
+    val parsed = JsonMethods.parse(json.get)
     val indexedCol = parsed \ "col" match {
       case JString(c) => c
       case _ => throw new IllegalArgumentException(
@@ -442,8 +425,8 @@ object Layout {
 
   /** Physically apply the deletion vector: rewrite the survivors of `dir`
     * into a fresh `outDir` with NO vector (reads of `outDir` are plain
-    * scans again). Pair with the atomic versioned-publish pattern to swap
-    * it in — never compact in place. */
+    * scans again). The caller publishes `outDir` (points its readers at
+    * it) — never compact in place. */
   def compactDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
                      outDir: String, pkCol: String): Unit =
     readWithDeletes(spark, dir, pkCol)
@@ -459,15 +442,13 @@ object Layout {
   def readPruned(spark: org.apache.spark.sql.SparkSession, dir: String,
                  statsCol: String, lo: Long, hi: Long): DataFrame = {
     require(lo <= hi, s"empty range: [$lo, $hi]")
-    val mPath = new org.apache.hadoop.fs.Path(dir, "_graft_manifest.json")
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(mPath), s"no _graft_manifest.json under $dir")
-    val json = readManifestText(spark, dir)
+    val json = readSidecarText(spark, dir, "_graft_manifest.json")
+    require(json.isDefined, s"no _graft_manifest.json under $dir")
     // json4s ships with Spark — parse the manifest structurally instead of
     // regex-scraping the serialization
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val parsed = JsonMethods.parse(json)
+    val parsed = JsonMethods.parse(json.get)
     def str(v: JValue): Option[String] = v match {
       case JString(s) => Some(s)
       case _ => None

@@ -2082,10 +2082,7 @@ object Similarity {
     * Returns the tombstone-set size after the append. */
   def hnswTombstoneAt(spark: org.apache.spark.sql.SparkSession,
                       dir: String, ids: DataFrame): Long = {
-    val kind = StoreMeta.read(spark, dir).map(_._1).getOrElse(sys.error(
-      s"no ${StoreMeta.FileName} under $dir — tombstones maintain SERVED " +
-        "hnsw indexes; write the index with hnswSave first"))
-    require(kind == "hnsw", s"store under $dir is kind '$kind', not hnsw")
+    StoreMeta.open(spark, dir, "hnsw", "hnsw", "hnswSave")
     require(ids.columns.length == 1,
       s"ids must be a ONE-column frame of index ids, got " +
         ids.columns.mkString("(", ", ", ")"))
@@ -2107,41 +2104,33 @@ object Similarity {
   /** RECLAIM a tombstone-laden served index: rebuild from the surviving
     * vectors (every construction parameter — m, maxLevel, salt, knnK,
     * bits — read from the sidecar, so the rebuild cannot drift from the
-    * original contract), save over the old index, and clear the tombstone
-    * sidecar. `vecs` is the full corpus (tombstoned vectors are dropped
-    * here — this is the op that finally hard-removes them); after it,
-    * routing no longer passes through deleted mass. Returns the number of
-    * tombstones reclaimed (0 = nothing to do, index untouched). */
+    * original contract) and swap the rebuilt index in for the old index
+    * files and the tombstone sidecar together, in one claimed swap
+    * ([[StoreMeta.swapRewrite]]; the geometry sidecar is untouched). `vecs`
+    * is the full corpus (tombstoned vectors are dropped here — this is the
+    * op that finally hard-removes them); after it, routing no longer
+    * passes through deleted mass. After a crash at any step the next open
+    * sees the old index with its tombstones or the rebuilt one without
+    * them — a tombstoned id is banned or gone, never revived. A tombstone
+    * landing while a rebuild runs is retired with the rest: serialize
+    * [[hnswTombstoneAt]] with rebuilds. Returns the number of tombstones
+    * reclaimed (0 = nothing to do, or superseded by a concurrent
+    * maintainer — index untouched). */
   def hnswRebuildAt(spark: org.apache.spark.sql.SparkSession, dir: String,
                     vecs: DataFrame, idCol: String, vecCol: String): Long = {
-    val (kind, f) = StoreMeta.read(spark, dir).getOrElse(sys.error(
-      s"no ${StoreMeta.FileName} under $dir — rebuild maintains SERVED " +
-        "hnsw indexes; write the index with hnswSave first"))
-    require(kind == "hnsw", s"store under $dir is kind '$kind', not hnsw")
-    // materialize the tombstone set to the driver BEFORE the rebuild: the
-    // overwrite save deletes the index dir — including the tombstone
-    // sidecar — while a lazy plan would still be reading it mid-write;
-    // tombstone sets are erasure-request-sized, never corpus-sized
-    val tsIds = hnswTombstonesAt(spark, dir)
-      .collect().map(_.getLong(0))
-    if (tsIds.isEmpty) return 0L
-    val (m, maxLevel, salt) = (f("m").toInt, f("maxLevel").toInt, f("salt"))
-    val (knnK, bits) = (f("knnK").toInt, f("bits").toInt)
-    val banned = spark.createDataset(tsIds.toSeq)(
-        org.apache.spark.sql.Encoders.scalaLong)
-      .toDF("id")
+    val f = StoreMeta.open(spark, dir, "hnsw", "hnsw", "hnswSave")
+    val tombstones = hnswTombstonesAt(spark, dir)
+    val reclaimed = tombstones.count()
+    if (reclaimed == 0) return 0L
+    val banned = tombstones
       .select(col("id").cast(vecs.schema(idCol).dataType).as(idCol))
     val survivors = vecs.join(broadcast(banned), Seq(idCol), "left_anti")
-    val idx = hnswBuild(survivors, idCol, vecCol, knnK = knnK, bits = bits,
-      m = m, maxLevel = maxLevel, salt = salt)
-    hnswSave(idx, dir, knnK = knnK, bits = bits, m = m,
-      maxLevel = maxLevel, salt = salt)
-    // the overwrite save already cleared the dir (tombstones included);
-    // this sweep covers filesystems whose overwrite preserves subdirs
-    val p = new org.apache.hadoop.fs.Path(dir, HnswTombstoneDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true): Unit
-    tsIds.length.toLong
+    val idx = hnswBuild(survivors, idCol, vecCol, knnK = f("knnK").toInt,
+      bits = f("bits").toInt, m = f("m").toInt,
+      maxLevel = f("maxLevel").toInt, salt = f("salt"))
+    val retire = spark.read.parquet(dir).inputFiles.toSeq :+
+      new org.apache.hadoop.fs.Path(dir, HnswTombstoneDir).toUri.toString
+    if (StoreMeta.swapRewrite(spark, dir, idx, retire)) reclaimed else 0L
   }
 
   /** [[hnswSearchPrebuilt]] against a SERVED index: the level-assignment
@@ -2159,10 +2148,7 @@ object Similarity {
                            hopsPerLevel: Int = 1, baseHops: Int = 2,
                            degBound: Int = -1,
                            scope: CacheScope = null): DataFrame = {
-    val (kind, f) = StoreMeta.read(spark, dir).getOrElse(sys.error(
-      s"no ${StoreMeta.FileName} under $dir — cannot assume descent " +
-        "geometry; write the index with hnswSave"))
-    require(kind == "hnsw", s"store under $dir is kind '$kind', not hnsw")
+    val f = StoreMeta.open(spark, dir, "hnsw", "hnsw", "hnswSave")
     hnswSearchPrebuilt(vecs, idCol, vecCol, spark.read.parquet(dir),
       queries, qidCol, qvecCol, k, beamWidth,
       m = f("m").toInt, maxLevel = f("maxLevel").toInt,

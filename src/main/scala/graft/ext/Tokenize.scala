@@ -208,10 +208,9 @@ object Tokenizer {
                   tok: Tokenizer): Unit = tok match {
     case d: Dictionary =>
       val p = new org.apache.hadoop.fs.Path(dir, LexiconFileName)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      try out.write(d.orderedWords.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
+      graft.etl.Commit.replace(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+        d.orderedWords.mkString("\n"))
     case _ => ()
   }
 
@@ -226,17 +225,16 @@ object Tokenizer {
     if (!id.startsWith("dict-")) fromId(id)
     else {
       val p = new org.apache.hadoop.fs.Path(dir, LexiconFileName)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) fromId(id) // loud: no lexicon travels with this store
-      else {
-        val in = fs.open(p)
-        val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val d = Dictionary(text.linesIterator.filter(_.nonEmpty).toSeq)
-        require(d.id == id,
-          s"lexicon sidecar under $dir hashes to ${d.id} but the store was " +
-            s"built under $id — the wordlist drifted; probing with it would " +
-            "segment differently and silently miss matches")
-        d
+      graft.etl.Commit.readText(
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration), p) match {
+        case None => fromId(id) // loud: no lexicon travels with this store
+        case Some(text) =>
+          val d = Dictionary(text.linesIterator.filter(_.nonEmpty).toSeq)
+          require(d.id == id,
+            s"lexicon sidecar under $dir hashes to ${d.id} but the store was " +
+              s"built under $id — the wordlist drifted; probing with it would " +
+              "segment differently and silently miss matches")
+          d
       }
     }
 }

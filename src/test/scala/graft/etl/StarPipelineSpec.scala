@@ -534,7 +534,7 @@ class StarPipelineSpec extends SparkSpec {
     java.nio.file.Files.write(claim, "dead-writer".getBytes("UTF-8"))
     java.nio.file.Files.setLastModifiedTime(claim,
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - StarStore.StaleClaimMs - 1000))
+        System.currentTimeMillis() - Commit.StaleClaimMs - 1000))
     // the next publish must break the stale claim and commit as v2
     assert(store.runBatch(rawBatch2, "b2") === 2)
     assert(store.versions.max === 2L)
@@ -559,8 +559,8 @@ class StarPipelineSpec extends SparkSpec {
     // its manifest yet — reclaiming it would corrupt that writer's commit
     val inflight = plant("batch_inflight", ageMs = 0)
     // a crashed attempt from long ago, and an abandoned staging dir
-    val crashed = plant("batch_crashed", StarStore.StaleClaimMs + 60000)
-    val staged = plant("_tmp_b9_deadbeef", StarStore.StaleClaimMs + 60000)
+    val crashed = plant("batch_crashed", Commit.StaleClaimMs + 60000)
+    val staged = plant("_tmp_b9_deadbeef", Commit.StaleClaimMs + 60000)
     store.sweepVersions()
     assert(java.nio.file.Files.exists(inflight),
       "sweep reclaimed a young in-flight delta")
@@ -591,7 +591,7 @@ class StarPipelineSpec extends SparkSpec {
     // the name becomes publishable again
     java.nio.file.Files.setLastModifiedTime(debris,
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - StarStore.StaleClaimMs - 60000))
+        System.currentTimeMillis() - Commit.StaleClaimMs - 60000))
     store.sweepVersions()
     assert(!java.nio.file.Files.exists(debris))
     assert(store.runBatch(rawBatch2, "b2") === 2)

@@ -45,10 +45,20 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobsOf(assert(store.runBatch(rawBatch(10), "b2") === 3)) <= 38)
   }
 
-  test("StoreMeta.compact of a 3-file served store: at most 3 jobs") {
+  test("StarStore.compact of a 3-delta store: at most 4 jobs") {
+    val store = graft.etl.StarStore(spark, tmpDir("job-budget-star-compact"),
+      autoCompactAfter = Int.MaxValue)
+    for ((b, minute) <- Seq("b1" -> 0, "b2" -> 10, "b3" -> 20))
+      assert(store.runBatch(rawBatch(minute), b) === 3)
+    assert(jobsOf(assert(store.compact() === 3L)) <= 4)
+  }
+
+  /** A banded store written from 10 docs plus two 10-doc appends, each
+    * from one partition: three part files. */
+  private def threeFileServedStore(name: String): String = {
     val docs = (1L to 30L).map(i => (i, s"served store doc $i with words w${i % 7} and x$i"))
       .toDF("doc_id", "text")
-    val dir = tmpDir("job-budget-served")
+    val dir = tmpDir(name)
     Dedup.minhashStoreBandedWrite(docs.where(col("doc_id") <= 10).coalesce(1),
       "doc_id", "text", dir, numHashes = 8, cap = 2)
     for (lo <- Seq(11L, 21L))
@@ -56,6 +66,19 @@ class JobBudgetSpec extends SparkSpec {
         docs.where(col("doc_id") >= lo && col("doc_id") < lo + 10).coalesce(1),
         "doc_id", "text")
     assert(spark.read.parquet(dir).inputFiles.length === 3)
+    dir
+  }
+
+  test("StoreMeta.compact of a 3-file served store: at most 3 jobs") {
+    val dir = threeFileServedStore("job-budget-served")
     assert(jobsOf(assert(StoreMeta.compact(spark, dir) === 3L)) <= 3)
+  }
+
+  test("StoreMeta.delete of one id from a 3-file served store: at most 7 jobs") {
+    val dir = threeFileServedStore("job-budget-served-delete")
+    val rows = spark.read.parquet(dir).where(col("store_id") === 5L).count()
+    assert(rows > 0)
+    assert(jobsOf(assert(StoreMeta.delete(spark, dir, Seq(5L).toDF("id"),
+      "store_id") === rows)) <= 7)
   }
 }

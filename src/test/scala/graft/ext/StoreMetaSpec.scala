@@ -144,8 +144,10 @@ class StoreMetaSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Dedup.minhashStoreBandedOpen(spark, dir, numHashes = 16, cap = 2)
     }
-    // no staging debris; idempotent second call is a no-op
-    assert(!new java.io.File(dir, "_graft_rewrite_tmp").exists())
+    // no commit debris (stage, claim, intent): the only `_graft_` entry
+    // left is the sidecar; idempotent second call is a no-op
+    assert(new java.io.File(dir).list().filter(_.startsWith("_graft_")).toSeq ===
+      Seq(StoreMeta.FileName))
     assert(StoreMeta.compact(spark, dir, targetFiles = 1) === 0L)
     val bare = tmp("graft-meta-compact-bare")
     docs.limit(5).write.mode("overwrite").parquet(bare)
