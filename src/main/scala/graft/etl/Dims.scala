@@ -46,8 +46,8 @@ object Dims {
     * The unpartitioned Window moves ALL new members through one partition —
     * fine for classic dims (platform, site, minute: bounded, small), NOT for
     * user-like high-cardinality dims, whose distinct-member count grows with
-    * the corpus. Route those to the scalable `zipWithIndex` twin
-    * ([[graft.etl.Fact.withFactIdsScalable]]'s pattern, `Fact.scala:60-75`):
+    * the corpus. No dim here takes that path: a dim that did would need the
+    * `zipWithIndex` form of [[graft.etl.Fact.withFactIdsScalable]] — the
     * same determinism contract when sorted first, no single-partition
     * bottleneck. */
   def withSkeys(newDim: DataFrame, naturalKey: String, skeyCol: String,

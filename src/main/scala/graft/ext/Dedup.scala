@@ -569,12 +569,9 @@ object Dedup {
       s"thresholdPpm out of (0, 1e6]: $thresholdPpm")
     require(sampleMod >= 1, s"sampleMod must be positive: $sampleMod")
     require(maxBucketSize >= 1, s"maxBucketSize must be positive: $maxBucketSize")
-    val sh = ensureParallelism(
-      df.select(col(idCol), col(textCol))
-        .where(size(words(col(textCol), tok)) >= shingleLen))
-      .select(col(idCol).cast("long").as("id"),
-        array_distinct(wordShingles(col(textCol), shingleLen, tok)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleSets(df, idCol, textCol, shingleLen, tok,
+      col(idCol).cast("long").as("id"),
+      (t, n) => array_distinct(wordShingles(t, n, tok)))
     val sampled = sh
       .select(col("id"), explode(col("sh")).as("g"))
       .where(conv(substring(md5(concat(lit("cont:"), col("g"))), 1, 15),
@@ -588,14 +585,8 @@ object Dedup {
         col("a.g") === col("b.g") && col("a.id") < col("b.id"))
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
       .distinct()
-    val verified = cand
-      .join(sh.select(col("id").as("a_id"), col("sh").as("sh_a"),
-        size(col("sh")).as("na")), "a_id")
-      .join(sh.select(col("id").as("b_id"), col("sh").as("sh_b"),
-        size(col("sh")).as("nb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
-        col("na"), col("nb"))
+    val verified = overlapPairs(cand, "a_id", "b_id", sh, sh, "id")
+      .withColumnRenamed("ni", "inter")
       .withColumn("cont_ppm",
         expr("(cast(inter AS bigint) * 1000000) div least(na, nb)"))
       .where(col("cont_ppm") >= thresholdPpm)
@@ -686,6 +677,53 @@ object Dedup {
     if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
   }
 
+  /** Persisted (id, `sh`) shingle-set frame of the rows with at least
+    * `shingleLen` tokens, the rest dropped (their shingle set is empty —
+    * they can never match). `idOut` projects the id; `shinglesOf` builds
+    * the set from the text and the shingle length. The filter runs on the
+    * RAW text (size(words) >= n ⟺ shingle set non-empty): cheap enough to
+    * push to the scan, unlike a size(sh) > 0 filter, which Catalyst would
+    * rewrite into a full shingle recompute at the scan. ensureParallelism
+    * widens a narrow input before the heavy shingle projection — and is a
+    * no-op for an already-well-split input. The caller hands the cache
+    * over ([[CacheScope]]). */
+  private[ext] def shingleSets(df: DataFrame, idCol: String, textCol: String,
+                               shingleLen: Int, tok: Tokenizer, idOut: Column,
+                               shinglesOf: (Column, Int) => Column): DataFrame =
+    ensureParallelism(
+      df.select(col(idCol), col(textCol))
+        .where(size(words(col(textCol), tok)) >= shingleLen))
+      .select(idOut, shinglesOf(col(textCol), shingleLen).as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The exact verify of every filter-and-verify join here: each candidate
+    * (`a`, `b`) pair joined to its sides' set frames (`idCol`, `setCol`) on
+    * each id, with |A∩B| from one array_intersect and both set sizes.
+    * Output: (a, b, ni, na, nb) — the caller scores on top; for sets
+    * |A∪B| = na + nb − ni, so no union array is ever materialized. */
+  private[ext] def overlapPairs(cand: DataFrame, a: String, b: String,
+                                setsA: DataFrame, setsB: DataFrame,
+                                idCol: String,
+                                setCol: String = "sh"): DataFrame =
+    cand
+      .join(setsA.select(col(idCol).as(a), col(setCol).as("sh_a"),
+        size(col(setCol)).as("na")), a)
+      .join(setsB.select(col(idCol).as(b), col(setCol).as("sh_b"),
+        size(col(setCol)).as("nb")), b)
+      .select(col(a), col(b),
+        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"),
+        col("na"), col("nb"))
+
+  /** [[overlapPairs]] scored by set Jaccard ni / (na + nb − ni), kept at
+    * `jaccard` >= threshold. Output: (a, b, jaccard). */
+  private[ext] def jaccardPairs(overlap: DataFrame, a: String, b: String,
+                                threshold: Double): DataFrame =
+    overlap
+      .select(col(a), col(b),
+        (col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
+          .as("jaccard"))
+      .where(col("jaccard") >= threshold)
+
   private def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                            shingleLen: Int, numHashes: Int, threshold: Double,
                            bandRows: Int, maxBucketSize: Int, scope: CacheScope,
@@ -694,16 +732,8 @@ object Dedup {
                            hashBands: Boolean = false,
                            minSigAgree: Int = 0,
                            tok: Tokenizer = Tokenizer.Whitespace): DataFrame = {
-    // Pre-shingle filter on the RAW text (size(words) >= n ⟺ shingle set
-    // non-empty): cheap enough to push to the scan, unlike a size(sh) > 0
-    // filter, which Catalyst would rewrite into a full shingle recompute at
-    // the scan. ensureParallelism widens a narrow input before the heavy
-    // shingle projection — and is a no-op for an already-well-split input.
-    val sh = ensureParallelism(
-      df.select(col(idCol), col(textCol))
-        .where(size(words(col(textCol), tok)) >= shingleLen))
-      .select(col(idCol), shinglesOf(col(textCol), shingleLen).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleSets(df, idCol, textCol, shingleLen, tok, col(idCol),
+      shinglesOf)
     // AdaptiveBucket resolves to c·√N here, where the count is a single
     // pass that materializes the shingle cache everything downstream reads
     require(maxBucketSize > 0 || maxBucketSize == AdaptiveBucket,
@@ -741,20 +771,9 @@ object Dedup {
         .where(size(filter(zip_with(col("sig_a"), col("sig_b"),
           (x, y) => x === y), hit => hit)) >= minSigAgree)
         .select(col("a_id"), col("b_id"))
-    // Verify with one array_intersect per pair: |A∪B| = |A|+|B|-|A∩B| for
-    // sets, so the (identical-valued) union array is never materialized.
-    val out = cand
-      .join(sh.select(col(idCol).as("a_id"), col("sh").as("sh_a"),
-        size(col("sh")).as("na")), "a_id")
-      .join(sh.select(col(idCol).as("b_id"), col("sh").as("sh_b"),
-        size(col("sh")).as("nb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"),
-        col("na"), col("nb"))
-      .select(col("a_id"), col("b_id"),
-        (col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val out = jaccardPairs(
+      overlapPairs(cand, "a_id", "b_id", sh, sh, idCol), "a_id", "b_id",
+      threshold)
     CacheScope.handOver(scope, out,
       Seq(sh, if (needSigJoin) sig else null) ++ bandCaches: _*)
   }
@@ -784,19 +803,9 @@ object Dedup {
       .select(col(idCol),
         hashedWordShingles(col(textCol), shingleLen, tok).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = cands
-      .select(col(aCol), col(bCol)).distinct()
-      .join(sh.select(col(idCol).as(aCol), col("sh").as("sh_a"),
-        size(col("sh")).as("na")), aCol)
-      .join(sh.select(col(idCol).as(bCol), col("sh").as("sh_b"),
-        size(col("sh")).as("nb")), bCol)
-      .select(col(aCol), col(bCol),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("ni"),
-        col("na"), col("nb"))
-      .select(col(aCol), col(bCol),
-        (col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val out = jaccardPairs(overlapPairs(
+      cands.select(col(aCol), col(bCol)).distinct(), aCol, bCol, sh, sh, idCol),
+      aCol, bCol, threshold)
     CacheScope.handOver(scope, out, sh)
   }
 
@@ -1781,12 +1790,9 @@ object Dedup {
           lit(thresholdNum) * greatest(col("sa"), col("sb")))
       .select(col("a_id"), col("b_id"))
       .distinct() // a pair can share several prefix tokens
-    val out = cand
-      .join(ordered.select(col(idCol).as("a_id"), col("ts").as("_ta")), "a_id")
-      .join(ordered.select(col(idCol).as("b_id"), col("ts").as("_tb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("_ta"), col("_tb"))).cast("long").as("inter_cnt"),
-        (size(col("_ta")) + size(col("_tb"))).cast("long").as("_sab"))
+    val out = overlapPairs(cand, "a_id", "b_id", ordered, ordered, idCol, "ts")
+      .select(col("a_id"), col("b_id"), col("ni").cast("long").as("inter_cnt"),
+        (col("na") + col("nb")).cast("long").as("_sab"))
       .select(col("a_id"), col("b_id"), col("inter_cnt"),
         (col("_sab") - col("inter_cnt")).as("union_cnt"))
       .where(lit(thresholdDen) * col("inter_cnt") >=
@@ -1917,17 +1923,8 @@ object Dedup {
     val cap =
       if (maxBucketSize != AdaptiveBucket) maxBucketSize
       else adaptiveBucketCap(storeP.count())
-    val s = bandedSig(storeP, "store", numHashes, bandRows)
-    val sCapped =
-      if (cap == Int.MaxValue) s
-      else {
-        // deterministic representatives: the cap lowest store ids per
-        // bucket — the rank exchange shares the candidate join's key
-        import org.apache.spark.sql.expressions.Window
-        s.withColumn("_bn", row_number().over(
-            Window.partitionBy("band", "v").orderBy("store_id")))
-          .where(col("_bn") <= cap).drop("_bn")
-      }
+    // the rank exchange of the cap shares the candidate join's key
+    val sCapped = capBuckets(bandedSig(storeP, "store", numHashes, bandRows), cap)
     val b = bandedSig(
       minhashStore(batch, idCol, textCol, shingleLen, numHashes, tok), "batch",
       numHashes, bandRows)
@@ -1968,6 +1965,18 @@ object Dedup {
       .distinct()
   }
 
+  /** Deterministic bucket representatives: the `cap` lowest `store_id`s
+    * of each (band, v) bucket of a banded store frame (`Int.MaxValue`
+    * keeps every row). */
+  private[ext] def capBuckets(banded: DataFrame, cap: Int): DataFrame =
+    if (cap == Int.MaxValue) banded
+    else {
+      import org.apache.spark.sql.expressions.Window
+      banded.withColumn("_bn", row_number().over(
+          Window.partitionBy("band", "v").orderBy("store_id")))
+        .where(col("_bn") <= cap).drop("_bn")
+    }
+
   private def sigAgree(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.GraftColumnBridge
     GraftColumnBridge.column(graft.ext.expressions.SigAgreeExpr(
@@ -2006,16 +2015,9 @@ object Dedup {
       s"numHashes $numHashes must be a multiple of bandRows $bandRows")
     require(cap > 0,
       s"cap must be positive and FIXED for the store's lifetime (AdaptiveBucket is not append-stable): $cap")
-    val s = bandedSig(
+    capBuckets(bandedSig(
       minhashStore(docs, idCol, textCol, shingleLen, numHashes, tok),
-      "store", numHashes, bandRows)
-    if (cap == Int.MaxValue) s
-    else {
-      import org.apache.spark.sql.expressions.Window
-      s.withColumn("_bn", row_number().over(
-          Window.partitionBy("band", "v").orderBy("store_id")))
-        .where(col("_bn") <= cap).drop("_bn")
-    }
+      "store", numHashes, bandRows), cap)
   }
 
   /** Write a served [[minhashStoreBanded]] store as a BUCKETED+sorted
@@ -2130,28 +2132,16 @@ object Dedup {
     * [[FuzzyJoin.linkageAgainstStore]] shingles its exact verify with the
     * SAME law the store was built under. */
   private[ext] def bandedGeometry(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String,
-                                  explicitTok: Option[Tokenizer] = None)
+                                  dir: String)
       : (Int, Int, Int, Int, Tokenizer) = {
     val f = StoreMeta.open(spark, dir, "minhash-banded",
       "a banded minhash store", "minhashStoreBandedWrite")
     require(f.get("family").contains("minhash-md5-60"),
       s"unknown signature family ${f.get("family")} under $dir")
-    // the tokenizer is still the SIDECAR's: an explicit one must match its
-    // recorded id (the caller supplies the lexicon, never the geometry);
-    // otherwise fromIdAt — a dict-* id reconstructs its Dictionary from
-    // the lexicon sidecar next to the store (content-hash re-verified)
-    val tok = explicitTok match {
-      case Some(t) =>
-        require(t.id == f("tokenizer"),
-          s"explicit tokenizer ${t.id} does not match the store's " +
-            s"recorded ${f("tokenizer")} under $dir — probing with a " +
-            "different segmentation silently misses matches, refusing")
-        t
-      case None => Tokenizer.fromIdAt(spark, dir, f("tokenizer"))
-    }
+    // a dict-* id reconstructs its Dictionary from the lexicon sidecar next
+    // to the store (content-hash re-verified)
     (f("shingleLen").toInt, f("numHashes").toInt, f("bandRows").toInt,
-      f("cap").toInt, tok)
+      f("cap").toInt, Tokenizer.fromIdAt(spark, dir, f("tokenizer")))
   }
 
   /** [[minhashStoreBandedAppend]] with the geometry read FROM the store's
@@ -2190,10 +2180,10 @@ object Dedup {
   def fingerprintStoreDeleteAt(spark: org.apache.spark.sql.SparkSession,
                                dir: String, ids: DataFrame,
                                family: String): Long = {
-    StoreMeta.check(spark, dir, "fingerprint64",
-      Map("family" -> family, "bits" -> "64"))
-    val idCol = StoreMeta.read(spark, dir).get._2.getOrElse("idCol",
-      sys.error(s"fingerprint store under $dir records no idCol"))
+    val idCol = StoreMeta.checked(spark, dir, "fingerprint64",
+        Map("family" -> family, "bits" -> "64"))
+      .getOrElse("idCol",
+        sys.error(s"fingerprint store under $dir records no idCol"))
     StoreMeta.delete(spark, dir, ids, idCol)
   }
 
@@ -2209,24 +2199,6 @@ object Dedup {
     nearDupAgainstBandedStore(ensureParallelism(spark.read.parquet(dir)),
       batch, idCol, textCol,
       shingleLen, numHashes, threshold, bandRows, broadcastBatch, tok)
-  }
-
-  /** [[nearDupAgainstBandedStoreAt]] with the caller supplying the
-    * TOKENIZER (geometry still comes from the sidecar): for [[Tokenizer
-    * .Dictionary]] stores written before the lexicon sidecar shipped —
-    * the supplied tokenizer's content-hash id must equal the sidecar's
-    * recorded id, so a wrong wordlist still refuses loudly. */
-  def nearDupAgainstBandedStoreAtWith(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame,
-      idCol: String, textCol: String, tok: Tokenizer,
-      threshold: Double = 0.5,
-      broadcastBatch: Boolean = true): DataFrame = {
-    val (shingleLen, numHashes, bandRows, _, t) =
-      bandedGeometry(spark, dir, Some(tok))
-    nearDupAgainstBandedStore(ensureParallelism(spark.read.parquet(dir)),
-      batch, idCol, textCol,
-      shingleLen, numHashes, threshold, bandRows, broadcastBatch, t)
   }
 
   /** Append DELTA for a served [[minhashStoreBanded]] store: the new banded

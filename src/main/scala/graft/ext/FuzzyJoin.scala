@@ -106,45 +106,6 @@ object FuzzyJoin {
     val cand = Dedup.nearDupAgainstBandedStoreAt(spark, storeDir, batch,
         batchId, batchText, candidateThreshold, broadcastBatch)
       .select(col("batch_id").as("_fj_l"), col("store_id").as("_fj_r"))
-    storeVerify(cand, batch, batchId, batchText, catalog, catalogId,
-      catalogText, shingleLen, tok, threshold, scope)
-  }
-
-  /** [[linkageAgainstStore]] with the caller supplying the TOKENIZER — for
-    * [[Tokenizer.Dictionary]] stores written before the lexicon sidecar
-    * shipped (newer dict stores resolve their lexicon from the sidecar and
-    * need nothing supplied). The supplied tokenizer's content-hash id must
-    * equal the sidecar's recorded id; geometry still comes from the
-    * sidecar, so nothing else can drift. */
-  def linkageAgainstStoreWith(spark: org.apache.spark.sql.SparkSession,
-                              storeDir: String,
-                              catalog: DataFrame, catalogId: String,
-                              catalogText: String,
-                              batch: DataFrame, batchId: String,
-                              batchText: String, tok: Tokenizer,
-                              threshold: Double = 0.5,
-                              candidateThreshold: Double = 0.0,
-                              broadcastBatch: Boolean = true,
-                              scope: CacheScope = null): DataFrame = {
-    val (shingleLen, _, _, _, t) =
-      Dedup.bandedGeometry(spark, storeDir, Some(tok))
-    // no second distinct — see linkageAgainstStore
-    val cand = Dedup.nearDupAgainstBandedStoreAtWith(spark, storeDir, batch,
-        batchId, batchText, t, candidateThreshold, broadcastBatch)
-      .select(col("batch_id").as("_fj_l"), col("store_id").as("_fj_r"))
-    storeVerify(cand, batch, batchId, batchText, catalog, catalogId,
-      catalogText, shingleLen, t, threshold, scope)
-  }
-
-  /** Shared tail of the served-store probes: exact verify of the probe's
-    * candidate pairs under the store's shingle law. */
-  private def storeVerify(cand: DataFrame,
-                          batch: DataFrame, batchId: String,
-                          batchText: String,
-                          catalog: DataFrame, catalogId: String,
-                          catalogText: String,
-                          shingleLen: Int, tok: Tokenizer,
-                          threshold: Double, scope: CacheScope): DataFrame = {
     val shL = shingled(batch, batchId, batchText, shingleLen, tok)
     val shR = shingled(catalog, catalogId, catalogText, shingleLen, tok)
     CacheScope.handOver(scope, verifyPairs(cand, shL, shR, threshold), shL, shR)
@@ -187,40 +148,6 @@ object FuzzyJoin {
       linkageAgainstStore(spark, storeDir, catalog, catalogId, catalogText,
         batch, batchId, batchText, threshold, candidateThreshold,
         broadcastBatch, scope))
-
-  /** [[bestMatchAgainstStore]] with the caller supplying the tokenizer
-    * ([[linkageAgainstStoreWith]]'s contract — for Dictionary stores whose
-    * lexicon ships out of band; the id must equal the sidecar's). */
-  def bestMatchAgainstStoreWith(spark: org.apache.spark.sql.SparkSession,
-                                storeDir: String,
-                                catalog: DataFrame, catalogId: String,
-                                catalogText: String,
-                                batch: DataFrame, batchId: String,
-                                batchText: String, tok: Tokenizer,
-                                threshold: Double = 0.5,
-                                candidateThreshold: Double = 0.0,
-                                broadcastBatch: Boolean = true,
-                                scope: CacheScope = null): DataFrame =
-    bestOf(linkageAgainstStoreWith(spark, storeDir, catalog, catalogId,
-      catalogText, batch, batchId, batchText, tok, threshold,
-      candidateThreshold, broadcastBatch, scope))
-
-  /** [[censusAgainstStore]] with the caller supplying the tokenizer
-    * ([[linkageAgainstStoreWith]]'s contract). */
-  def censusAgainstStoreWith(spark: org.apache.spark.sql.SparkSession,
-                             storeDir: String,
-                             catalog: DataFrame, catalogId: String,
-                             catalogText: String,
-                             batch: DataFrame, batchId: String,
-                             batchText: String, tok: Tokenizer,
-                             threshold: Double = 0.5,
-                             candidateThreshold: Double = 0.0,
-                             broadcastBatch: Boolean = true,
-                             scope: CacheScope = null): DataFrame =
-    censusOf(batch.select(col(batchId).as("left_id")),
-      linkageAgainstStoreWith(spark, storeDir, catalog, catalogId,
-        catalogText, batch, batchId, batchText, tok, threshold,
-        candidateThreshold, broadcastBatch, scope))
 
   /** Frequency-weighted linkage: [[linkage]]'s candidate machinery with
     * the verify scored by WEIGHTED Jaccard, w(t) = 1/df(t) — the standard
@@ -479,7 +406,8 @@ object FuzzyJoin {
     * threshold against stably). Catalog changes = rebuild (an append
     * would silently drift df for every existing signature — refusing that
     * trade is the point of freezing). `cap` is the store-side bucket
-    * valve ([[Dedup.minhashStoreBanded]]'s first-arrivals rank law). */
+    * valve ([[Dedup.capBuckets]], the law [[Dedup.minhashStoreBanded]]
+    * caps by). */
   def weightedStoreWrite(catalog: DataFrame, catalogId: String,
                          catalogText: String, dir: String,
                          numHashes: Int = 16, quantK: Int = 24,
@@ -492,15 +420,10 @@ object FuzzyJoin {
     val sh = shingled(catalog, catalogId, catalogText, 1, tok)
     val vocab = sh.select(explode(col("sh")).as("_fj_t"))
       .groupBy("_fj_t").agg(count(lit(1)).as("_fj_df"))
-    val banded0 = weightedBandedRows(sh, vocab, quantK, numHashes,
-      "store_id")
-    val capped =
-      if (cap == Int.MaxValue) banded0
-      else banded0.withColumn("_bn", row_number().over(
-          Window.partitionBy("band", "v").orderBy("store_id")))
-        .where(col("_bn") <= cap).drop("_bn")
     // the signature frame FIRST (overwrite clears the dir), sidecars after
-    capped.write.mode("overwrite").parquet(dir)
+    Dedup.capBuckets(weightedBandedRows(sh, vocab, quantK, numHashes,
+        "store_id"), cap)
+      .write.mode("overwrite").parquet(dir)
     vocab.select(col("_fj_t").as("t"), col("_fj_df").as("df"))
       .write.mode("overwrite").parquet(s"$dir/$WeightedVocabDir")
     StoreMeta.write(spark, dir, "wminhash-banded", Map(
@@ -587,22 +510,13 @@ object FuzzyJoin {
     if (dedup) raw.distinct() else raw
   }
 
-  /** Exact verify: |A∪B| = |A|+|B|-|A∩B| for the distinct-shingle sets,
-    * so no union array is ever materialized. */
+  /** Exact shingle-set Jaccard verify ([[Dedup.overlapPairs]]). Output:
+    * (left_id, right_id, jaccard). */
   private def verifyPairs(cand: DataFrame, shL: DataFrame, shR: DataFrame,
                           threshold: Double): DataFrame =
-    cand
-      .join(shL.select(col("_fj_id").as("_fj_l"), col("sh").as("sh_l"),
-        size(col("sh")).as("nl")), "_fj_l")
-      .join(shR.select(col("_fj_id").as("_fj_r"), col("sh").as("sh_r"),
-        size(col("sh")).as("nr")), "_fj_r")
-      .select(col("_fj_l"), col("_fj_r"),
-        size(array_intersect(col("sh_l"), col("sh_r"))).as("ni"),
-        col("nl"), col("nr"))
-      .select(col("_fj_l").as("left_id"), col("_fj_r").as("right_id"),
-        (col("ni").cast("double") / (col("nl") + col("nr") - col("ni")))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    Dedup.jaccardPairs(Dedup.overlapPairs(cand, "_fj_l", "_fj_r", shL, shR,
+        "_fj_id"), "_fj_l", "_fj_r", threshold)
+      .toDF("left_id", "right_id", "jaccard")
 
   /** Top-1 linkage: for every left row with at least one verified match,
     * its best right match (highest Jaccard; ties broken by smallest
@@ -707,19 +621,14 @@ object FuzzyJoin {
     statused.groupBy("status").agg(count(lit(1)).as("n"))
   }
 
-  /** Shared per-side prep: (id, distinct shingle set), rows with fewer
-    * tokens than the shingle length dropped (their shingle set is empty —
-    * they can never match), persisted because the frame feeds both the
+  /** Shared per-side prep: (`_fj_id`, distinct shingle set) via
+    * [[Dedup.shingleSets]], persisted because the frame feeds both the
     * signature projection and the exact-verify join. The entry point hands
     * the cache over against the frame it returns. */
   private def shingled(df: DataFrame, idCol: String, textCol: String,
                        shingleLen: Int, tok: Tokenizer): DataFrame =
-    Dedup.ensureParallelism(
-      df.select(col(idCol), col(textCol))
-        .where(size(Dedup.words(col(textCol), tok)) >= shingleLen))
-      .select(col(idCol).as("_fj_id"),
-        Dedup.wordShingles(col(textCol), shingleLen, tok).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dedup.shingleSets(df, idCol, textCol, shingleLen, tok,
+      col(idCol).as("_fj_id"), Dedup.wordShingles(_, _, tok))
 
   /** (band, v, id) rows: band b carries the b-th md5-min signature value.
     * bandRows is fixed at 1 — with the portable md5-string family each

@@ -89,7 +89,14 @@ object StoreMeta {
   /** Verify a store's sidecar against the geometry a probe is about to
     * assume ([[open]]). Throws with the FULL field diff on any drift. */
   def check(spark: SparkSession, dir: String, kind: String,
-            expected: Map[String, String]): Unit = {
+            expected: Map[String, String]): Unit =
+    checked(spark, dir, kind, expected): Unit
+
+  /** [[check]] returning the sidecar's fields, for a caller that reads more
+    * of them than it verifies — one sidecar open, not a check plus a read. */
+  private[ext] def checked(spark: SparkSession, dir: String, kind: String,
+                           expected: Map[String, String])
+      : Map[String, String] = {
     val got = open(spark, dir, kind, s"'$kind'", "its meta-writing API " +
       "(or StoreMeta.write a sidecar for legacy state)")
     val drifted = expected.toSeq.sortBy(_._1).flatMap { case (k, v) =>
@@ -103,6 +110,7 @@ object StoreMeta {
       s"store geometry mismatch under $dir (kind=$kind) — probing with " +
         s"drifted parameters returns silently near-empty matches, refusing: " +
         drifted.mkString("; "))
+    got
   }
 
   /** Compact a served store DIRECTORY in place: rewrite the parquet part

@@ -177,16 +177,15 @@ object Tokenizer {
     * served store's [[StoreMeta]] sidecar) back to its tokenizer. Loud on
     * an unknown id — a store built with a tokenizer this build does not
     * ship (or a [[Dictionary]] whose lexicon sidecar is absent — see
-    * [[fromIdAt]]) cannot be probed faithfully without the caller
-    * supplying it. */
+    * [[fromIdAt]]) cannot be probed faithfully. */
   def fromId(id: String): Tokenizer = id match {
     case Whitespace.id => Whitespace
     case ScriptAware.id => ScriptAware
     case d if d.startsWith("dict-") => sys.error(
-      s"store was built with a Dictionary tokenizer ($d) — open the store " +
-        "through an API that reads the lexicon sidecar (Tokenizer.fromIdAt) " +
-        "or pass the same lexicon explicitly (Tokenizer.Dictionary(words).id " +
-        "must equal the sidecar id)")
+      s"store was built with a Dictionary tokenizer ($d) and carries no " +
+        "lexicon sidecar — repair it with Tokenizer.saveLexicon(spark, dir, " +
+        "Tokenizer.Dictionary(words)) (the words must hash to the sidecar " +
+        "id), then open it through an API that reads it (Tokenizer.fromIdAt)")
     case other => sys.error(
       s"unknown tokenizer id '$other' in store sidecar — the store was " +
         "built with a tokenizer this build does not provide")
@@ -218,8 +217,11 @@ object Tokenizer {
     * sidecar from: a `dict-*` id loads [[LexiconFileName]] under `dir`,
     * rebuilds the tokenizer, and REQUIRES the rebuilt content-hash id to
     * equal the sidecar's — a tampered or swapped wordlist still refuses
-    * loudly; a missing lexicon file falls back to [[fromId]]'s error
-    * (legacy dict stores written before the sidecar shipped). */
+    * loudly; a missing lexicon file falls back to [[fromId]]'s error. A
+    * dict store written before the sidecar shipped is repaired by
+    * [[saveLexicon]] with the same words (it writes [[LexiconFileName]]
+    * into `dir`, so a read-only store is copied first); the id check here
+    * then refuses any other wordlist. */
   def fromIdAt(spark: org.apache.spark.sql.SparkSession, dir: String,
                id: String): Tokenizer =
     if (!id.startsWith("dict-")) fromId(id)

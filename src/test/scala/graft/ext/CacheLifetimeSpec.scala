@@ -22,8 +22,8 @@ class CacheLifetimeSpec extends SparkSpec {
     * nothing at fixture size (the driver union-find, broadcast-only
     * operators, a batch small enough to pin locally). Entry points that
     * only pass their scope on to another row's operator have no row of
-    * their own: the FuzzyJoin best-match, census and caller-tokenizer
-    * forms, `graphTopKFiltered` and `hnswSearchPrebuiltAt`. */
+    * their own: the FuzzyJoin best-match and census forms,
+    * `graphTopKFiltered` and `hnswSearchPrebuiltAt`. */
   private case class Op(name: String, run: CacheScope => DataFrame,
                         scoped: Boolean = true, holds: Boolean = true)
 

@@ -295,45 +295,57 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(servedCensus.values.sum === left.count())
   }
 
-  test("linkageAgainstStoreWith: an explicit tokenizer must match the " +
-      "sidecar's recorded id; matching it equals the sidecar-driven probe") {
+  test("linkageAgainstStore on a Dictionary store: a missing lexicon " +
+      "refuses naming saveLexicon; the repair equals the batch twins, " +
+      "another wordlist refuses") {
+    val dict = Tokenizer.Dictionary(Seq("น้ำ", "กิน"))
     val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy-tok")
       .toString
     Dedup.minhashStoreBandedWrite(right, "rid", "rname", dir,
-      shingleLen = 1, numHashes = 16)
+      shingleLen = 1, numHashes = 16, tok = dict)
+    // a store written before the lexicon sidecar shipped
+    val lex = new org.apache.hadoop.fs.Path(dir, Tokenizer.LexiconFileName)
+    lex.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(lex, false): Unit
+    val missing = intercept[RuntimeException] {
+      FuzzyJoin.linkageAgainstStore(spark, dir, right, "rid", "rname",
+        left, "id", "name")
+    }
+    assert(missing.getMessage.contains("saveLexicon"))
+    Tokenizer.saveLexicon(spark, dir, dict)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r0 => (r0.getLong(0), r0.getLong(1))).toSet
-    val explicit = key(FuzzyJoin.linkageAgainstStoreWith(spark, dir,
-      right, "rid", "rname", left, "id", "name", Tokenizer.Whitespace,
-      threshold = 0.5))
-    val implicitly0 = key(FuzzyJoin.linkageAgainstStore(spark, dir,
+    val served = key(FuzzyJoin.linkageAgainstStore(spark, dir,
       right, "rid", "rname", left, "id", "name", threshold = 0.5))
-    assert(explicit === implicitly0)
-    assert(explicit.nonEmpty)
-    val e = intercept[IllegalArgumentException] {
-      FuzzyJoin.linkageAgainstStoreWith(spark, dir, right, "rid", "rname",
-        left, "id", "name", Tokenizer.ScriptAware)
-    }
-    assert(e.getMessage.contains("does not match"))
-    // the operational forms ride the same explicit-tokenizer seam
-    val bestW = FuzzyJoin.bestMatchAgainstStoreWith(spark, dir,
-        right, "rid", "rname", left, "id", "name", Tokenizer.Whitespace,
-        threshold = 0.5)
-      .collect().map(r0 => (r0.getLong(0), r0.getLong(1), r0.getLong(3)))
-      .toSet
+    val batch = key(FuzzyJoin.linkage(left, "id", "name", right, "rid",
+      "rname", shingleLen = 1, numHashes = 16, threshold = 0.5, tok = dict))
+    assert(served === batch)
+    assert(served.nonEmpty)
     val best = FuzzyJoin.bestMatchAgainstStore(spark, dir,
         right, "rid", "rname", left, "id", "name", threshold = 0.5)
       .collect().map(r0 => (r0.getLong(0), r0.getLong(1), r0.getLong(3)))
       .toSet
-    assert(bestW === best && bestW.nonEmpty)
-    val censusW = FuzzyJoin.censusAgainstStoreWith(spark, dir,
-        right, "rid", "rname", left, "id", "name", Tokenizer.Whitespace,
-        threshold = 0.5)
-      .collect().map(r0 => r0.getString(0) -> r0.getLong(1)).toMap
+    val batchBest = FuzzyJoin.bestMatch(left, "id", "name",
+        right, "rid", "rname", shingleLen = 1, numHashes = 16,
+        threshold = 0.5, tok = dict)
+      .collect().map(r0 => (r0.getLong(0), r0.getLong(1), r0.getLong(3)))
+      .toSet
+    assert(best === batchBest && best.nonEmpty)
     val census = FuzzyJoin.censusAgainstStore(spark, dir,
         right, "rid", "rname", left, "id", "name", threshold = 0.5)
       .collect().map(r0 => r0.getString(0) -> r0.getLong(1)).toMap
-    assert(censusW === census)
+    val batchCensus = FuzzyJoin.linkageCensus(left, "id", "name",
+        right, "rid", "rname", shingleLen = 1, numHashes = 16,
+        threshold = 0.5, tok = dict)
+      .collect().map(r0 => r0.getString(0) -> r0.getLong(1)).toMap
+    assert(census === batchCensus)
+    // a repair with another wordlist hashes differently: refuse
+    Tokenizer.saveLexicon(spark, dir, Tokenizer.Dictionary(Seq("น้ำ")))
+    val e = intercept[IllegalArgumentException] {
+      FuzzyJoin.linkageAgainstStore(spark, dir, right, "rid", "rname",
+        left, "id", "name")
+    }
+    assert(e.getMessage.contains("drifted"))
   }
 
   test("streamed drops against the served store union to the batch result " +

@@ -53,17 +53,24 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobsOf(assert(store.compact() === 3L)) <= 4)
   }
 
+  private def servedText(i: Long) = s"served store doc $i with words w${i % 7} and x$i"
+
+  private lazy val servedDocs =
+    (1L to 30L).map(i => (i, servedText(i))).toDF("doc_id", "text")
+
+  /** Ten batch docs repeating the texts of store docs 1..10 under new ids. */
+  private lazy val probeBatch =
+    (1L to 10L).map(i => (100L + i, servedText(i))).toDF("doc_id", "text")
+
   /** A banded store written from 10 docs plus two 10-doc appends, each
     * from one partition: three part files. */
   private def threeFileServedStore(name: String): String = {
-    val docs = (1L to 30L).map(i => (i, s"served store doc $i with words w${i % 7} and x$i"))
-      .toDF("doc_id", "text")
     val dir = tmpDir(name)
-    Dedup.minhashStoreBandedWrite(docs.where(col("doc_id") <= 10).coalesce(1),
+    Dedup.minhashStoreBandedWrite(servedDocs.where(col("doc_id") <= 10).coalesce(1),
       "doc_id", "text", dir, numHashes = 8, cap = 2)
     for (lo <- Seq(11L, 21L))
       Dedup.minhashStoreBandedAppendAt(spark, dir,
-        docs.where(col("doc_id") >= lo && col("doc_id") < lo + 10).coalesce(1),
+        servedDocs.where(col("doc_id") >= lo && col("doc_id") < lo + 10).coalesce(1),
         "doc_id", "text")
     assert(spark.read.parquet(dir).inputFiles.length === 3)
     dir
@@ -80,5 +87,34 @@ class JobBudgetSpec extends SparkSpec {
     assert(rows > 0)
     assert(jobsOf(assert(StoreMeta.delete(spark, dir, Seq(5L).toDF("id"),
       "store_id") === rows)) <= 7)
+  }
+
+  test("nearDupAgainstBandedStoreAt probe of a 3-file served store: at most 5 jobs") {
+    val dir = threeFileServedStore("job-budget-probe")
+    assert(jobsOf(assert(Dedup.nearDupAgainstBandedStoreAt(spark, dir,
+      probeBatch, "doc_id", "text").collect().nonEmpty)) <= 5)
+  }
+
+  test("minhashStoreBandedAppendAt of a 10-doc batch: at most 7 jobs") {
+    val dir = threeFileServedStore("job-budget-append")
+    val batch = (31L to 40L).map(i => (i, servedText(i))).toDF("doc_id", "text")
+    assert(jobsOf(Dedup.minhashStoreBandedAppendAt(spark, dir, batch,
+      "doc_id", "text")) <= 7)
+    assert(spark.read.parquet(dir).where(col("store_id") > 30L).count() > 0)
+  }
+
+  test("FuzzyJoin.linkageAgainstStore of a 10-doc batch: at most 9 jobs") {
+    val dir = threeFileServedStore("job-budget-linkage")
+    assert(jobsOf(assert(FuzzyJoin.linkageAgainstStore(spark, dir,
+      servedDocs, "doc_id", "text", probeBatch, "doc_id", "text")
+      .collect().nonEmpty)) <= 9)
+  }
+
+  test("nearDuplicatesFast on a 30-doc corpus: at most 9 jobs") {
+    val corpus = (1L to 30L).map(i =>
+      (i, s"corpus doc ${i % 15} and its twin share every word x${i % 15}"))
+      .toDF("doc_id", "text")
+    assert(jobsOf(assert(Dedup.nearDuplicatesFast(corpus, "doc_id", "text")
+      .collect().nonEmpty)) <= 9)
   }
 }

@@ -261,25 +261,29 @@ class StoreMetaSpec extends SparkSpec {
       Dedup.nearDupAgainstBandedStoreAt(spark, dir, batch, "doc_id", "text")
     }
     assert(drift.getMessage.contains("drifted"))
-    // a MISSING lexicon (legacy store) falls back to the loud fromId error
+    // a MISSING lexicon (a store written before the sidecar shipped) falls
+    // back to the loud fromId error, which names the repair
     hFs.delete(hPath, false): Unit
     val missing = intercept[RuntimeException] {
       Dedup.nearDupAgainstBandedStoreAt(spark, dir, batch, "doc_id", "text")
     }
     assert(missing.getMessage.contains("Dictionary"))
-    // ... which the explicit-tokenizer overload recovers from WITHOUT the
-    // sidecar file (the caller's lexicon hashes to the recorded id)
-    val explicit = Dedup.nearDupAgainstBandedStoreAtWith(spark, dir, batch,
-        "doc_id", "text", dict)
+    assert(missing.getMessage.contains("saveLexicon"))
+    // ... the repair: saveLexicon with the store's own wordlist, after which
+    // the plain probe equals the direct one
+    Tokenizer.saveLexicon(spark, dir, dict)
+    val repaired = Dedup.nearDupAgainstBandedStoreAt(spark, dir, batch,
+        "doc_id", "text")
       .orderBy("batch_id", "store_id")
       .as[(Long, Long, Int, Double)].collect().toSeq
-    assert(explicit === direct)
-    // a WRONG explicit lexicon still refuses (content-hash mismatch)
+    assert(repaired === direct)
+    assert(java.nio.file.Files.readAllBytes(lexPath).toSeq === original.toSeq)
+    // a repair with a WRONG wordlist still refuses (content-hash mismatch)
+    Tokenizer.saveLexicon(spark, dir, Tokenizer.Dictionary(Seq(nam, kin)))
     val wrong = intercept[IllegalArgumentException] {
-      Dedup.nearDupAgainstBandedStoreAtWith(spark, dir, batch,
-        "doc_id", "text", Tokenizer.Dictionary(Seq(nam, kin)))
+      Dedup.nearDupAgainstBandedStoreAt(spark, dir, batch, "doc_id", "text")
     }
-    assert(wrong.getMessage.contains("does not match"))
+    assert(wrong.getMessage.contains("drifted"))
     hWrite(original)
     assert(java.nio.file.Files.readAllBytes(lexPath).toSeq === original.toSeq)
   }
