@@ -22,8 +22,11 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    store's files, built from the above.
   *
   * [[StarStore]] claims version names with it; served-store maintenance
-  * (`StoreMeta.compact`/`delete`, `Similarity.hnswRebuildAt`) commits
-  * through [[swap]]; every sidecar rewrite goes through [[replace]]. */
+  * (`StoreMeta.compact`/`delete`, the `Dedup.*DeleteAt` forms,
+  * `Similarity.hnswRebuildAt`) commits through [[swap]], and
+  * `StoreMeta.open`, the one served-store sidecar read, rolls a crashed
+  * swap forward before it reads; every sidecar rewrite goes through
+  * [[replace]]. */
 object Commit {
 
   /** Age past which a claim that never committed is a crashed claimer (a

@@ -1412,17 +1412,16 @@ object Dedup {
                             dir: String, family: String): Unit = {
     fp.select(col(idCol), col(fpCol))
       .write.mode("overwrite").parquet(dir)
-    StoreMeta.write(fp.sparkSession, dir, "fingerprint64",
-      Map("family" -> family, "bits" -> "64",
-        "idCol" -> idCol, "fpCol" -> fpCol))
+    StoreMeta.Fingerprint.put(fp.sparkSession, dir,
+      StoreMeta.Fingerprint(family, idCol, fpCol))
   }
 
   /** Open a [[fingerprintStoreWrite]] store, verifying the fingerprint
     * family loudly before any probe joins it. */
   def fingerprintStoreOpen(spark: org.apache.spark.sql.SparkSession,
                            dir: String, family: String): DataFrame = {
-    StoreMeta.check(spark, dir, "fingerprint64",
-      Map("family" -> family, "bits" -> "64"))
+    StoreMeta.open(spark, dir, StoreMeta.Fingerprint,
+      (g: StoreMeta.Fingerprint) => g.copy(family = family))
     spark.read.parquet(dir)
   }
 
@@ -2042,11 +2041,9 @@ object Dedup {
     // the geometry contract travels with the table's files: the sidecar
     // lands in the table location, so openBandedTable / a direct-path open
     // both find it
-    val spark = docs.sparkSession
-    val loc = tableLocation(spark, table)
-    StoreMeta.write(spark, loc, "minhash-banded",
-      bandedMeta(shingleLen, numHashes, bandRows, cap, tok))
-    Tokenizer.saveLexicon(spark, loc, tok)
+    StoreMeta.Banded.put(docs.sparkSession,
+      tableLocation(docs.sparkSession, table),
+      StoreMeta.Banded(shingleLen, numHashes, bandRows, cap, tok))
   }
 
   /** A saved table's storage location, with the name PARSED (not wrapped
@@ -2072,19 +2069,11 @@ object Dedup {
                                   cap: Int = Int.MaxValue,
                                   tok: Tokenizer = Tokenizer.Whitespace)
       : DataFrame = {
-    StoreMeta.check(spark, tableLocation(spark, table), "minhash-banded",
-      bandedMeta(shingleLen, numHashes, bandRows, cap, tok))
+    StoreMeta.open(spark, tableLocation(spark, table), StoreMeta.Banded,
+      (_: StoreMeta.Banded) =>
+        StoreMeta.Banded(shingleLen, numHashes, bandRows, cap, tok))
     spark.table(table)
   }
-
-  private def bandedMeta(shingleLen: Int, numHashes: Int, bandRows: Int,
-                         cap: Int, tok: Tokenizer): Map[String, String] = Map(
-    "family" -> "minhash-md5-60",
-    "shingleLen" -> shingleLen.toString,
-    "numHashes" -> numHashes.toString,
-    "bandRows" -> bandRows.toString,
-    "cap" -> cap.toString,
-    "tokenizer" -> tok.id)
 
   /** [[minhashStoreBanded]] materialized to a parquet DIRECTORY with its
     * geometry sidecar ([[StoreMeta]]) — the served-store layout a
@@ -2104,12 +2093,8 @@ object Dedup {
     minhashStoreBanded(docs, idCol, textCol, shingleLen, numHashes, bandRows,
         cap, tok)
       .write.mode("overwrite").parquet(dir)
-    StoreMeta.write(docs.sparkSession, dir, "minhash-banded",
-      bandedMeta(shingleLen, numHashes, bandRows, cap, tok))
-    // a Dictionary lexicon travels WITH the store (content-hash-named in
-    // the geometry sidecar, bytes in the lexicon sidecar) so *At probes
-    // reconstruct the tokenizer with nothing re-supplied
-    Tokenizer.saveLexicon(docs.sparkSession, dir, tok)
+    StoreMeta.Banded.put(docs.sparkSession, dir,
+      StoreMeta.Banded(shingleLen, numHashes, bandRows, cap, tok))
   }
 
   /** Open a [[minhashStoreBandedWrite]] store under an EXPLICIT geometry
@@ -2122,26 +2107,9 @@ object Dedup {
                              cap: Int = Int.MaxValue,
                              tok: Tokenizer = Tokenizer.Whitespace)
       : DataFrame = {
-    StoreMeta.check(spark, dir, "minhash-banded",
-      bandedMeta(shingleLen, numHashes, bandRows, cap, tok))
+    StoreMeta.open(spark, dir, StoreMeta.Banded, (_: StoreMeta.Banded) =>
+      StoreMeta.Banded(shingleLen, numHashes, bandRows, cap, tok))
     spark.read.parquet(dir)
-  }
-
-  /** Geometry read back from a store's sidecar:
-    * (shingleLen, numHashes, bandRows, cap, tokenizer). `private[ext]`:
-    * [[FuzzyJoin.linkageAgainstStore]] shingles its exact verify with the
-    * SAME law the store was built under. */
-  private[ext] def bandedGeometry(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String)
-      : (Int, Int, Int, Int, Tokenizer) = {
-    val f = StoreMeta.open(spark, dir, "minhash-banded",
-      "a banded minhash store", "minhashStoreBandedWrite")
-    require(f.get("family").contains("minhash-md5-60"),
-      s"unknown signature family ${f.get("family")} under $dir")
-    // a dict-* id reconstructs its Dictionary from the lexicon sidecar next
-    // to the store (content-hash re-verified)
-    (f("shingleLen").toInt, f("numHashes").toInt, f("bandRows").toInt,
-      f("cap").toInt, Tokenizer.fromIdAt(spark, dir, f("tokenizer")))
   }
 
   /** [[minhashStoreBandedAppend]] with the geometry read FROM the store's
@@ -2153,10 +2121,9 @@ object Dedup {
   def minhashStoreBandedAppendAt(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, batch: DataFrame,
                                  idCol: String, textCol: String): Unit = {
-    val (shingleLen, numHashes, bandRows, cap, tok) =
-      bandedGeometry(spark, dir)
+    val g = StoreMeta.open(spark, dir, StoreMeta.Banded)
     minhashStoreBandedAppend(spark.read.parquet(dir), batch, idCol, textCol,
-        shingleLen, numHashes, bandRows, cap, tok)
+        g.shingleLen, g.numHashes, g.bandRows, g.cap, g.tokenizer)
       .write.mode("append").parquet(dir)
   }
 
@@ -2170,8 +2137,8 @@ object Dedup {
     * rebuild re-derives signatures). Returns rows removed. */
   def minhashStoreBandedDeleteAt(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, ids: DataFrame): Long = {
-    bandedGeometry(spark, dir): Unit // loud family/geometry verification
-    StoreMeta.delete(spark, dir, ids, "store_id")
+    StoreMeta.open(spark, dir, StoreMeta.Banded) // loud family check
+    StoreMeta.deleteOpened(spark, dir, ids, "store_id")
   }
 
   /** [[minhashStoreBandedDeleteAt]] for a [[fingerprintStoreWrite]] store:
@@ -2179,13 +2146,10 @@ object Dedup {
     * (the id column's name rides the sidecar). Returns rows removed. */
   def fingerprintStoreDeleteAt(spark: org.apache.spark.sql.SparkSession,
                                dir: String, ids: DataFrame,
-                               family: String): Long = {
-    val idCol = StoreMeta.checked(spark, dir, "fingerprint64",
-        Map("family" -> family, "bits" -> "64"))
-      .getOrElse("idCol",
-        sys.error(s"fingerprint store under $dir records no idCol"))
-    StoreMeta.delete(spark, dir, ids, idCol)
-  }
+                               family: String): Long =
+    StoreMeta.deleteOpened(spark, dir, ids, StoreMeta.open(spark, dir,
+      StoreMeta.Fingerprint, (g: StoreMeta.Fingerprint) =>
+        g.copy(family = family)).idCol)
 
   /** [[nearDupAgainstBandedStore]] with the geometry read FROM the store's
     * sidecar — the probe that cannot mismatch. `threshold` stays a probe
@@ -2194,12 +2158,21 @@ object Dedup {
                                   dir: String, batch: DataFrame,
                                   idCol: String, textCol: String,
                                   threshold: Double = 0.5,
-                                  broadcastBatch: Boolean = true): DataFrame = {
-    val (shingleLen, numHashes, bandRows, _, tok) = bandedGeometry(spark, dir)
+                                  broadcastBatch: Boolean = true): DataFrame =
+    bandedProbe(spark, dir, StoreMeta.open(spark, dir, StoreMeta.Banded),
+      batch, idCol, textCol, threshold, broadcastBatch)
+
+  /** [[nearDupAgainstBandedStoreAt]] against a store the caller already
+    * [[StoreMeta.open]]ed with geometry `g`. */
+  private[ext] def bandedProbe(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, g: StoreMeta.Banded,
+                               batch: DataFrame, idCol: String,
+                               textCol: String, threshold: Double,
+                               broadcastBatch: Boolean): DataFrame =
     nearDupAgainstBandedStore(ensureParallelism(spark.read.parquet(dir)),
       batch, idCol, textCol,
-      shingleLen, numHashes, threshold, bandRows, broadcastBatch, tok)
-  }
+      g.shingleLen, g.numHashes, threshold, g.bandRows, broadcastBatch,
+      g.tokenizer)
 
   /** Append DELTA for a served [[minhashStoreBanded]] store: the new banded
     * rows the batch contributes, computed WITHOUT re-shuffling the store —

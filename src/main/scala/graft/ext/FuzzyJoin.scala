@@ -97,17 +97,18 @@ object FuzzyJoin {
                           candidateThreshold: Double = 0.0,
                           broadcastBatch: Boolean = true,
                           scope: CacheScope = null): DataFrame = {
-    val (shingleLen, _, _, _, tok) = Dedup.bandedGeometry(spark, storeDir)
+    val g = StoreMeta.open(spark, storeDir, StoreMeta.Banded)
     // no second distinct: the probe's output is already one row per
     // (batch_id, store_id) — n_agree/est_jaccard are functions of the
     // pair's two signatures, so the probe's own 4-column dedup leaves the
     // 2-column projection unique, and re-deduping it would re-exchange the
     // whole candidate set for nothing
-    val cand = Dedup.nearDupAgainstBandedStoreAt(spark, storeDir, batch,
-        batchId, batchText, candidateThreshold, broadcastBatch)
+    val cand = Dedup.bandedProbe(spark, storeDir, g, batch, batchId,
+        batchText, candidateThreshold, broadcastBatch)
       .select(col("batch_id").as("_fj_l"), col("store_id").as("_fj_r"))
-    val shL = shingled(batch, batchId, batchText, shingleLen, tok)
-    val shR = shingled(catalog, catalogId, catalogText, shingleLen, tok)
+    val shL = shingled(batch, batchId, batchText, g.shingleLen, g.tokenizer)
+    val shR = shingled(catalog, catalogId, catalogText, g.shingleLen,
+      g.tokenizer)
     CacheScope.handOver(scope, verifyPairs(cand, shL, shR, threshold), shL, shR)
   }
 
@@ -426,11 +427,8 @@ object FuzzyJoin {
       .write.mode("overwrite").parquet(dir)
     vocab.select(col("_fj_t").as("t"), col("_fj_df").as("df"))
       .write.mode("overwrite").parquet(s"$dir/$WeightedVocabDir")
-    StoreMeta.write(spark, dir, "wminhash-banded", Map(
-      "family" -> "wminhash-md5-60", "shingleLen" -> "1",
-      "numHashes" -> numHashes.toString, "quantK" -> quantK.toString,
-      "cap" -> cap.toString, "tokenizer" -> tok.id))
-    Tokenizer.saveLexicon(spark, dir, tok)
+    StoreMeta.Weighted.put(spark, dir,
+      StoreMeta.Weighted(numHashes, quantK, cap, tok))
     sh.unpersist(): Unit
   }
 
@@ -453,24 +451,18 @@ object FuzzyJoin {
                                   threshold: Double = 0.5,
                                   broadcastBatch: Boolean = true,
                                   scope: CacheScope = null): DataFrame = {
-    val f = StoreMeta.open(spark, storeDir, "wminhash-banded",
-      "a weighted banded linkage store", "weightedStoreWrite")
-    require(f.get("family").contains("wminhash-md5-60"),
-      s"unknown signature family ${f.get("family")} under $storeDir")
-    val numHashes = f("numHashes").toInt
-    val quantK = f("quantK").toInt
-    val tok = Tokenizer.fromIdAt(spark, storeDir, f("tokenizer"))
+    val g = StoreMeta.open(spark, storeDir, StoreMeta.Weighted)
     val vocab = spark.read.parquet(s"$storeDir/$WeightedVocabDir")
       .select(col("t").as("_fj_t"), col("df").as("_fj_df"))
-    val shB = shingled(batch, batchId, batchText, 1, tok)
-    val bb = weightedBandedRows(shB, vocab, quantK, numHashes, "_fj_l")
+    val shB = shingled(batch, batchId, batchText, 1, g.tokenizer)
+    val bb = weightedBandedRows(shB, vocab, g.quantK, g.numHashes, "_fj_l")
     // read-side widening for small stores (see Dedup.ensureParallelism)
     val store = Dedup.ensureParallelism(spark.read.parquet(storeDir))
     val cand =
       (if (broadcastBatch) store.join(broadcast(bb), Seq("band", "v"))
        else store.join(bb, Seq("band", "v")))
         .select(col("_fj_l"), col("store_id").as("_fj_r")).distinct()
-    val shC = shingled(catalog, catalogId, catalogText, 1, tok)
+    val shC = shingled(catalog, catalogId, catalogText, 1, g.tokenizer)
     val out = weightedVerifySparse(cand, shB, shC,
       vocab.select(col("_fj_t"), (lit(1.0) / col("_fj_df")).as("_fj_w")),
       threshold)

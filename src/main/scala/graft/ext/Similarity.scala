@@ -2050,9 +2050,8 @@ object Similarity {
   def hnswSave(index: DataFrame, dir: String, knnK: Int, bits: Int,
                m: Int = 8, maxLevel: Int = 2, salt: String = "hnsw"): Unit = {
     index.write.mode("overwrite").parquet(dir)
-    StoreMeta.write(index.sparkSession, dir, "hnsw",
-      Map("m" -> m.toString, "maxLevel" -> maxLevel.toString,
-        "salt" -> salt, "knnK" -> knnK.toString, "bits" -> bits.toString))
+    StoreMeta.Hnsw.put(index.sparkSession, dir,
+      StoreMeta.Hnsw(m, maxLevel, salt, knnK, bits))
   }
 
   /** Open an [[hnswSave]] index, verifying the level-assignment geometry
@@ -2061,8 +2060,8 @@ object Similarity {
   def hnswOpen(spark: org.apache.spark.sql.SparkSession, dir: String,
                m: Int = 8, maxLevel: Int = 2,
                salt: String = "hnsw"): DataFrame = {
-    StoreMeta.check(spark, dir, "hnsw",
-      Map("m" -> m.toString, "maxLevel" -> maxLevel.toString, "salt" -> salt))
+    StoreMeta.open(spark, dir, StoreMeta.Hnsw, (g: StoreMeta.Hnsw) =>
+      g.copy(m = m, maxLevel = maxLevel, salt = salt))
     spark.read.parquet(dir)
   }
 
@@ -2082,7 +2081,7 @@ object Similarity {
     * Returns the tombstone-set size after the append. */
   def hnswTombstoneAt(spark: org.apache.spark.sql.SparkSession,
                       dir: String, ids: DataFrame): Long = {
-    StoreMeta.open(spark, dir, "hnsw", "hnsw", "hnswSave")
+    StoreMeta.open(spark, dir, StoreMeta.Hnsw)
     require(ids.columns.length == 1,
       s"ids must be a ONE-column frame of index ids, got " +
         ids.columns.mkString("(", ", ", ")"))
@@ -2118,16 +2117,15 @@ object Similarity {
     * maintainer — index untouched). */
   def hnswRebuildAt(spark: org.apache.spark.sql.SparkSession, dir: String,
                     vecs: DataFrame, idCol: String, vecCol: String): Long = {
-    val f = StoreMeta.open(spark, dir, "hnsw", "hnsw", "hnswSave")
+    val g = StoreMeta.open(spark, dir, StoreMeta.Hnsw)
     val tombstones = hnswTombstonesAt(spark, dir)
     val reclaimed = tombstones.count()
     if (reclaimed == 0) return 0L
     val banned = tombstones
       .select(col("id").cast(vecs.schema(idCol).dataType).as(idCol))
     val survivors = vecs.join(broadcast(banned), Seq(idCol), "left_anti")
-    val idx = hnswBuild(survivors, idCol, vecCol, knnK = f("knnK").toInt,
-      bits = f("bits").toInt, m = f("m").toInt,
-      maxLevel = f("maxLevel").toInt, salt = f("salt"))
+    val idx = hnswBuild(survivors, idCol, vecCol, knnK = g.knnK,
+      bits = g.bits, m = g.m, maxLevel = g.maxLevel, salt = g.salt)
     val retire = spark.read.parquet(dir).inputFiles.toSeq :+
       new org.apache.hadoop.fs.Path(dir, HnswTombstoneDir).toUri.toString
     if (StoreMeta.swapRewrite(spark, dir, idx, retire)) reclaimed else 0L
@@ -2148,11 +2146,10 @@ object Similarity {
                            hopsPerLevel: Int = 1, baseHops: Int = 2,
                            degBound: Int = -1,
                            scope: CacheScope = null): DataFrame = {
-    val f = StoreMeta.open(spark, dir, "hnsw", "hnsw", "hnswSave")
+    val g = StoreMeta.open(spark, dir, StoreMeta.Hnsw)
     hnswSearchPrebuilt(vecs, idCol, vecCol, spark.read.parquet(dir),
-      queries, qidCol, qvecCol, k, beamWidth,
-      m = f("m").toInt, maxLevel = f("maxLevel").toInt,
-      hopsPerLevel = hopsPerLevel, baseHops = baseHops, salt = f("salt"),
+      queries, qidCol, qvecCol, k, beamWidth, m = g.m, maxLevel = g.maxLevel,
+      hopsPerLevel = hopsPerLevel, baseHops = baseHops, salt = g.salt,
       degBound = degBound, scope = scope,
       exclude = hnswTombstonesAt(spark, dir))
   }
@@ -2166,19 +2163,16 @@ object Similarity {
     val dims = cents.map(_._2.length).distinct
     require(dims.length == 1,
       s"centroidsSave: ragged centroid dims ${dims.sorted.mkString(",")}")
-    val rows = cents.map { case (id, v) =>
-      val lid = id match {
-        case l: Long => l
-        case i: Int => i.toLong
-        case other => sys.error(
-          s"centroid ids must be integral to persist, got: $other")
-      }
-      (lid, v)
+    val rows = cents.map {
+      case (l: Long, v) => (l, v)
+      case (i: Int, v) => (i.toLong, v)
+      case (other, _) =>
+        sys.error(s"centroid ids must be integral to persist, got: $other")
     }
     import spark.implicits._
     rows.toDF("cent_id", "cent_v").write.mode("overwrite").parquet(dir)
-    StoreMeta.write(spark, dir, "ivf-centroids",
-      Map("nCells" -> cents.length.toString, "dim" -> dims.head.toString))
+    StoreMeta.Centroids.put(spark, dir,
+      StoreMeta.Centroids(cents.length, dims.head))
   }
 
   /** Open a [[centroidsSave]] set, verifying the DIMENSION the probe's
@@ -2187,8 +2181,8 @@ object Similarity {
     * centroid seq ready for [[centroidLiteral]]/[[ivfAssign]]. */
   def centroidsOpen(spark: org.apache.spark.sql.SparkSession, dir: String,
                     expectDim: Int): Seq[(Any, Seq[Double])] = {
-    StoreMeta.check(spark, dir, "ivf-centroids",
-      Map("dim" -> expectDim.toString))
+    StoreMeta.open(spark, dir, StoreMeta.Centroids,
+      (g: StoreMeta.Centroids) => g.copy(dim = expectDim))
     spark.read.parquet(dir).orderBy("cent_id").collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
   }

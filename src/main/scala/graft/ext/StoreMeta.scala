@@ -15,9 +15,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * on (band, v) and returns near-zero matches — missed duplicates, no
   * error. The sidecar (`_graft_store_meta.json`, the `_graft_manifest.json`
   * convention from [[Layout]]) records the store kind and its geometry
-  * fields; `check` fails LOUDLY on any drift, listing every mismatched
-  * field, so a wrong-geometry probe is an exception instead of a silent
+  * fields, so a wrong-geometry probe is an exception instead of a silent
   * wrong answer.
+  *
+  * One way in: [[open]] is the only sidecar read. Every served op opens
+  * its store through it once — a crashed maintenance swap rolled forward,
+  * the kind checked, any drift refused LOUDLY with every mismatched field
+  * listed — and hands the geometry it read to the code below it. Each
+  * store kind ([[Banded]], [[Weighted]], [[Hnsw]], [[Fingerprint]],
+  * [[Centroids]]) states its field list once, as a [[Kind]]: its writer
+  * ([[Kind.put]]) and every open share that one conversion between a
+  * geometry and its sidecar fields.
   *
   * Values are restricted to a conservative token alphabet at write time —
   * the sidecar is engine-portable JSON that round-trips through a
@@ -27,6 +35,9 @@ object StoreMeta {
 
   /** Sidecar filename, next to the store's data files. */
   val FileName = "_graft_store_meta.json"
+
+  /** A store's sidecar fields, by name. */
+  type Fields = Map[String, String]
 
   private val TokenRe = "[A-Za-z0-9._:+-]*".r
 
@@ -40,7 +51,7 @@ object StoreMeta {
   /** Write the sidecar (replaces — geometry is immutable for a store's
     * lifetime, so a rewrite only ever restates the same contract). */
   def write(spark: SparkSession, dir: String, kind: String,
-            fields: Map[String, String]): Unit = {
+            fields: Fields): Unit = {
     requireToken(kind, "kind")
     fields.foreach { case (k, v) =>
       requireToken(k, "field name"); requireToken(v, s"field '$k' value")
@@ -51,67 +62,119 @@ object StoreMeta {
     Commit.replace(fsOf(spark, dir), new Path(dir, FileName), json)
   }
 
-  /** Read the sidecar: Some((kind, fields)) or None when absent (a legacy
-    * store written before the convention). Opening a store through its
-    * sidecar first finishes a maintenance swap a crash left committed but
-    * unapplied ([[Commit.rollForward]]), so every open sees exactly the old
-    * or the new files of the last [[compact]]/[[delete]]/rebuild. */
-  def read(spark: SparkSession, dir: String)
-      : Option[(String, Map[String, String])] = {
+  /** A served-store kind: the `name` its sidecar records, how an [[open]]
+    * that refuses a store names the kind (`what`) and its `writer`, and its
+    * field list — the case-class fields of its geometry `G` plus the kind's
+    * `constants`, stated once: [[fields]] writes a geometry's fields by
+    * their case-class names, and `read` is the one reader of them (the
+    * geometry recorded in the sidecar fields of the store under a dir).
+    * A geometry field's name is its on-disk name: renaming one breaks
+    * every store already written (StoreMetaSpec pins the sidecar bytes). */
+  class Kind[G <: Product](val name: String, val what: String,
+      val writer: String, constants: (String, String)*)(
+      private[StoreMeta] val read: (SparkSession, String, Fields) => G) {
+    /** The sidecar fields of a store built with `g` (a tokenizer by id). */
+    def fields(g: G): Fields = constants.toMap ++ g.productElementNames.zip(
+      g.productIterator.map { case t: Tokenizer => t.id; case v => s"$v" })
+    /** Write the sidecar of a store built with `g`, next to its data files,
+      * and a Dictionary tokenizer's lexicon beside it
+      * ([[Tokenizer.saveLexicon]]), so an open rebuilds the tokenizer
+      * ([[Tokenizer.fromIdAt]]) with nothing re-supplied. */
+    def put(spark: SparkSession, dir: String, g: G): Unit = {
+      write(spark, dir, name, fields(g))
+      g.productIterator.collect { case t: Tokenizer => t }
+        .foreach(Tokenizer.saveLexicon(spark, dir, _))
+    }
+    private[StoreMeta] def missing: String =
+      s"cannot assume the geometry of a '$name' store; write it with $writer"
+  }
+
+  /** Any served store, as the maintenance `op` ([[compact]], [[delete]])
+    * opens it: its raw fields. */
+  private final class Maintained(op: String)
+      extends Kind[Tuple1[Fields]](null, "", "")((_, _, f) => Tuple1(f)) {
+    override def fields(g: Tuple1[Fields]): Fields = g._1
+    override private[StoreMeta] def missing: String = s"$op() maintains " +
+      "SERVED stores; write the store with its meta-writing API first"
+  }
+
+  /** Open a served store of `kind` — the one sidecar read; every served op
+    * opens its store through it once and hands the geometry down. It first
+    * finishes a maintenance swap a crash left committed but unapplied
+    * ([[Commit.rollForward]]), so every open sees exactly the old or the
+    * new files of the last [[compact]]/[[delete]]/rebuild. Loud when the
+    * sidecar is absent (probing unknown geometry is the silent-miss hole
+    * this exists to close) or names another kind, and on any drift between
+    * the sidecar and the geometry a probe is about to assume — `assume` of
+    * the store's own, so a probe fixes only the fields it knows; the
+    * message lists every drifted field. Returns the store's geometry. */
+  def open[G <: Product](spark: SparkSession, dir: String, kind: Kind[G],
+                         assume: G => G = (g: G) => g): G = {
     val fs = fsOf(spark, dir)
     Commit.rollForward(fs, new Path(dir))
-    Commit.readText(fs, new Path(dir, FileName)).map { json =>
-      // token-alphabet values by construction: every "k":"v" pair is literal
-      val pairs = "\"([A-Za-z0-9._:+-]*)\"\\s*:\\s*\"([A-Za-z0-9._:+-]*)\"".r
-        .findAllMatchIn(json).map(m => m.group(1) -> m.group(2)).toSeq
-      val kind = pairs.collectFirst { case ("kind", v) => v }
-        .getOrElse(sys.error(s"malformed $FileName under $dir: $json"))
-      (kind, pairs.filterNot(_._1 == "kind").toMap)
-    }
-  }
-
-  /** Open a served store of `kind` ([[read]], roll-forward included) and
-    * return its geometry fields — the one sidecar open every served-store
-    * entry point goes through. Loud when the sidecar is absent (probing
-    * unknown geometry is the silent-miss hole this exists to close) or
-    * names another kind: the message names the directory, the expected
-    * kind (`what` describes it) and the `writer` that makes such a store. */
-  def open(spark: SparkSession, dir: String, kind: String, what: String,
-           writer: String): Map[String, String] = {
-    val (got, fields) = read(spark, dir).getOrElse(sys.error(
-      s"no $FileName under $dir — cannot assume the geometry of a '$kind' " +
-        s"store; write it with $writer"))
-    require(got == kind, s"store kind mismatch under $dir: store is " +
-      s"'$got', not $what — write it with $writer")
-    fields
-  }
-
-  /** Verify a store's sidecar against the geometry a probe is about to
-    * assume ([[open]]). Throws with the FULL field diff on any drift. */
-  def check(spark: SparkSession, dir: String, kind: String,
-            expected: Map[String, String]): Unit =
-    checked(spark, dir, kind, expected): Unit
-
-  /** [[check]] returning the sidecar's fields, for a caller that reads more
-    * of them than it verifies — one sidecar open, not a check plus a read. */
-  private[ext] def checked(spark: SparkSession, dir: String, kind: String,
-                           expected: Map[String, String])
-      : Map[String, String] = {
-    val got = open(spark, dir, kind, s"'$kind'", "its meta-writing API " +
-      "(or StoreMeta.write a sidecar for legacy state)")
-    val drifted = expected.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-      got.get(k) match {
-        case Some(`v`) => None
-        case Some(other) => Some(s"$k: store=$other probe=$v")
-        case None => Some(s"$k: store=<absent> probe=$v")
-      }
+    val json = Commit.readText(fs, new Path(dir, FileName))
+      .getOrElse(sys.error(s"no $FileName under $dir — ${kind.missing}"))
+    // token-alphabet values by construction: every "k":"v" pair is literal
+    val pairs = "\"([A-Za-z0-9._:+-]*)\"\\s*:\\s*\"([A-Za-z0-9._:+-]*)\"".r
+      .findAllMatchIn(json).map(m => m.group(1) -> m.group(2)).toSeq
+    val got = pairs.collectFirst { case ("kind", v) => v }
+      .getOrElse(sys.error(s"malformed $FileName under $dir: $json"))
+    require(kind.name == null || got == kind.name, s"store kind mismatch " +
+      s"under $dir: store is '$got', not ${kind.what} — write it with " +
+      kind.writer)
+    val stored = pairs.filterNot(_._1 == "kind").toMap
+    val g = kind.read(spark, dir, stored.withDefault(n =>
+      sys.error(s"$got store under $dir records no $n")))
+    val drifted = kind.fields(assume(g)).toSeq.sorted.collect {
+      case (k, v) if !stored.get(k).contains(v) =>
+        s"$k: store=${stored.getOrElse(k, "<absent>")} probe=$v"
     }
     require(drifted.isEmpty,
-      s"store geometry mismatch under $dir (kind=$kind) — probing with " +
+      s"store geometry mismatch under $dir (kind=$got) — probing with " +
         s"drifted parameters returns silently near-empty matches, refusing: " +
         drifted.mkString("; "))
-    got
+    g
   }
+
+  /** [[Dedup.minhashStoreBandedWrite]]'s geometry. */
+  final case class Banded(shingleLen: Int, numHashes: Int, bandRows: Int,
+                          cap: Int, tokenizer: Tokenizer)
+  object Banded extends Kind[Banded]("minhash-banded",
+      "a banded minhash store", "minhashStoreBandedWrite",
+      "family" -> "minhash-md5-60")((spark, dir, f) => new Banded(
+    f("shingleLen").toInt, f("numHashes").toInt, f("bandRows").toInt,
+    f("cap").toInt, Tokenizer.fromIdAt(spark, dir, f("tokenizer"))))
+
+  /** [[FuzzyJoin.weightedStoreWrite]]'s geometry (unigram shingles). */
+  final case class Weighted(numHashes: Int, quantK: Int, cap: Int,
+                            tokenizer: Tokenizer)
+  object Weighted extends Kind[Weighted]("wminhash-banded",
+      "a weighted banded linkage store", "weightedStoreWrite",
+      "family" -> "wminhash-md5-60", "shingleLen" -> "1")((spark, dir, f) =>
+    new Weighted(f("numHashes").toInt, f("quantK").toInt, f("cap").toInt,
+      Tokenizer.fromIdAt(spark, dir, f("tokenizer"))))
+
+  /** [[Similarity.hnswSave]]'s geometry: the level-assignment law (m,
+    * maxLevel, salt) a descent must share, and the build's knnK and bits,
+    * which a rebuild reuses. */
+  final case class Hnsw(m: Int, maxLevel: Int, salt: String, knnK: Int,
+                        bits: Int)
+  object Hnsw extends Kind[Hnsw]("hnsw", "hnsw", "hnswSave")((_, _, f) =>
+    new Hnsw(f("m").toInt, f("maxLevel").toInt, f("salt"), f("knnK").toInt,
+      f("bits").toInt))
+
+  /** [[Dedup.fingerprintStoreWrite]]'s geometry: the producing hash's
+    * family (64-bit prints) and the frame's column names. */
+  final case class Fingerprint(family: String, idCol: String, fpCol: String)
+  object Fingerprint extends Kind[Fingerprint]("fingerprint64",
+      "'fingerprint64'", "fingerprintStoreWrite", "bits" -> "64")((_, _, f) =>
+    new Fingerprint(f("family"), f("idCol"), f("fpCol")))
+
+  /** [[Similarity.centroidsSave]]'s geometry: cell count and dimension. */
+  final case class Centroids(nCells: Int, dim: Int)
+  object Centroids extends Kind[Centroids]("ivf-centroids",
+      "'ivf-centroids'", "centroidsSave")((_, _, f) =>
+    new Centroids(f("nCells").toInt, f("dim").toInt))
 
   /** Compact a served store DIRECTORY in place: rewrite the parquet part
     * files of the current snapshot into `targetFiles` files. Rows are
@@ -148,9 +211,7 @@ object StoreMeta {
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
     // the sidecar is the proof this is a served store, not an arbitrary
     // parquet dir a caller is about to rewrite by accident
-    read(spark, dir).getOrElse(sys.error(
-      s"no $FileName under $dir — compact() maintains SERVED stores; " +
-        "write the store with its meta-writing API first"))
+    open(spark, dir, new Maintained("compact"))
     Commit.retrying(graft.etl.StarStore.MaxPublishRetries, s"compact at $dir") {
       val df = spark.read.parquet(dir)
       val snapshot = df.inputFiles.toSeq
@@ -185,9 +246,13 @@ object StoreMeta {
     * Returns the number of rows deleted. */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
              idCol: String): Long = {
-    read(spark, dir).getOrElse(sys.error(
-      s"no $FileName under $dir — delete() maintains SERVED stores; " +
-        "write the store with its meta-writing API first"))
+    open(spark, dir, new Maintained("delete"))
+    deleteOpened(spark, dir, ids, idCol)
+  }
+
+  /** [[delete]] from a store the caller already [[open]]ed. */
+  private[ext] def deleteOpened(spark: SparkSession, dir: String,
+                                ids: DataFrame, idCol: String): Long = {
     require(ids.columns.length == 1,
       s"ids must be a ONE-column frame of keys to delete, got " +
         s"${ids.columns.mkString("(", ", ", ")")}")

@@ -6,76 +6,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.etl.Commit
-
-/** A `file:` filesystem that dies at the armed thread's Nth mutating call
-  * (create, rename, delete) — counting every call but those on Spark's own
-  * `_temporary` commit-protocol dirs, which are out of scope. The crash is
-  * a VirtualMachineError, so no NonFatal handler swallows it, and every
-  * later mutating call of the thread fails too: nothing runs after a real
-  * crash. A create that crashes leaves its file truncated — what a crash
-  * mid-write leaves behind an overwriting create. */
-class CrashFs extends LocalFileSystem {
-  import CrashFs._
-
-  private def step(p: Path, counted: Boolean = true, torn: => Unit = ()): Unit =
-    if (armed eq Thread.currentThread()) {
-      if (dead) throw new Crash
-      if (counted && !p.toString.contains("/_temporary")) {
-        steps += 1
-        if (steps == crashAt) { dead = true; torn; throw new Crash }
-      }
-    }
-
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
-                      bufferSize: Int, replication: Short, blockSize: Long,
-                      progress: Progressable): FSDataOutputStream = {
-    step(f, torn = super.create(f, permission, overwrite, bufferSize,
-      replication, blockSize, progress).close())
-    super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
-  }
-
-  override def rename(src: Path, dst: Path): Boolean = {
-    step(src); super.rename(src, dst)
-  }
-
-  override def delete(f: Path, recursive: Boolean): Boolean = {
-    step(f, counted = exists(f)) // deleting nothing changes no state
-    super.delete(f, recursive)
-  }
-}
-
-object CrashFs {
-  final class Crash extends VirtualMachineError("injected crash")
-  @volatile private var armed: Thread = _
-  @volatile private var crashAt = 0
-  @volatile private var steps = 0
-  @volatile private var dead = false
-
-  /** Run `body` on a [[CrashFs]] that crashes at mutating call `n`; true
-    * when it crashed, false when `body` completed first. */
-  def run(spark: org.apache.spark.sql.SparkSession, n: Int)(body: => Unit): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.file.impl", classOf[CrashFs].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    crashAt = n; steps = 0; dead = false; armed = Thread.currentThread()
-    // Spark may wrap the crash of its own commit; the flag is the truth
-    try { body; false }
-    catch { case _: Throwable if dead => true }
-    finally {
-      armed = null
-      conf.unset("fs.file.impl")
-      conf.unset("fs.file.impl.disable.cache")
-    }
-  }
-}
 
 /** The commit primitive under crashes and concurrency: every mutating op on
   * persisted state is stopped after each of its filesystem steps, and the
@@ -182,14 +116,14 @@ class CommitCrashSpec extends SparkSpec {
     val before = rows(base)
     val want = after(before)
     sweep(base, op) { dir =>
-      StoreMeta.read(spark, dir)
+      StoreMeta.open(spark, dir, StoreMeta.Banded)
       val seen = rows(dir)
       assert(seen === before || seen === want,
         s"a crashed op left ${seen.size} rows (before ${before.size}, after ${want.size})")
       if (debris(dir).nonEmpty) {
         ageDebris(dir)
         op(dir)
-        StoreMeta.read(spark, dir)
+        StoreMeta.open(spark, dir, StoreMeta.Banded)
         assert(rows(dir) === want)
       }
       assertClean(dir, Set(StoreMeta.FileName))

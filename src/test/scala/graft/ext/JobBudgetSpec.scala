@@ -110,6 +110,69 @@ class JobBudgetSpec extends SparkSpec {
       .collect().nonEmpty)) <= 9)
   }
 
+  test("minhashStoreBandedDeleteAt of one id from a 3-file served store: at most 7 jobs") {
+    val dir = threeFileServedStore("job-budget-banded-delete")
+    val rows = spark.read.parquet(dir).where(col("store_id") === 5L).count()
+    assert(rows > 0)
+    assert(jobsOf(assert(Dedup.minhashStoreBandedDeleteAt(spark, dir,
+      Seq(5L).toDF("id")) === rows)) <= 7)
+  }
+
+  test("fingerprintStoreDeleteAt of one id from a 3-file store: at most 7 jobs") {
+    val dir = tmpDir("job-budget-fp-delete")
+    Dedup.fingerprintStoreWrite((1L to 30L).map(i => (i, i * 1000L))
+      .toDF("asset", "fp").repartition(3), "asset", "fp", dir, "dhash-v1")
+    assert(spark.read.parquet(dir).inputFiles.length === 3)
+    assert(jobsOf(assert(Dedup.fingerprintStoreDeleteAt(spark, dir,
+      Seq(5L).toDF("asset"), "dhash-v1") === 1L)) <= 7)
+  }
+
+  test("FuzzyJoin.weightedLinkageAgainstStore of a 10-doc batch: at most 14 jobs") {
+    val dir = tmpDir("job-budget-weighted")
+    FuzzyJoin.weightedStoreWrite(servedDocs, "doc_id", "text", dir)
+    assert(jobsOf(assert(FuzzyJoin.weightedLinkageAgainstStore(spark, dir,
+      servedDocs, "doc_id", "text", probeBatch, "doc_id", "text")
+      .collect().nonEmpty)) <= 14)
+  }
+
+  private lazy val vecs = (0L until 24L).map(i =>
+    (i, Array.tabulate(4)(j => math.sin(i * 1.7 + j).toFloat)))
+    .toDF("vec_id", "embedding")
+
+  /** A served 24-vector hnsw index with ids 2 and 9 tombstoned. */
+  private def tombstonedIndex(name: String): String = {
+    val dir = tmpDir(name)
+    Similarity.hnswSave(Similarity.hnswBuild(vecs, "vec_id", "embedding",
+      knnK = 4, bits = 2, m = 4, maxLevel = 1), dir,
+      knnK = 4, bits = 2, m = 4, maxLevel = 1)
+    Similarity.hnswTombstoneAt(spark, dir, Seq(2L, 9L).toDF("vec_id")): Unit
+    dir
+  }
+
+  test("hnswSearchPrebuiltAt on a tombstoned 24-vector index: at most 41 jobs") {
+    val dir = tombstonedIndex("job-budget-hnsw-search")
+    val q = vecs.where(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    assert(jobsOf(assert(Similarity.hnswSearchPrebuiltAt(spark, dir, vecs,
+      "vec_id", "embedding", q, "query_id", "embedding", k = 3,
+      beamWidth = 6).collect().nonEmpty)) <= 41)
+  }
+
+  test("hnswRebuildAt of a tombstoned 24-vector index: at most 15 jobs") {
+    val dir = tombstonedIndex("job-budget-hnsw-rebuild")
+    assert(jobsOf(assert(Similarity.hnswRebuildAt(spark, dir, vecs, "vec_id",
+      "embedding") === 2L)) <= 15)
+  }
+
+  test("Curation.curate on a 30-doc corpus: at most 17 jobs") {
+    val corpus = (1L to 30L).map(i =>
+      (i, s"curated doc ${i % 20} keeps its words apart from topic t${i % 20} " +
+        s"and tail u${i % 20} with filler words one two three"))
+      .toDF("doc_id", "text")
+    assert(jobsOf(assert(Curation.curate(corpus, "doc_id", "text",
+      Curation.Config(minTokens = 5)).collect().nonEmpty)) <= 17)
+  }
+
   test("nearDuplicatesFast on a 30-doc corpus: at most 9 jobs") {
     val corpus = (1L to 30L).map(i =>
       (i, s"corpus doc ${i % 15} and its twin share every word x${i % 15}"))

@@ -13,6 +13,16 @@ class StoreMetaSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** A kind opened as its raw sidecar fields. */
+  private class Raw(name: String) extends StoreMeta.Kind[Tuple1[StoreMeta.Fields]](
+      name, s"'$name'", "a test")((_, _, f) => Tuple1(f)) {
+    override def fields(g: Tuple1[StoreMeta.Fields]): StoreMeta.Fields = g._1
+  }
+
+  /** A probe that assumes exactly `f`. */
+  private def probing(f: (String, String)*) =
+    (_: Tuple1[StoreMeta.Fields]) => Tuple1(f.toMap)
+
   private val docs = (0L until 40L).map(i =>
     (i, s"alpha beta gamma delta epsilon zeta token$i tail${i % 7}"))
     .toDF("doc_id", "text")
@@ -21,34 +31,93 @@ class StoreMetaSpec extends SparkSpec {
     val dir = tmp("graft-meta-rt")
     StoreMeta.write(spark, dir, "minhash-banded",
       Map("numHashes" -> "16", "tokenizer" -> "script-aware"))
-    assert(StoreMeta.read(spark, dir) ===
-      Some(("minhash-banded",
-        Map("numHashes" -> "16", "tokenizer" -> "script-aware"))))
+    assert(StoreMeta.open(spark, dir, new Raw("minhash-banded"))._1 ===
+      Map("numHashes" -> "16", "tokenizer" -> "script-aware"))
     val e = intercept[IllegalArgumentException] {
       StoreMeta.write(spark, dir, "x", Map("k" -> "has space"))
     }
     assert(e.getMessage.contains("must match"))
   }
 
+  test("sidecar bytes: every store kind and a Dictionary lexicon write the " +
+      "pinned text, so a store written by an earlier build still opens") {
+    val dict = Tokenizer.Dictionary(Seq("น้ำ", "ข้าว", "กิน", "คน"))
+    def text(dir: String, name: String = StoreMeta.FileName): String =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, name)), "UTF-8")
+    val banded = tmp("graft-meta-pin-banded")
+    Dedup.minhashStoreBandedWrite(docs, "doc_id", "text", banded,
+      numHashes = 8, cap = 2, tok = dict)
+    assert(text(banded) ===
+      """{"kind":"minhash-banded","fields":{"bandRows":"1","cap":"2","family":"minhash-md5-60","numHashes":"8","shingleLen":"3","tokenizer":"dict-9a9e164223fa"}}""")
+    assert(text(banded, Tokenizer.LexiconFileName) ===
+      "ข้าว\nกิน\nน้ำ\nคน")
+    val weighted = tmp("graft-meta-pin-weighted")
+    FuzzyJoin.weightedStoreWrite(docs, "doc_id", "text", weighted,
+      numHashes = 8, cap = 3, tok = dict)
+    assert(text(weighted) ===
+      """{"kind":"wminhash-banded","fields":{"cap":"3","family":"wminhash-md5-60","numHashes":"8","quantK":"24","shingleLen":"1","tokenizer":"dict-9a9e164223fa"}}""")
+    assert(text(weighted, Tokenizer.LexiconFileName) ===
+      "ข้าว\nกิน\nน้ำ\nคน")
+    val plain = tmp("graft-meta-pin-plain")
+    Dedup.minhashStoreBandedWrite(docs, "doc_id", "text", plain)
+    assert(text(plain) ===
+      """{"kind":"minhash-banded","fields":{"bandRows":"1","cap":"2147483647","family":"minhash-md5-60","numHashes":"16","shingleLen":"3","tokenizer":"whitespace"}}""")
+    assert(!new java.io.File(plain, Tokenizer.LexiconFileName).exists())
+    val vecs = (0L until 12L).map(i =>
+      (i, Array.tabulate(4)(j => math.sin(i * 1.7 + j).toFloat)))
+      .toDF("vec_id", "embedding")
+    val hnsw = tmp("graft-meta-pin-hnsw")
+    Similarity.hnswSave(Similarity.hnswBuild(vecs, "vec_id", "embedding",
+      knnK = 4, bits = 2, m = 4, maxLevel = 1), hnsw,
+      knnK = 4, bits = 2, m = 4, maxLevel = 1)
+    assert(text(hnsw) ===
+      """{"kind":"hnsw","fields":{"bits":"2","knnK":"4","m":"4","maxLevel":"1","salt":"hnsw"}}""")
+    val fp = tmp("graft-meta-pin-fp")
+    Dedup.fingerprintStoreWrite(Seq((1L, 0x0f0fL)).toDF("asset_id", "fp"),
+      "asset_id", "fp", fp, "image-dhash-9x8")
+    assert(text(fp) ===
+      """{"kind":"fingerprint64","fields":{"bits":"64","family":"image-dhash-9x8","fpCol":"fp","idCol":"asset_id"}}""")
+    val cents = tmp("graft-meta-pin-cents")
+    Similarity.centroidsSave(spark,
+      Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0))), cents)
+    assert(text(cents) ===
+      """{"kind":"ivf-centroids","fields":{"dim":"3","nCells":"2"}}""")
+    // ...and each opens back to the geometry it was written with
+    assert(StoreMeta.open(spark, plain, StoreMeta.Banded) ===
+      StoreMeta.Banded(3, 16, 1, Int.MaxValue, Tokenizer.Whitespace))
+    assert(StoreMeta.open(spark, banded, StoreMeta.Banded).tokenizer.id ===
+      dict.id)
+    assert(StoreMeta.open(spark, weighted, StoreMeta.Weighted)
+      .copy(tokenizer = dict) === StoreMeta.Weighted(8, 24, 3, dict))
+    assert(StoreMeta.open(spark, hnsw, StoreMeta.Hnsw) ===
+      StoreMeta.Hnsw(4, 1, "hnsw", 4, 2))
+    assert(StoreMeta.open(spark, fp, StoreMeta.Fingerprint) ===
+      StoreMeta.Fingerprint("image-dhash-9x8", "asset_id", "fp"))
+    assert(StoreMeta.open(spark, cents, StoreMeta.Centroids) ===
+      StoreMeta.Centroids(2, 3))
+  }
+
   test("check: missing sidecar, wrong kind, and drifted fields all throw " +
       "with the offending fields named") {
     val dir = tmp("graft-meta-chk")
     val missing = intercept[RuntimeException] {
-      StoreMeta.check(spark, dir, "hnsw", Map("m" -> "8"))
+      StoreMeta.open(spark, dir, new Raw("hnsw"), probing("m" -> "8"))
     }
     assert(missing.getMessage.contains("no " + StoreMeta.FileName))
     StoreMeta.write(spark, dir, "hnsw", Map("m" -> "8", "salt" -> "hnsw"))
-    StoreMeta.check(spark, dir, "hnsw", Map("m" -> "8")) // subset OK
+    StoreMeta.open(spark, dir, new Raw("hnsw"), probing("m" -> "8")) // subset OK
     val kind = intercept[IllegalArgumentException] {
-      StoreMeta.check(spark, dir, "fingerprint64", Map.empty)
+      StoreMeta.open(spark, dir, StoreMeta.Fingerprint)
     }
     assert(kind.getMessage.contains("kind mismatch"))
     val drift = intercept[IllegalArgumentException] {
-      StoreMeta.check(spark, dir, "hnsw", Map("m" -> "16", "salt" -> "hnsw"))
+      StoreMeta.open(spark, dir, new Raw("hnsw"),
+        probing("m" -> "16", "salt" -> "hnsw"))
     }
     assert(drift.getMessage.contains("m: store=8 probe=16"))
     val absent = intercept[IllegalArgumentException] {
-      StoreMeta.check(spark, dir, "hnsw", Map("maxLevel" -> "2"))
+      StoreMeta.open(spark, dir, new Raw("hnsw"), probing("maxLevel" -> "2"))
     }
     assert(absent.getMessage.contains("maxLevel: store=<absent> probe=2"))
   }
