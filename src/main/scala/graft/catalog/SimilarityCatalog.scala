@@ -265,7 +265,7 @@ object SimilarityCatalog {
 
     // The hierarchical index AS DATA: hnswBuild materializes the layer
     // graphs (the frame a real deployment writes to parquet once),
-    // hnswSearchPrebuilt descends over them — byte-identical to the fused
+    // hnswSearchPrebuilt descends over them — byte-identical to
     // sim_topk_hnsw by the search∘build law (ExtSpec pins it; this row
     // gates the materialization seam itself against the same oracle).
     "sim_hnsw_prebuilt" -> ((s, d) => {
@@ -1946,7 +1946,7 @@ object SimilarityCatalog {
          |  WHERE f.id <> f.query_id AND f.id % 7 <> 3)
          |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
 
-    // search ∘ build ≡ the fused operator (ExtSpec law), so the prebuilt
+    // search ∘ build ≡ hnswTopK (ExtSpec law), so the prebuilt
     // row gates against the SAME descent restatement
     "sim_hnsw_prebuilt" ->
       s"""WITH $hnswOracleCtes

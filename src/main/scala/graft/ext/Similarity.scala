@@ -999,7 +999,7 @@ object Similarity {
     // collects into a LocalRelation (every later broadcast build becomes
     // driver-local); past it, persist + count, released with the result.
     val (batch, nBatch, batchPersisted) =
-      pinSmall(newVecs.select(col(idCol), col(vecCol)))
+      boundedCut(newVecs.select(col(idCol), col(vecCol)), None)
     // the eager jobs below (the search, the batch build's width probe,
     // the new-edge cut) can all throw BEFORE the release registrations at
     // the bottom — the persist-fallback pins must not strand on that path
@@ -1010,7 +1010,7 @@ object Similarity {
     val searched = graphTopK(oldVecs, idCol, vecCol,
         graph.select(col("id"), col("nbr_id")), batch, idCol, vecCol,
         k, beamWidth, hops, entryMod,
-        degBound = oldDeg, nQueries = nBatch, scope = scope)
+        degBound = oldDeg, scope = scope)
       .select(col("query_id").as("id"), col("id").as("nbr_id"), col("score"))
     // (b) new → new: the batch's own bucketed graph (disjoint candidate
     // sets — (a) yields old nbrs, (b) new nbrs — so the union is dup-free)
@@ -1034,19 +1034,9 @@ object Similarity {
     // into a LocalRelation (the beamLoop cut discipline); past it,
     // persist + count, released after the returned frame's first action
     // (or owned by the caller's scope).
-    val newEdges =
-      if (nBatch * math.max(1, k) <= MaxLocalBeamRows) {
-        val rows = newEdges0.collect()
-        newEdges0.sparkSession.createDataFrame(
-          java.util.Arrays.asList(rows: _*), newEdges0.schema)
-      } else {
-        val m = newEdges0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try m.count(): Unit
-        catch { case t: Throwable => m.unpersist(blocking = false); throw t }
-        newEdgesPersisted = m
-        m
-      }
+    val (newEdges, _, newEdgesCut) = boundedCut(newEdges0,
+      Some(nBatch * math.max(1, k) <= MaxLocalBeamRows))
+    newEdgesPersisted = newEdgesCut
     // reciprocal patch: reverse exactly the new edges that land on OLD
     // nodes (batch ids broadcast; an edge's nbr is old ⟺ not in the batch)
     val newIds = broadcast(batch.select(col(idCol).as("nbr_id")))
@@ -1450,7 +1440,7 @@ object Similarity {
                 graph: DataFrame, queries: DataFrame, qidCol: String,
                 qvecCol: String, k: Int, beamWidth: Int, hops: Int,
                 entryMod: Long = AdaptiveEntries, corpusSize: Long = -1L,
-                degBound: Int = -1, nQueries: Long = -1L,
+                degBound: Int = -1,
                 scope: CacheScope = null): DataFrame = {
     require(beamWidth >= k, s"beamWidth $beamWidth must be >= k $k")
     require((entryMod >= 1 || entryMod == AdaptiveEntries) && hops >= 0,
@@ -1461,9 +1451,9 @@ object Similarity {
     // corpus scan hops+2 times. The pin costs at most one scan, makes
     // every broadcast build driver-local, and yields the query count the
     // loop's bounds need for free.
-    val (qPinned, nQPinned, qPersisted) = pinSmall(
+    val (qPinned, nQ, qPersisted) = boundedCut(
       queries.select(col(qidCol).as("query_id"),
-        asDouble(col(qvecCol)).as("qv")))
+        asDouble(col(qvecCol)).as("qv")), None)
     val q = broadcast(qPinned)
     // the corpus projection feeds the entry set, EVERY hop's scoring join,
     // and the final re-score — persist it for the loop's duration (the
@@ -1487,9 +1477,6 @@ object Similarity {
     val mod =
       if (entryMod != AdaptiveEntries) entryMod else adaptiveEntryMod(nKnown)
     val g = graph.select(col("id").as("_gid"), col("nbr_id"))
-    // the pin already measured the query count; the caller's hint (the
-    // append path: |batch| in hand) takes precedence for back-compat
-    val nQ = if (nQueries >= 0) nQueries else nQPinned
     // same bounded-broadcast discipline as the hop joins (see beamLoop):
     // the entry frame is nQ · |{id % mod == 0}| rows of two longs — gate
     // the hint on the MEASURED entry-id count (one cheap job off the
@@ -1564,43 +1551,51 @@ object Similarity {
       .select(col("query_id"), col("_gid"),
         cosine(col("qv"), col("cv")).as("score"))
 
-  /** A plan whose every leaf is already driver-resident (LocalRelation /
-    * OneRowRelation): collecting it runs no cluster scan, so pin-once
-    * callers can skip the persist/count bookkeeping. */
-  private def isDriverLocal(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves().forall {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => true
-      case _ => false
+  /** A plan that only projects and filters driver-resident rows
+    * (LocalRelation / OneRowRelation): reading it runs no job and no
+    * cluster scan, so pins and layer caches skip the persist/count
+    * bookkeeping. Judged on the analyzed plan: asking for the optimized
+    * one would fix the frame's cache lookup before a pin persists it. */
+  private def isDriverLocal(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    !df.queryExecution.analyzed.exists {
+      case _: LocalRelation | _: OneRowRelation | _: Project | _: Filter => false
+      case _ => true
     }
+  }
 
-  /** PIN a small frame whose size the caller's contract already bounds
-    * (query sets, append batches — the broadcast-size commitment): the
-    * frame itself is small, but its LINEAGE need not be — a query set
-    * filtered out of the corpus re-scans that corpus in EVERY job that
-    * rebuilds its broadcast, and the iterative search operators run one
-    * job per beam cut. Driver-local plans collect outright (no jobs);
-    * otherwise persist + count, collect into a LocalRelation under
-    * [[MaxBroadcastCandRows]] and release, or hand the persisted frame
-    * back (third slot non-null — the CALLER owns its release on both the
-    * happy and error paths). Returns (frame, rowCount, persistedOrNull). */
-  private def pinSmall(df: DataFrame): (DataFrame, Long, DataFrame) = {
+  /** The one bounded CUT: ends `df`'s lineage at materialized rows, so
+    * every later job reads them instead of re-running the plan (a query
+    * set filtered out of the corpus would otherwise re-scan that corpus
+    * in every job that rebuilds its broadcast, and the iterative search
+    * operators run one job per beam cut). `local` is the caller's choice
+    * where its row bound is arithmetic — decided BEFORE any job, never by
+    * collecting first and measuring (that would materialize an unbounded
+    * frame on the driver before the bound could refuse it): Some(true)
+    * collects into a LocalRelation, Some(false) persists + counts. None
+    * is the PIN of a frame whose size the caller's contract bounds (query
+    * sets, append batches — the broadcast-size commitment): a
+    * driver-local plan collects outright (no jobs); otherwise persist +
+    * count, and collect + release under [[MaxBroadcastCandRows]]. A
+    * persisted frame comes back in the third slot — the CALLER owns its
+    * release on both the happy and error paths (a throw inside the cut
+    * releases it here). Returns (frame, rowCount, persistedOrNull). */
+  private def boundedCut(df: DataFrame,
+                         local: Option[Boolean]): (DataFrame, Long, DataFrame) = {
     def localized(rows: Array[org.apache.spark.sql.Row]) =
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), df.schema)
-    if (isDriverLocal(df)) {
-      val rows = df.collect()
-      (localized(rows), rows.length.toLong, null)
-    } else {
+      (df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        df.schema), rows.length.toLong, null)
+    if (local.getOrElse(isDriverLocal(df))) localized(df.collect())
+    else {
       val m = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = try m.count()
-        catch { case t: Throwable => m.unpersist(blocking = false); throw t }
-      if (n <= MaxBroadcastCandRows) {
-        val rows = try m.collect()
-          catch { case t: Throwable => m.unpersist(blocking = false); throw t }
-        m.unpersist(): Unit
-        (localized(rows), n, null)
-      } else (m, n, m)
+      try {
+        val n = m.count()
+        if (local.isEmpty && n <= MaxBroadcastCandRows) {
+          val rows = m.collect()
+          m.unpersist(): Unit
+          localized(rows)
+        } else (m, n, m)
+      } catch { case t: Throwable => m.unpersist(blocking = false); throw t }
     }
   }
 
@@ -1640,13 +1635,12 @@ object Similarity {
     * bound |queries| × beamWidth BEFORE any job runs — never by collecting
     * first and measuring: a collect-then-check guard materializes the
     * frontier on the driver before the bound can refuse it, which is a
-    * driver OOM in exactly the regime the fallback exists for. `nQueries`
-    * is the caller's query count (all callers know it; < 0 falls back to
-    * one tiny count of the broadcast query frame); `maxLocalRows` is a
-    * test seam, defaulted to [[MaxLocalBeamRows]]. */
+    * driver OOM in exactly the regime the fallback exists for.
+    * `nQueries` is the caller's query count (its query pin measured it);
+    * `maxLocalRows` is a test seam, defaulted to [[MaxLocalBeamRows]]. */
   private[ext] def beamLoop(c: DataFrame, g: DataFrame, q: DataFrame,
                        entries: DataFrame, beamWidth: Int,
-                       hops: Int, nQueries: Long = -1L,
+                       hops: Int, nQueries: Long,
                        maxLocalRows: Long = MaxLocalBeamRows,
                        degBound: Int = -1): DataFrame = {
     // candidate streams repeat ids (the frontier unions its own neighbor
@@ -1659,10 +1653,9 @@ object Similarity {
       TopK.topKPerKeyDistinct(beamScored(c, q)(cands), "query_id", "score",
           "_gid", beamWidth)
         .select(col("query_id"), col("id").as("_gid"))
-    val nQ = if (nQueries >= 0) nQueries else q.count()
-    val localBeam = nQ <= maxLocalRows / math.max(1, beamWidth) // no overflow
+    val localBeam = nQueries <= maxLocalRows / math.max(1, beamWidth) // no overflow
     // per-hop candidate frames are ARITHMETICALLY bounded at
-    // nQ·beamWidth·(degBound+1) (the frontier plus each member's ≤
+    // nQueries·beamWidth·(degBound+1) (the frontier plus each member's ≤
     // degBound graph edges) — but the planner cannot see that through the
     // frontier ⋈ graph expansion join, estimates the union as huge, and
     // exchanges the CORPUS on _gid for every hop's scoring join (measured:
@@ -1673,7 +1666,7 @@ object Similarity {
     // only picks the join strategy.
     val hintCands: DataFrame => DataFrame =
       if (degBound > 0 && localBeam &&
-          nQ * beamWidth * (degBound + 1L) <= MaxBroadcastCandRows)
+          nQueries * beamWidth * (degBound + 1L) <= MaxBroadcastCandRows)
         broadcast
       else identity
     // (measured dead end, r14: re-hosting each cut onto a `newSession`
@@ -1682,23 +1675,10 @@ object Similarity {
     // what the saved stage-jobs bought — cuts stay on the caller's session)
     var lastCkpt: DataFrame = null // the persist-fallback cut, if any
     def cut(df: DataFrame): DataFrame = {
-      val out =
-        if (localBeam) {
-          // ≤ nQ·beamWidth ≤ maxLocalRows rows, pre-checked
-          val rows = df.collect()
-          df.sparkSession.createDataFrame(
-            java.util.Arrays.asList(rows: _*), df.schema)
-        } else {
-          val m = df
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // the materializing count is the first action on the fresh
-          // persist — release it if the job dies or it strands unread
-          try m.count(): Unit
-          catch { case t: Throwable => m.unpersist(blocking = false); throw t }
-          m
-        }
+      // localized: ≤ nQueries·beamWidth ≤ maxLocalRows rows, pre-checked
+      val (out, _, persisted) = boundedCut(df, Some(localBeam))
       if (lastCkpt ne null) lastCkpt.unpersist(): Unit
-      lastCkpt = if (localBeam) null else out
+      lastCkpt = persisted
       out
     }
     // a mid-loop throw must release the previous hop's persisted cut — the
@@ -1720,69 +1700,6 @@ object Similarity {
     }
   }
 
-  /** The shared hierarchical DESCENT ([[hnswTopK]] and
-    * [[hnswSearchPrebuilt]]): fetch each layer's (_gid, nbr_id) edge list
-    * from `layerGraphOf` — (frame, callerOwned); graphs NOT owned by the
-    * caller persist for the descent's duration and materialize together
-    * in one up-front action (see the inline note) — then beam `hops`
-    * times per level, seeding the next layer with the cut beam. Returns
-    * the final frontier (localized or persist-fallback; the CALLER owns
-    * its release). A mid-descent throw releases the in-flight frontier
-    * and the owned layer graphs before rethrowing. */
-  private def hnswDescend(cAll: DataFrame, q: DataFrame, nQ: Long,
-      maxLevel: Int, beamWidth: Int, hopsPerLevel: Int, baseHops: Int,
-      layerGraphOf: Int => (DataFrame, Boolean),
-      degBound: Int = -1, topLayerCount: Long = -1L): DataFrame = {
-    // fetch every layer's graph UP FRONT, persist the ones this descent
-    // owns, and materialize them all in ONE action: the layer builds are
-    // independent subtrees, so their stages schedule concurrently instead
-    // of serializing level by level (the base build no longer waits behind
-    // the upper layers), and no beam cut ever carries a build tree in its
-    // plan — cuts read the cache. Peak cache grows from one layer to
-    // Σ layers = (1 + 1/m + …)·base < base·m/(m−1).
-    val layers = (maxLevel to 0 by -1).map { level =>
-      val (layerG0, callerOwned) = layerGraphOf(level)
-      val layerG =
-        if (callerOwned) layerG0
-        else layerG0
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (level, layerG, callerOwned)
-    }
-    val owned = layers.collect { case (_, g, false) => g }
-    def releaseOwned(): Unit = owned.foreach(_.unpersist(): Unit)
-    var frontier: DataFrame = null
-    try {
-      if (owned.nonEmpty)
-        owned.map(_.select(col("_gid"), col("nbr_id")))
-          .reduce(_ unionByName _).count(): Unit // one parallel materialize
-      // the entry frame is nQ·topLayerCount rows of two longs — broadcast
-      // it under the same bound as the hop joins so the top layer's
-      // scoring join never exchanges the corpus slice
-      val entries0 = q.select(col("query_id"))
-        .crossJoin(cAll.where(col("_lv") >= maxLevel).select(col("_gid")))
-      var entries =
-        if (topLayerCount >= 0 && nQ * topLayerCount <= MaxBroadcastCandRows)
-          broadcast(entries0)
-        else entries0
-      for ((level, layerG, _) <- layers) {
-        val cLayer = cAll.where(col("_lv") >= level).select("_gid", "cv")
-        val hops = if (level == 0) baseHops else hopsPerLevel
-        val beam = beamLoop(cLayer, layerG, q, entries, beamWidth, hops,
-          nQueries = nQ, degBound = degBound)
-        if (frontier != null) frontier.unpersist(): Unit // no-op if localized
-        frontier = beam
-        entries = beam
-      }
-      releaseOwned()
-      frontier
-    } catch {
-      case t: Throwable =>
-        releaseOwned()
-        if (frontier != null) frontier.unpersist(): Unit
-        throw t
-    }
-  }
-
   /** Deterministic HNSW level for a node id: the largest L ≤ `maxLevel`
     * with md5-60bit(id, salt) ≡ 0 (mod m^L) — the geometric level law
     * (P[level ≥ L] = m^-L, Malkov & Yashunin 2016) in a keyed-hash form an
@@ -1799,14 +1716,69 @@ object Similarity {
     }.get.otherwise(0)
   }
 
+  /** The hierarchical family's corpus projection: (_gid, cv, _lv), the
+    * level from [[hnswLevel]]. */
+  private def leveled(vecs: DataFrame, idCol: String, vecCol: String,
+                      m: Int, maxLevel: Int, salt: String): DataFrame =
+    vecs.select(col(idCol).as("_gid"), asDouble(col(vecCol)).as("cv"),
+      hnswLevel(col(idCol), m, maxLevel, salt).as("_lv"))
+
+  /** Per-level node counts and the fixed vector dimension of a
+    * [[leveled]] frame. */
+  private final case class LevelGeometry(counts: Map[Int, Long], dim: Int) {
+    def nAtLeast(level: Int): Long =
+      counts.collect { case (l, n) if l >= level => n }.sum
+    /** Layer `level`'s bucket width: `bits`, or under [[AdaptiveBits]] the
+      * width derived from THAT layer's node count — the upper layers are
+      * m^-L of the corpus, so a width tuned to the base layer would leave
+      * them with ~2^bits near-empty buckets while a width tuned to them
+      * would make the base build bucket-quadratic. */
+    def bitsFor(level: Int, bits: Int): Int =
+      if (bits != AdaptiveBits) bits
+      else adaptiveBitsCapped(nAtLeast(level), dim) // never past the array
+  }
+
+  /** The [[LevelGeometry]] of a [[leveled]] frame from ONE tiny level
+    * histogram. With `emptyTop` given, an EMPTY top layer (tiny corpus vs
+    * m^maxLevel — every query would silently get zero results) fails fast
+    * naming the entry point `op` and the fix `emptyTop`. */
+  private def levelGeometry(c: DataFrame, m: Int, maxLevel: Int, op: String,
+                            emptyTop: String = null): LevelGeometry = {
+    val rows = c.groupBy("_lv").agg(count(lit(1)).as("n"),
+      min(size(col("cv"))).as("dlo"), max(size(col("cv"))).as("dhi")).collect()
+    val counts = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
+    require(emptyTop == null || counts.keys.exists(_ >= maxLevel),
+      s"$op: top layer (level >= $maxLevel at m=$m) is empty — $emptyTop")
+    LevelGeometry(counts, requireFixedDim(rows.toSeq.flatMap(r =>
+      Seq(2, 3).filterNot(r.isNullAt).map(r.getInt)), op))
+  }
+
+  private val EmptyTopBuild = "lower maxLevel (or m) for this corpus size"
+
+  /** Layer `level` of the hierarchical index over a persisted [[leveled]]
+    * corpus: [[knnGraph]] over the nodes of level ≥ `level` at `geo`'s
+    * width for that layer, sized from the histogram (no recount). */
+  private def hnswLayer(c: DataFrame, geo: LevelGeometry, knnK: Int,
+                        bits: Int, level: Int): DataFrame =
+    knnGraph(c.where(col("_lv") >= level), "_gid", "cv", knnK,
+      geo.bitsFor(level, bits), corpusSize = geo.nAtLeast(level))
+
   /** HIERARCHICAL graph ANN — multi-layer HNSW-style search over nested
     * kNN-graph layers, the log-scale entry descent that keeps hop counts
     * flat as the corpus grows (single-layer [[graphTopK]] needs √N entry
     * points; here the top layer IS the entry set, m^maxLevel-fold smaller
     * than the corpus, and each layer's beam seeds the next layer down).
     * Levels come from [[hnswLevel]] (deterministic, oracle-restatable);
-    * layer L's graph is [[knnGraph]] over the nodes of level ≥ L — built
-    * here per layer, upper layers costing m^-L of the base build.
+    * layer L's graph is [[knnGraph]] over the nodes of level ≥ L.
+    *
+    * This is [[hnswSearchPrebuilt]] ∘ [[hnswBuild]] in one call: the
+    * layers are built by the build's code off the search's persisted
+    * corpus (one level histogram serves both), and the descent vouches
+    * `knnK` as the graph's out-degree. A caller that already built
+    * knnGraph(vecs, idCol, vecCol, knnK, bits) — e.g. to run the flat
+    * search it is being compared against — passes it as `baseGraph`
+    * ((id, nbr_id) rows): it becomes level 0 and only the upper layers
+    * are built.
     *
     * Search: score ALL top-layer nodes per query (the top layer is
     * corpus/m^maxLevel nodes — the descent's entry cost), beam down with
@@ -1828,80 +1800,13 @@ object Similarity {
                m: Int = 8, maxLevel: Int = 2, hopsPerLevel: Int = 1,
                baseHops: Int = 2, salt: String = "hnsw",
                baseGraph: DataFrame = null,
-               scope: CacheScope = null): DataFrame = {
-    require(beamWidth >= k, s"beamWidth $beamWidth must be >= k $k")
-    require(hopsPerLevel >= 0 && baseHops >= 0,
-      s"bad hops: $hopsPerLevel/$baseHops")
-    // pin the query projection (r15, the graphTopK rationale): every
-    // beam cut of every LAYER rebuilds the query broadcast, and a query
-    // set filtered out of the corpus would re-scan it each time
-    val (qPinned, nQPinned, qPersisted) = pinSmall(
-      queries.select(col(qidCol).as("query_id"),
-        asDouble(col(qvecCol)).as("qv")))
-    val q = broadcast(qPinned)
-    val lvl = hnswLevel(col(idCol), m, maxLevel, salt)
-    // (id, vector, level) feeds every layer's candidate set, the entry
-    // cross join, and the final re-score — one corpus projection persisted
-    // for the call's duration (released with the result's first action)
-    val cAll = vecs.select(col(idCol).as("_gid"), asDouble(col(vecCol)).as("cv"),
-      lvl.as("_lv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // a throw anywhere below — including the empty-top-layer require and
-    // any mid-descent failure — must release the corpus cache (and the last
-    // persist-fallback frontier); the happy path instead hands ownership to
-    // scope/self-release at the bottom, so only the FAILURE path unpersists
-    var frontier: DataFrame = null // the last cut beam
-    try {
-    // one tiny aggregation off the persisted corpus yields every layer's
-    // node count: it feeds BOTH the empty-top-layer guard and (under
-    // AdaptiveBits) each layer's derived bucket width — the upper layers
-    // are m^-L of the corpus, so a width tuned to the base layer would
-    // leave them with ~2^bits near-empty buckets while a width tuned to
-    // them would make the base build bucket-quadratic
-    val lvlRows = cAll.groupBy("_lv")
-      .agg(count(lit(1)).as("n"), min(size(col("cv"))).as("dlo"),
-        max(size(col("cv"))).as("dhi")).collect()
-    val lvlCounts: Map[Int, Long] =
-      lvlRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val dim = requireFixedDim(lvlRows.toSeq.flatMap(r =>
-      Seq(2, 3).filterNot(r.isNullAt).map(r.getInt)), "hnswTopK")
-    def nAtLeast(level: Int): Long =
-      lvlCounts.collect { case (l, n) if l >= level => n }.sum
-    // an EMPTY top layer (tiny corpus vs m^maxLevel) would silently return
-    // zero results for every query — fail fast with the fix instead
-    require(nAtLeast(maxLevel) > 0,
-      s"hnswTopK: top layer (level >= $maxLevel at m=$m) is empty — " +
-        "lower maxLevel (or m) for this corpus size")
-    def bitsFor(level: Int): Int =
-      if (bits != AdaptiveBits) bits
-      else adaptiveBitsCapped(nAtLeast(level), dim) // never past the array
-    val nQ = nQPinned // measured by the pin — no extra job
-    frontier = hnswDescend(cAll, q, nQ, maxLevel, beamWidth, hopsPerLevel,
-      baseHops, level => {
-        // the base (level-0) graph is the dominant build cost — a caller
-        // that already built knnGraph(vecs, idCol, vecCol, knnK, bits)
-        // (e.g. to run the flat search it is being compared against)
-        // passes it via `baseGraph` ((id, nbr_id) rows) instead of paying
-        // the build twice; its caching stays the caller's
-        val callerGraph = level == 0 && baseGraph != null
-        ((if (callerGraph) baseGraph.select(col("id"), col("nbr_id"))
-          else knnGraph(cAll.where(col("_lv") >= level), "_gid", "cv",
-            knnK, bitsFor(level), // per-layer width; no recount (histogram)
-            corpusSize = nAtLeast(level))) // off the persisted corpus frame
-          .select(col("id").as("_gid"), col("nbr_id")), callerGraph)
-      }, degBound = knnK, topLayerCount = nAtLeast(maxLevel))
-    val out = TopK.topKPerKey(beamScored(cAll.select("_gid", "cv"), q)(frontier),
-        "query_id", "score", "_gid", k)
-      .toDF("query_id", "rank", "id", "score")
-    CacheScope.handOver(scope, out, frontier, cAll, qPersisted)
-    } catch {
-      case t: Throwable =>
-        cAll.unpersist(): Unit
-        if (frontier != null) frontier.unpersist(): Unit // no-op if localized
-        if (qPersisted != null) qPersisted.unpersist(): Unit
-        throw t
+               scope: CacheScope = null): DataFrame =
+    hnswSearch(vecs, idCol, vecCol, queries, qidCol, qvecCol, k, beamWidth,
+        m, maxLevel, hopsPerLevel, baseHops, salt, knnK, scope, null,
+        "hnswTopK", EmptyTopBuild) { (c, geo) => level =>
+      if (level == 0 && baseGraph != null) baseGraph
+      else hnswLayer(c, geo, knnK, bits, level)
     }
-  }
 
   /** MATERIALIZED hierarchical ANN index: one frame of
     * (level, id, rank, nbr_id, score) rows — layer L's [[knnGraph]] over
@@ -1910,49 +1815,33 @@ object Similarity {
     * aggregation decides all of them). This is the index [[hnswTopK]]
     * builds transiently, persisted AS DATA: write it to parquet and the
     * hierarchy outlives the session — searchable
-    * ([[hnswSearchPrebuilt]], bit-identical to the fused operator) and
+    * ([[hnswSearchPrebuilt]]; search ∘ build is exactly [[hnswTopK]]) and
     * appendable ([[hnswAppend]]), completing graph ANN's index-
     * maintenance story (build once, serve + ingest forever) the way
     * [[centroidArray]]/[[ivfAssign]] already complete IVF's. */
   def hnswBuild(vecs: DataFrame, idCol: String, vecCol: String,
                 knnK: Int, bits: Int, m: Int = 8, maxLevel: Int = 2,
                 salt: String = "hnsw"): DataFrame = {
-    require(maxLevel >= 1, s"maxLevel must be >= 1: $maxLevel")
-    val c = vecs.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"),
-      hnswLevel(col(idCol), m, maxLevel, salt).as("_lv"))
+    val c = leveled(vecs, idCol, vecCol, m, maxLevel, salt)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val lvlRows = c.groupBy("_lv")
-        .agg(count(lit(1)).as("n"), min(size(col("v"))).as("dlo"),
-          max(size(col("v"))).as("dhi")).collect()
-      val lvlCounts: Map[Int, Long] =
-        lvlRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val dim = requireFixedDim(lvlRows.toSeq.flatMap(r =>
-        Seq(2, 3).filterNot(r.isNullAt).map(r.getInt)), "hnswBuild")
-      def nAtLeast(level: Int): Long =
-        lvlCounts.collect { case (l, n) if l >= level => n }.sum
-      require(nAtLeast(maxLevel) > 0,
-        s"hnswBuild: top layer (level >= $maxLevel at m=$m) is empty — " +
-          "lower maxLevel (or m) for this corpus size")
-      def bitsFor(level: Int): Int =
-        if (bits != AdaptiveBits) bits
-        else adaptiveBitsCapped(nAtLeast(level), dim)
-      val out = (0 to maxLevel).map { l =>
-        knnGraph(c.where(col("_lv") >= l), "id", "v", knnK, bitsFor(l),
-            corpusSize = nAtLeast(l))
-          .select(lit(l).as("level"), col("id"), col("rank"),
-            col("nbr_id"), col("score"))
-      }.reduce(_ unionByName _)
+      val geo = levelGeometry(c, m, maxLevel, "hnswBuild", EmptyTopBuild)
+      val out = (0 to maxLevel).map(l => hnswLayer(c, geo, knnK, bits, l)
+          .select(lit(l).as("level"), col("id"), col("rank"), col("nbr_id"),
+            col("score")))
+        .reduce(_ unionByName _)
       CacheScope.handOver(null, out, c)
     } catch { case t: Throwable => c.unpersist(): Unit; throw t }
   }
 
-  /** Descent over a PREBUILT [[hnswBuild]] index — byte-identical results
-    * to [[hnswTopK]] on the same corpus/parameters (spec-pinned law:
-    * search ∘ build ≡ the fused operator), but the dominant build cost is
-    * paid once and amortized across every query batch. Same beam
-    * mechanics, same per-layer persist hygiene, same failure-path
-    * releases. */
+  /** Descent over a PREBUILT [[hnswBuild]] index: the dominant build cost
+    * is paid once and amortized across every query batch, and
+    * search ∘ build returns exactly [[hnswTopK]]'s rows on the same
+    * corpus/parameters (spec-pinned law) — [[hnswTopK]] is this descent
+    * over layers it builds itself. `degBound` vouches for the index's
+    * out-degree (its knnK); without it, one max(rank) scan of the index
+    * measures it. `exclude` (one id column) bans ids from every RESULT
+    * while their nodes keep routing the descent. */
   def hnswSearchPrebuilt(vecs: DataFrame, idCol: String, vecCol: String,
                          index: DataFrame, queries: DataFrame,
                          qidCol: String, qvecCol: String,
@@ -1961,7 +1850,36 @@ object Similarity {
                          baseHops: Int = 2, salt: String = "hnsw",
                          degBound: Int = -1,
                          scope: CacheScope = null,
-                         exclude: DataFrame = null): DataFrame = {
+                         exclude: DataFrame = null): DataFrame =
+    hnswSearch(vecs, idCol, vecCol, queries, qidCol, qvecCol, k, beamWidth,
+        m, maxLevel, hopsPerLevel, baseHops, salt,
+        if (degBound > 0) degBound
+        else index.agg(max(col("rank"))).head() match {
+          case r if r.isNullAt(0) => -1 // empty index: no bound to vouch
+          case r => r.getInt(0)
+        },
+        scope, exclude, "hnswSearchPrebuilt",
+        "index and search params must agree") { (_, _) => level =>
+      index.where(col("level") === level)
+    }
+
+  /** The one hierarchical DESCENT ([[hnswSearchPrebuilt]], and through it
+    * [[hnswTopK]]): pin the queries, persist the [[leveled]] corpus, take
+    * its [[LevelGeometry]], get each layer's (id, nbr_id, …) graph from
+    * `layersOf` (which may build it off that corpus and geometry), then
+    * beam `hopsPerLevel` times per upper layer and `baseHops` times in the
+    * base, each layer seeded by the cut beam above it; the top `k` of the
+    * final beam, minus `exclude`, is the answer. `degBound` (by name,
+    * evaluated after the level histogram) vouches for the graphs'
+    * out-degree. A throw releases everything this call persisted; the
+    * happy path hands the corpus, the query pin and the final frontier to
+    * `scope`/self-release. */
+  private def hnswSearch(vecs: DataFrame, idCol: String, vecCol: String,
+      queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
+      beamWidth: Int, m: Int, maxLevel: Int, hopsPerLevel: Int,
+      baseHops: Int, salt: String, degBound: => Int, scope: CacheScope,
+      exclude: DataFrame, op: String, emptyTop: String)(
+      layersOf: (DataFrame, LevelGeometry) => Int => DataFrame): DataFrame = {
     require(beamWidth >= k, s"beamWidth $beamWidth must be >= k $k")
     require(exclude == null || exclude.columns.length == 1,
       "exclude must be a ONE-column frame of result-banned ids, got " +
@@ -1970,44 +1888,56 @@ object Similarity {
       s"bad hops: $hopsPerLevel/$baseHops")
     // pin the query projection (r15, the graphTopK rationale): the
     // descent rebuilds the query broadcast once per beam cut per layer
-    val (qPinned, nQPinned, qPersisted) = pinSmall(
+    val (qPinned, nQ, qPersisted) = boundedCut(
       queries.select(col(qidCol).as("query_id"),
-        asDouble(col(qvecCol)).as("qv")))
+        asDouble(col(qvecCol)).as("qv")), None)
     val q = broadcast(qPinned)
-    val cAll = vecs.select(col(idCol).as("_gid"),
-      asDouble(col(vecCol)).as("cv"),
-      hnswLevel(col(idCol), m, maxLevel, salt).as("_lv"))
+    // (id, vector, level) feeds every layer's candidate set (and any layer
+    // build), the entry cross join and the final re-score — one corpus
+    // projection persisted for the call's duration
+    val cAll = leveled(vecs, idCol, vecCol, m, maxLevel, salt)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var frontier: DataFrame = null
+    var layers = Seq.empty[DataFrame]
+    var frontier: DataFrame = null // the last cut beam
     try {
-      // one histogram off the persisted corpus replaces the limit(1)
-      // emptiness probe AND supplies the top-layer count for the entry
-      // broadcast; the index's max rank bounds the graph's out-degree, so
-      // the descent's hop joins broadcast their candidate frames exactly
-      // like the fused operator's (results are identical either way — the
-      // search∘build law is about values, the bounds only pick joins)
-      val lvlCounts: Map[Int, Long] = cAll.groupBy("_lv").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      def nAtLeast(level: Int): Long =
-        lvlCounts.collect { case (l, n) if l >= level => n }.sum
-      require(nAtLeast(maxLevel) > 0,
-        s"hnswSearchPrebuilt: top layer (level >= $maxLevel at m=$m) is " +
-          "empty — index and search params must agree")
-      // a serving loop calls this per query batch — let it pass the known
-      // knnK once instead of paying a full index scan per call; the
-      // measured max(rank) stays the fallback for callers that don't
-      val deg =
-        if (degBound > 0) degBound
-        else index.agg(max(col("rank"))).head() match {
-          case r if r.isNullAt(0) => -1 // empty index: no bound to vouch
-          case r => r.getInt(0)
-        }
-      val nQ = nQPinned // measured by the pin — no extra job
-      frontier = hnswDescend(cAll, q, nQ, maxLevel, beamWidth,
-        hopsPerLevel, baseHops, level =>
-          (index.where(col("level") === level)
-            .select(col("id").as("_gid"), col("nbr_id")), false),
-        degBound = deg, topLayerCount = nAtLeast(maxLevel))
+      // one histogram off the persisted corpus: the empty-top-layer guard,
+      // the top-layer count for the entry broadcast, any build's widths
+      val geo = levelGeometry(cAll, m, maxLevel, op, emptyTop)
+      // the out-degree bound lets the hop joins broadcast their candidate
+      // frames (results are identical either way — it only picks joins); a
+      // serving loop passes the known knnK instead of a scan per call
+      val deg = degBound
+      // fetch every layer's graph UP FRONT, persist them, and materialize
+      // them all in ONE action: the layers are independent subtrees, so
+      // their stages schedule concurrently instead of serializing level by
+      // level, and no beam cut ever carries a build tree in its plan —
+      // cuts read the cache. Peak cache is Σ layers < base·m/(m−1). A
+      // driver-resident layer (a caller's collected base graph) is
+      // already materialized and is read as it is.
+      val layerOf = layersOf(cAll, geo)
+      val layerGs = (maxLevel to 0 by -1).map(l =>
+        layerOf(l).select(col("id").as("_gid"), col("nbr_id")))
+      layers = layerGs.filterNot(isDriverLocal)
+        .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      if (layers.nonEmpty) layers.reduce(_ unionByName _).count(): Unit
+      // the entry frame is nQ·|top layer| rows of two longs — broadcast it
+      // under the same bound as the hop joins so the top layer's scoring
+      // join never exchanges the corpus slice
+      val entries0 = q.select(col("query_id"))
+        .crossJoin(cAll.where(col("_lv") >= maxLevel).select(col("_gid")))
+      var entries =
+        if (nQ * geo.nAtLeast(maxLevel) <= MaxBroadcastCandRows)
+          broadcast(entries0)
+        else entries0
+      for ((layerG, level) <- layerGs.zip(maxLevel to 0 by -1)) {
+        val beam = beamLoop(cAll.where(col("_lv") >= level).select("_gid", "cv"),
+          layerG, q, entries, beamWidth,
+          if (level == 0) baseHops else hopsPerLevel, nQ, degBound = deg)
+        if (frontier != null) frontier.unpersist(): Unit // no-op if localized
+        frontier = beam
+        entries = beam
+      }
+      layers.foreach(_.unpersist(): Unit)
       // tombstone exclusion lands on the CANDIDATE set, before the top-k
       // cut — excluded nodes still ROUTED the descent (their edges carried
       // the beam), they just cannot surface, and survivors backfill the k
@@ -2025,6 +1955,7 @@ object Similarity {
       CacheScope.handOver(scope, out, frontier, cAll, qPersisted)
     } catch {
       case t: Throwable =>
+        layers.foreach(_.unpersist(): Unit)
         cAll.unpersist(): Unit
         if (frontier != null) frontier.unpersist(): Unit
         if (qPersisted != null) qPersisted.unpersist(): Unit
@@ -2032,16 +1963,6 @@ object Similarity {
     }
   }
 
-  /** Incremental append for the HIERARCHICAL index: [[knnGraphAppend]]
-    * applied per layer — each new vector joins every layer its
-    * [[hnswLevel]] admits it to (search-based insertion against that
-    * layer's old nodes + the batch's own per-layer bucketed graph),
-    * old nodes patch reciprocally, untouched edges pass through
-    * byte-identical. Batch widths derive per layer from the batch's OWN
-    * level histogram under [[AdaptiveBits]]. Returns the appended index
-    * in [[hnswBuild]]'s shape. Old and new id sets must be disjoint;
-    * `index` must be an [[hnswBuild]]-shaped frame over `oldVecs` with
-    * the same (m, maxLevel, salt). */
   /** Persist an [[hnswBuild]] index with its geometry sidecar
     * ([[StoreMeta]]): the frame's rows carry no trace of (m, maxLevel,
     * salt) — the level-assignment law — so a prebuilt descent with
@@ -2187,6 +2108,16 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
   }
 
+  /** Incremental append for the HIERARCHICAL index: [[knnGraphAppend]]
+    * applied per layer — each new vector joins every layer its
+    * [[hnswLevel]] admits it to (search-based insertion against that
+    * layer's old nodes + the batch's own per-layer bucketed graph),
+    * old nodes patch reciprocally, untouched edges pass through
+    * byte-identical. Batch widths derive per layer from the batch's OWN
+    * level histogram under [[AdaptiveBits]]. Returns the appended index
+    * in [[hnswBuild]]'s shape. Old and new id sets must be disjoint;
+    * `index` must be an [[hnswBuild]]-shaped frame over `oldVecs` with
+    * the same (m, maxLevel, salt). */
   def hnswAppend(oldVecs: DataFrame, index: DataFrame, newVecs: DataFrame,
                  idCol: String, vecCol: String, knnK: Int, bits: Int,
                  beamWidth: Int, hops: Int, m: Int = 8, maxLevel: Int = 2,
@@ -2201,23 +2132,12 @@ object Similarity {
     // persist/count jobs). Falls back to the raw frame past the bound;
     // knnGraphAppend's own persist path then bounds each level.
     val (batchPinned, _, batchPersisted) =
-      pinSmall(newVecs.select(col(idCol), col(vecCol)))
+      boundedCut(newVecs.select(col(idCol), col(vecCol)), None)
     try {
-    val newLvl = hnswLevel(col(idCol), m, maxLevel, salt)
-    val newRows = batchPinned.select(newLvl.as("_lv"),
-        size(asDouble(col(vecCol))).as("_d"))
-      .groupBy("_lv").agg(count(lit(1)).as("n"), min(col("_d")).as("dlo"),
-        max(col("_d")).as("dhi"))
-      .collect()
-    val newCounts: Map[Int, Long] =
-      newRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val dim = requireFixedDim(newRows.toSeq.flatMap(r =>
-      Seq(2, 3).filterNot(r.isNullAt).map(r.getInt)), "hnswAppend")
-    def newAtLeast(level: Int): Long =
-      newCounts.collect { case (l, n) if l >= level => n }.sum
-    def batchBitsFor(level: Int): Int =
-      if (bits != AdaptiveBits) bits
-      else adaptiveBitsCapped(newAtLeast(level), dim)
+    // the batch's OWN level histogram; an empty batch top layer is fine
+    val geo = levelGeometry(
+      leveled(batchPinned, idCol, vecCol, m, maxLevel, salt), m, maxLevel,
+      "hnswAppend")
     val out = (0 to maxLevel).map { l =>
       val lvl = hnswLevel(col(idCol), m, maxLevel, salt)
       val o = oldVecs.where(lvl >= l)
@@ -2225,7 +2145,7 @@ object Similarity {
       val g = index.where(col("level") === l)
         .select(col("id"), col("rank"), col("nbr_id"), col("score"))
       knnGraphAppend(o, g, nu, idCol, vecCol, knnK, beamWidth, hops,
-          entryMod, batchBits = batchBitsFor(l),
+          entryMod, batchBits = geo.bitsFor(l, bits),
           graphDegBound = indexDegBound)
         .select(lit(l).as("level"), col("id"), col("rank"),
           col("nbr_id"), col("score"))

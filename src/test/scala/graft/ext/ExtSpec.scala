@@ -1782,8 +1782,8 @@ class ExtSpec extends SparkSpec {
       "knnGraphAppend; the appended index serves") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = emb.where(col("vec_id") < 5)
-    // LAW 1: the materialized index searched == the fused operator,
-    // row-for-row (same layer graphs, same descent)
+    // LAW 1: the materialized index searched == hnswTopK, row-for-row
+    // (same layer graphs, same descent)
     val idx = Similarity.hnswBuild(emb, "vec_id", "embedding", knnK = 5,
       bits = Similarity.AdaptiveBits)
     val viaIndex = Similarity.hnswSearchPrebuilt(emb, "vec_id", "embedding",
@@ -1796,6 +1796,19 @@ class ExtSpec extends SparkSpec {
       .collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(viaIndex === fused)
+    // LAW 1b: a caller's knnGraph passed as `baseGraph` becomes level 0
+    // in place of the built one — same adaptive width (both derive it from
+    // the corpus size), so the same rows
+    val g0 = Similarity.knnGraph(emb, "vec_id", "embedding", k = 5,
+        bits = Similarity.AdaptiveBits)
+      .select(col("id"), col("nbr_id"))
+    val withBase = Similarity.hnswTopK(emb, "vec_id", "embedding", q,
+        "vec_id", "embedding", k = 10, beamWidth = 16, knnK = 5,
+        bits = Similarity.AdaptiveBits, baseGraph = g0)
+      .collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(fused.size === 50)
+    assert(withBase === fused)
     // LAW 2: hnswAppend is exactly per-layer knnGraphAppend with the
     // batch's own per-layer adaptive widths
     val old = emb.where(col("vec_id") < 300)

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Spark-job budgets for hot paths on fixture-sized inputs. Wall time moves
@@ -162,6 +163,62 @@ class JobBudgetSpec extends SparkSpec {
     val dir = tombstonedIndex("job-budget-hnsw-rebuild")
     assert(jobsOf(assert(Similarity.hnswRebuildAt(spark, dir, vecs, "vec_id",
       "embedding") === 2L)) <= 15)
+  }
+
+  /** A frame's rows as a local relation, so a budget counts only the
+    * jobs of the call under test, not the fixture's. */
+  private def local(df: DataFrame): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  private lazy val annQueries = vecs.where(col("vec_id") < 3)
+    .select(col("vec_id").as("query_id"), col("embedding"))
+  private lazy val vecGraph = local(Similarity.knnGraph(vecs, "vec_id",
+    "embedding", k = 4, bits = 2).select(col("id"), col("nbr_id")))
+  private lazy val oldVecs = vecs.where(col("vec_id") < 18)
+  private lazy val newVecs = vecs.where(col("vec_id") >= 18)
+
+  private def hnswTopKJobs(baseGraph: DataFrame): Int =
+    jobsOf(assert(Similarity.hnswTopK(vecs, "vec_id", "embedding",
+      annQueries, "query_id", "embedding", k = 3, beamWidth = 6, knnK = 4,
+      bits = 2, m = 4, maxLevel = 1, baseGraph = baseGraph)
+      .collect().nonEmpty))
+
+  test("graphTopK of 3 queries over a 24-vector graph: at most 19 jobs") {
+    assert(jobsOf(assert(Similarity.graphTopK(vecs, "vec_id", "embedding",
+      vecGraph, annQueries, "query_id", "embedding", k = 3, beamWidth = 6,
+      hops = 1, entryMod = 4).collect().nonEmpty)) <= 19)
+  }
+
+  test("hnswTopK of 3 queries over 24 vectors: at most 39 jobs") {
+    assert(hnswTopKJobs(baseGraph = null) <= 39)
+  }
+
+  test("hnswTopK with a caller's base graph: at most 36 jobs") {
+    assert(hnswTopKJobs(baseGraph = vecGraph) <= 36)
+  }
+
+  test("hnswSearchPrebuilt of 3 queries over a 24-vector index: at most 37 jobs") {
+    val index = local(Similarity.hnswBuild(vecs, "vec_id", "embedding",
+      knnK = 4, bits = 2, m = 4, maxLevel = 1))
+    assert(jobsOf(assert(Similarity.hnswSearchPrebuilt(vecs, "vec_id",
+      "embedding", index, annQueries, "query_id", "embedding", k = 3,
+      beamWidth = 6, m = 4, maxLevel = 1).collect().nonEmpty)) <= 37)
+  }
+
+  test("knnGraphAppend of 6 vectors to an 18-vector graph: at most 27 jobs") {
+    val graph = local(Similarity.knnGraph(oldVecs, "vec_id", "embedding",
+      k = 4, bits = 2))
+    assert(jobsOf(assert(Similarity.knnGraphAppend(oldVecs, graph, newVecs,
+      "vec_id", "embedding", k = 4, beamWidth = 6, hops = 1, entryMod = 1)
+      .collect().nonEmpty)) <= 27)
+  }
+
+  test("hnswAppend of 6 vectors to an 18-vector index: at most 51 jobs") {
+    val index = local(Similarity.hnswBuild(oldVecs, "vec_id", "embedding",
+      knnK = 4, bits = 2, m = 4, maxLevel = 1))
+    assert(jobsOf(assert(Similarity.hnswAppend(oldVecs, index, newVecs,
+      "vec_id", "embedding", knnK = 4, bits = 2, beamWidth = 6, hops = 1,
+      m = 4, maxLevel = 1, entryMod = 1).collect().nonEmpty)) <= 51)
   }
 
   test("Curation.curate on a 30-doc corpus: at most 17 jobs") {
